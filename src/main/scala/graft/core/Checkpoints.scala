@@ -1,6 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Lineage truncation for iterative operators (connected components,
   * PageRank, k-means, BPE training, pipeline stage frames).
@@ -97,16 +98,38 @@ object Checkpoints {
     // stringifying the plan) and turns per-round driver collects into
     // full-chain recomputes. The end-to-end lint walk stays sound AND
     // terminates.
+    useLoopDir(s)
+    val cached = df.persist()
+    val out = cached.checkpoint()
+    cached.unpersist(false)
+    out
+  }
+
+  /** RDD form of [[stableLoop]], for loops written over pair RDDs:
+    * persists `rdd` and marks it for a reliable checkpoint under the
+    * same directory. Spark writes the files after the first action on
+    * `rdd` (reading the cached partitions, not recomputing them) and
+    * then cuts its lineage, so the caller must run one action on it
+    * before the cut takes effect. The cache stays: a later miss reads
+    * the checkpoint files instead of replaying the loop.
+    */
+  def stableLoop[T](rdd: RDD[T], s: SparkSession): RDD[T] = {
+    useLoopDir(s)
+    rdd.persist().checkpoint()
+    rdd
+  }
+
+  /** Point the context at the in-loop checkpoint root:
+    * `spark.graft.loopCheckpointDir`, then `spark.graft.checkpointDir`,
+    * then a per-application tmp dir.
+    */
+  private def useLoopDir(s: SparkSession): Unit = {
     val dir = s.conf.getOption("spark.graft.loopCheckpointDir")
       .orElse(s.conf.getOption("spark.graft.checkpointDir"))
       .getOrElse(s"${System.getProperty("java.io.tmpdir")}/graft_ckpt_" +
         s.sparkContext.applicationId)
     if (!s.sparkContext.getCheckpointDir.exists(_.startsWith(dir)))
       s.sparkContext.setCheckpointDir(dir)
-    val cached = df.persist()
-    val out = cached.checkpoint()
-    cached.unpersist(false)
-    out
   }
 
   /** Free the storage behind a frame produced by [[stable]] (or a

@@ -1,9 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.Tables
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.core.{Checkpoints, Tables}
 import graft.core.Checkpoints.StableOps
 
 /** Duplicate-cluster formation ([EXT] — SURVEY.md §0): candidate-pair
@@ -13,16 +16,21 @@ import graft.core.Checkpoints.StableOps
   * connected components over the similarity graph.
   *
   * Scale design: min-label propagation — per round, every node adopts
-  * the smallest label among itself and its neighbors. Each round is one
-  * key-partitioned join + partial-agg'd min (linear in |E|, map-side
-  * combined), and the round count is the graph diameter. Near-dup
-  * graphs are unions of small dense cliques (diameter ≈ 2-4), so at
-  * 100 TB this runs a handful of linear shuffles; the edge list is the
-  * MinHash candidate set (∝ true dups), never n². Lineage is truncated
-  * every round ([[graft.core.Checkpoints.stable]]) so plans stay O(1)
-  * deep — executor-local by default, reliable `checkpoint()` when
-  * `spark.graft.checkpointDir` points at durable shared storage (the
-  * executor-loss recovery story; see Checkpoints).
+  * the smallest label among itself and its neighbors — run as an RDD
+  * fixpoint. The symmetrized adjacency is built once, hash-partitioned
+  * by node and persisted; each round zips the (co-partitioned) label
+  * table against it, shuffles one map-side-combined min per node
+  * (linear in |E|), and counts the labels that changed: one Spark job
+  * per round, with no query planning inside the loop. The round count
+  * is the graph diameter + 1; near-dup graphs are unions of small
+  * dense cliques (diameter ≈ 2-4), so at 100 TB this runs a handful of
+  * linear shuffles; the edge list is the MinHash candidate set (∝ true
+  * dups), never n². Every 4th round is a reliable checkpoint
+  * ([[graft.core.Checkpoints.stableLoop]]; `spark.graft.checkpointDir`
+  * points it at durable shared storage — the executor-loss recovery
+  * story) so deep graphs keep a bounded lineage. Cluster sizes are
+  * fused onto the converged labels with one co-partitioned count, and
+  * the result is a frame over a single ExistingRDD leaf.
   *
   * Spark 4's recursive CTE (see Advanced.recursiveCte) could express
   * the closure too, but it materializes reachable-PAIR state — O(k²)
@@ -32,77 +40,72 @@ import graft.core.Checkpoints.StableOps
 object Cluster {
 
   /** Connected components of an undirected graph. Input: first two
-    * columns of `edges` are the (src, dst) endpoint ids (integral).
-    * Output: (node, cluster_id) — one row per node incident to at
-    * least one edge, cluster_id = min node id in the component
-    * (deterministic, partition-layout-independent).
+    * columns of `edges` are the (src, dst) endpoint ids (integral;
+    * rows with a null endpoint are dropped). Output: (node,
+    * cluster_id) — one row per node incident to at least one edge,
+    * cluster_id = min node id in the component (deterministic,
+    * partition-layout-independent) — as a frame over the converged
+    * label RDD of [[componentLabels]].
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val Seq(sc0, dc0) = edges.columns.take(2).toSeq
-    val e = edges.select(col(sc0).cast("long").as("src"), col(dc0).cast("long").as("dst"))
-    // Symmetrize once; pre-partition on src so every propagation round
-    // reuses this layout and only the (much smaller) label table moves.
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .repartition(col("src"))
+  def connectedComponents(edges: DataFrame): DataFrame =
+    edges.sparkSession.createDataFrame(
+      componentLabels(edges).map { case (n, l) => Row(n, l) },
+      StructType(Seq(StructField("node", LongType, nullable = false),
+        StructField("cluster_id", LongType, nullable = false))))
+
+  /** Min-label propagation run to its fixpoint over pair RDDs: the
+    * converged (node, min node id of its component) table,
+    * hash-partitioned by node. Labels strictly decrease until they
+    * settle, so the loop ends within diameter + 1 rounds; each round
+    * is one Spark job (zip against the adjacency, map-side-combined
+    * min shuffle, count of the labels that changed). Every 4th round
+    * is a reliable checkpoint ([[Checkpoints.stableLoop]]) so the
+    * lineage of a deep graph stays bounded. Each generation is freed
+    * once its successor is materialized: the successor recomputes from
+    * its own shuffle output, never through the freed generation.
+    */
+  private def componentLabels(edges: DataFrame): RDD[(Long, Long)] = {
+    val s = edges.sparkSession
+    val part = new HashPartitioner(s.conf.get("spark.sql.shuffle.partitions").toInt)
+    val Seq(c0, c1) = edges.columns.take(2).toSeq
+    // Symmetrize once into a node-partitioned adjacency list; every
+    // round zips the label table against it in place, so only the
+    // per-neighbor label messages shuffle.
+    val adj = edges.select(col(c0).cast("long"), col(c1).cast("long")).na.drop().rdd
+      .flatMap { r => val (a, b) = (r.getLong(0), r.getLong(1)); Iterator((a, b), (b, a)) }
+      .groupByKey(part)
+      .mapValues(_.toArray.distinct)
       .persist()
-    // Seed labels with min(self, neighbors) — the result round 1 would
-    // produce from identity labels, for the price of the node-distinct
-    // aggregation we'd run anyway. Every label-prop round after this is
-    // a full |E| join pass, so starting one round ahead saves a whole
-    // shuffle of the edge list at scale (diameter-2 near-dup graphs
-    // then typically converge in a single confirming round).
-    var labels = sym.groupBy("src").agg(min("dst").as("nbr"))
-      .select(col("src").as("node"), least(col("src"), col("nbr")).as("label"))
-      .persist()
-    // Labels only ever decrease, so sum(label) strictly decreases until
-    // the fixpoint — a single cheap agg per round detects convergence
-    // (decimal(38) so the metric can't overflow at any node-id scale).
-    // Because the metric scans the freshly-persisted frame, ONE action
-    // per round both materializes the new labels and checks convergence
-    // (the old two-actions-per-round shape — eager checkpoint, then
-    // metric — doubled the driver-side job count for nothing).
-    def metric(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("label").cast("decimal(38,0)")),
-        lit(0).cast("decimal(38,0)"))).head().getDecimal(0)
-    var last = metric(labels)
-    var it = 0
-    var done = false
-    val retired = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    while (!done && it < maxIter) {
-      val nbrMin = sym
-        .join(labels.withColumnRenamed("node", "src"), "src")
-        .groupBy("dst").agg(min("label").as("nbr"))
-        .withColumnRenamed("dst", "node")
-      var next = labels.join(nbrMin, Seq("node"), "left")
-        .select(col("node"),
-          least(col("label"), coalesce(col("nbr"), col("label"))).as("label"))
-      // Lineage truncation only every 4th round: persist() bounds the
-      // per-round WORK to one |E| pass, and the periodic checkpoint
-      // bounds the PLAN depth for deep (high-diameter) graphs without
-      // paying an extra materialization job in the common 1-2 round
-      // near-dup case. Tradeoff: if a persisted intermediate generation
-      // is EVICTED, its recompute chains back through up to 4 |E| joins
-      // to the last checkpoint — bounded by the stride, never unbounded.
-      val isCkpt = it % 4 == 3
-      next = if (isCkpt) next.stableLoop else next.persist()
-      val cur = metric(next)
-      done = cur.compareTo(last) == 0
-      last = cur
-      retired += labels
-      // A checkpointed `next` has a truncated plan that references no
-      // earlier generation, so every retired generation is safe to free
-      // right here rather than holding up to maxIter cached label
-      // tables until loop exit. (Between checkpoints they must stay:
-      // `next` may still recompute through a persisted parent.)
-      if (isCkpt) { retired.foreach(_.unpersist(false)); retired.clear() }
-      labels = next
-      it += 1
+    // Seed with min(self, neighbors) — the result round 1 would produce
+    // from identity labels, narrow over the adjacency, so clique-shaped
+    // near-dup graphs converge in the first (confirming) round.
+    var labels: RDD[(Long, Long)] = adj.mapPartitions(
+      _.map { case (u, ns) => (u, math.min(u, ns.min)) }, preservesPartitioning = true)
+    var prev: Option[RDD[(Long, (Long, Long))]] = None
+    var round = 0
+    var changed = 1L
+    while (changed > 0) {
+      round += 1
+      // Value = (new label, old label): each node also messages itself
+      // its current label in the second slot, so the change count needs
+      // no join against the previous generation.
+      val step = adj.zipPartitions(labels) { (as, ls) =>
+        val own = new scala.collection.mutable.LongMap[Long]
+        ls.foreach { case (u, l) => own(u) = l }
+        as.flatMap { case (u, ns) =>
+          val l = own(u)
+          Iterator.single((u, (l, l))) ++ ns.iterator.map(v => (v, (l, Long.MaxValue)))
+        }
+      }.reduceByKey(part, (a, b) => (math.min(a._1, b._1), math.min(a._2, b._2)))
+      if (round % 4 == 0) Checkpoints.stableLoop(step, s) else step.persist()
+      changed = step.filter { case (_, (l, old)) => l < old }.count()
+      prev.foreach(_.unpersist(false))
+      prev = Some(step)
+      labels = step.mapValues(_._1)
     }
-    // Free the post-checkpoint tail (and, for short runs, everything).
-    retired.foreach(_.unpersist(false))
-    sym.unpersist(false)
-    labels.withColumnRenamed("label", "cluster_id")
+    prev.foreach(_.unpersist(false))
+    adj.unpersist(false)
+    labels
   }
 
   /** Connected components by alternating large-star / small-star
@@ -181,22 +184,22 @@ object Cluster {
   }
 
   /** (doc_id, cluster_id, n_docs) from a (doc_a, doc_b) edge list —
-    * the shared CC + cluster-size tail of both dedup-cluster variants.
+    * the shared CC + cluster-size tail of every dedup-cluster consumer.
+    * Sizes come from a reduceByKey over the converged labels, re-keyed
+    * by label once so the count and the attach-back join are both
+    * co-partitioned (narrow). The result is a frame over one
+    * ExistingRDD leaf that keeps the full RDD lineage: an evicted block
+    * costs a recompute from the last round's shuffle output, never a
+    * dead frame.
     */
   def clustersOf(edges: DataFrame): DataFrame = {
-    // .stable: cc is a loop output self-joined against its own size
-    // aggregate (the er_resolve shape, r14 §9 / r15 plan-bloat lint).
-    // connectedComponents exits persisted-only in the common 1-2
-    // round near-dup case (the stride-4 checkpoint never fires), so
-    // without the cut BOTH join inputs inline the full loop plan —
-    // dedup_keep_tfidf's executedPlan was 5,500 lines and every
-    // family member re-planned the chain twice. One |V|-row
-    // localCheckpoint truncates both references.
-    import graft.core.Checkpoints.StableOps
-    val cc = connectedComponents(edges).stable
-    val sizes = cc.groupBy("cluster_id").agg(count(lit(1)).as("n_docs"))
-    cc.join(sizes, "cluster_id")
-      .select(col("node").as("doc_id"), col("cluster_id"), col("n_docs"))
+    val labels = componentLabels(edges)
+    val byLabel = labels.map(_.swap).partitionBy(labels.partitioner.get)
+    val sizes = byLabel.mapValues(_ => 1L).reduceByKey(_ + _)
+    edges.sparkSession.createDataFrame(
+      byLabel.join(sizes).map { case (cid, (node, n)) => Row(node, cid, n) },
+      StructType(Seq("doc_id", "cluster_id", "n_docs")
+        .map(StructField(_, LongType, nullable = false))))
   }
 
   /** Near-duplicate clusters on `documents`: edges = doc pairs with
@@ -395,14 +398,13 @@ object Cluster {
     * power method with damping and full dangling-node handling
     * (rank mass of out-degree-0 nodes redistributes uniformly).
     *
-    * Scale shape mirrors [[connectedComponents]]: the out-degree-
-    * annotated edge list is partitioned on src once and persisted —
-    * every iteration is one |E| join against the (|V|-row) rank table,
-    * a partial-agg'd groupBy on dst, and one tiny dangling-mass agg;
-    * persist + stride-4 checkpoint bound plan depth, retired
-    * generations are freed eagerly. No driver-side structure ever
-    * holds |V| or |E| rows — only the scalar dangling mass crosses to
-    * the driver each round.
+    * Scale shape: the out-degree-annotated edge list is partitioned on
+    * src once and persisted — every iteration is one |E| join against
+    * the (|V|-row) rank table, a partial-agg'd groupBy on dst, and one
+    * tiny dangling-mass agg; persist + stride-4 checkpoint bound plan
+    * depth, retired generations are freed eagerly. No driver-side
+    * structure ever holds |V| or |E| rows — only the scalar dangling
+    * mass crosses to the driver each round.
     */
   def pagerankOf(edges: DataFrame, iters: Int = 10, damping: Double = 0.85): DataFrame = {
     val Seq(sc0, dc0) = edges.columns.take(2).toSeq

@@ -42,11 +42,16 @@ class ClusterSpec extends SparkSuite {
     assert(ccOf(edges) === unionFind(edges))
   }
 
+  private def clustersOf(edges: Seq[(Long, Long)]): Map[Long, (Long, Long)] =
+    Cluster.clustersOf(edges.toDF("doc_a", "doc_b")).collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+
   test("long path converges past many propagation rounds") {
-    // Path 0-1-2-...-40: min-label needs ~diameter rounds; all nodes -> 0.
-    val edges = (0L until 40L).map(i => (i, i + 1))
+    // Path 0-1-2-...-120: min-label needs ~diameter rounds (far past
+    // any fixed round cap); all nodes -> 0.
+    val edges = (0L until 120L).map(i => (i, i + 1))
     val got = ccOf(edges)
-    assert(got.size === 41 && got.values.forall(_ === 0L))
+    assert(got.size === 121 && got.values.forall(_ === 0L))
   }
 
   test("random graphs match union-find (ScalaCheck)") {
@@ -55,9 +60,16 @@ class ClusterSpec extends SparkSuite {
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(8),
       Prop.forAll(genEdges) { edges =>
-        edges.isEmpty || ccOf(edges) == unionFind(edges)
+        val uf = unionFind(edges)
+        val sizes = uf.values.groupBy(identity).view.mapValues(_.size.toLong).toMap
+        edges.isEmpty || (ccOf(edges) == uf &&
+          clustersOf(edges) == uf.map { case (n, c) => n -> (c, sizes(c)) })
       })
     assert(res.passed, res.status.toString)
+    // no edges -> no clusters; self-loops -> one single-node cluster each
+    assert(clustersOf(Seq.empty).isEmpty)
+    assert(clustersOf(Seq((3L, 3L), (7L, 7L), (7L, 7L))) ===
+      Map(3L -> ((3L, 1L)), 7L -> ((7L, 1L))))
   }
 
   test("logStar variant: cliques, cycles, pairs, self-loop-only input") {
@@ -356,17 +368,28 @@ class ClusterSpec extends SparkSuite {
   test("spark.graft.checkpointDir switches lineage truncation to reliable checkpoint()") {
     // a path graph forces several contraction rounds through .stable
     val edges = (0L until 12L).map(i => (i, i + 1))
+    // checkpoint part files under a root (setCheckpointDir adds an app subdir)
+    def rddFiles(f: java.io.File): Long =
+      if (f.isDirectory) f.listFiles().map(rddFiles).sum
+      else if (f.getName.startsWith("part-")) 1L else 0L
     val base = ccStarOf(edges)
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     spark.conf.set("spark.graft.checkpointDir", dir)
     try {
       assert(ccStarOf(edges) === base) // same labels through the reliable path
       // the truncation really went through checkpoint(): files landed
-      // under the configured root (setCheckpointDir adds an app subdir)
-      def rddFiles(f: java.io.File): Long =
-        if (f.isDirectory) f.listFiles().map(rddFiles).sum
-        else if (f.getName.startsWith("part-")) 1L else 0L
+      // under the configured root
       assert(rddFiles(new java.io.File(dir)) > 0, s"no checkpoint files under $dir")
+    } finally spark.conf.unset("spark.graft.checkpointDir")
+    // label propagation checkpoints every 4th round: a 12-hop path runs
+    // 12 rounds, so its reliable cuts land under a fresh configured root
+    val ccBase = ccOf(edges)
+    assert(ccBase === unionFind(edges))
+    val ccDir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
+    spark.conf.set("spark.graft.checkpointDir", ccDir)
+    try {
+      assert(ccOf(edges) === ccBase)
+      assert(rddFiles(new java.io.File(ccDir)) > 0, s"no checkpoint files under $ccDir")
     } finally spark.conf.unset("spark.graft.checkpointDir")
   }
 

@@ -38,9 +38,9 @@ class PlanLintSpec extends SparkSuite {
     // tf-idf weighted dedup: the 1-row corpus-count frame broadcast
     // onto the capped term groups (idf needs N; O(1) side by design —
     // the simhash twin shares the chain but its .stable cut hides the
-    // BNLJ from this lint, so only the un-truncated consumers of the
-    // weighted edge producer surface it)
-    "dedup_tfidf", "dedup_keep_tfidf",
+    // BNLJ from this lint, and dedup_keep_tfidf reads the edges through
+    // the cluster table's RDD leaf, so only dedup_tfidf surfaces it)
+    "dedup_tfidf",
     // stats/threshold scalar frames (1 row) joined without keys
     "bm25_terms", "search_bm25", "tfidf_terms", "quality_filter",
     "cap_source_tokens", "mix_epochs", "curriculum_order", "shuffle_order",
