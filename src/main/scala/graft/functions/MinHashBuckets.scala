@@ -26,6 +26,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * interpreted higher-order-function formulation — at 100 TB the
   * signature pass dominates near-dedup, so it must run at memory
   * bandwidth, not at expression-interpreter speed.
+  *
+  * An empty shingle set has no MinHash signature: it maps to an empty
+  * bucket array, so documents with fewer than three words never share
+  * a band bucket (an all-P signature would put every one of them in
+  * the same bucket of every band).
   */
 case class MinHashBuckets(
     child: Expression,
@@ -43,6 +48,7 @@ case class MinHashBuckets(
     val arr = input.asInstanceOf[ArrayData]
     val md = MinHashBuckets.digest.get()
     val n = arr.numElements()
+    if (n == 0) return new GenericArrayData(Array.empty[Long])
     val mins = Array.fill(numHashes)(P)
     var i = 0
     while (i < n) {

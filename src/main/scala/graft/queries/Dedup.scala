@@ -45,6 +45,25 @@ object Dedup {
       .select(col("doc_id"), expr("word_shingles(text)").as("sh"))
   }
 
+  /** (doc_id, sh) for the documents of `documents` with at least one
+    * shingle, shingling each document ONCE. The plain
+    * `select(word_shingles(text) as sh).filter(size(sh) > 0)` shingles
+    * every document twice: Catalyst pushes the filter through the
+    * projection by inlining the alias, so the scan evaluates
+    * `size(word_shingles(text)) > 0` and the projection shingles the
+    * same text again. A filter on a generator's OUTPUT cannot move
+    * below the generator, so the set is emitted by a one-element
+    * `explode_outer` (outer: a plain explode would infer a pushed-down
+    * `size(...) > 0` filter of its own) and the emptiness test sits
+    * above it.
+    */
+  def nonEmptyShingles(documents: DataFrame): DataFrame = {
+    graft.functions.WordShingles.register(documents.sparkSession)
+    documents
+      .select(col("doc_id"), explode_outer(array(expr("word_shingles(text)"))).as("sh"))
+      .filter(size(col("sh")) > 0)
+  }
+
   /** Exact dedup: sha256(text) → groupBy digest. One shuffle on the
     * digest; at 100 TB this is the canonical first pass (hash is 32
     * bytes/row regardless of doc size — shuffle stays tiny).
@@ -482,19 +501,21 @@ object Dedup {
     * with band+1 — all arithmetic < 2^36, so DuckDB reproduces it with
     * plain BIGINT ops. The merge and finish lambdas only touch bound
     * lambda variables — nothing is re-evaluated per iteration (the
-    * trap that made the first cut O(48x) slower).
+    * trap that made the first cut O(48x) slower). An empty shingle set
+    * has no signature and gets no buckets, as in the native expression.
     */
   def minhashBuckets(sh: Column): Column = {
     val hs = transform(sh,
       x => conv(substring(md5(x), 1, 12), 16, 10).cast("long") % P)
-    aggregate(hs,
+    when(size(sh) > 0, aggregate(hs,
       array_repeat(lit(P), NumHashes),
       (acc, h) => zip_with(acc,
         zip_with(hashA, hashB, (a, b) => (a * h + b) % P),
         (x, y) => least(x, y)),
       acc => transform(sequence(lit(0), lit(Bands - 1)),
         b => aggregate(slice(acc, b * RowsPerBand + 1, lit(RowsPerBand)),
-          b.cast("long") + 1, (a, x) => (a * 31 + x) % P)))
+          b.cast("long") + 1, (a, x) => (a * 31 + x) % P))))
+      .otherwise(array().cast("array<bigint>"))
   }
 
   /** MinHash + LSH banding near-dedup — the scale path: per doc compute
@@ -533,60 +554,82 @@ object Dedup {
   /** `minJac` > 0 enables the size-ratio candidate prune: J(A,B) <=
     * min(|A|,|B|)/max(|A|,|B|), so a pair whose shingle-set sizes are
     * more skewed than the threshold can never verify — it is dropped
-    * BEFORE the shingle-fetch joins and the exact-intersect pass, on
-    * (id, size) rows alone. Output is IDENTICAL to the unpruned form
-    * followed by `.filter(jac >= minJac)`'s candidate set (the prune
-    * removes only sub-threshold pairs), so every consumer oracle is
-    * unchanged; only the physical verify volume shrinks. Callers that
-    * need the full unthresholded edge list (dedup_minhash's top-50)
-    * use the 1-arg form.
+    * BEFORE verification, on (id, size) rows alone. Output is
+    * IDENTICAL to the unpruned form followed by `.filter(jac >=
+    * minJac)`'s candidate set (the prune removes only sub-threshold
+    * pairs), so every consumer oracle is unchanged; only the physical
+    * verify volume shrinks. Callers that need the full unthresholded
+    * edge list (dedup_minhash's top-50) use the 1-arg form.
+    *
+    * One shingle pass plus a late-materialised verify: the candidate
+    * pass shingles every document once and carries only (id, size,
+    * band bucket) through its shuffle; the verify re-reads the text of
+    * the candidate documents alone and shingles those again
+    * ([[verifyOverlap]]). Near-dup candidates touch a small share of
+    * the corpus, so the corpus-wide shingle arrays never shuffle.
     */
   def minhashScored(documents: DataFrame, minJac: Double): DataFrame = {
-    val s = documents.sparkSession
-    graft.functions.WordShingles.register(s)
-    minhashScoredFromShingles(
-      documents.select(col("doc_id"), expr("word_shingles(text)").as("sh")),
-      minJac)
+    graft.functions.WordShingles.register(documents.sparkSession)
+    val docs = documents.select(col("doc_id"), col("text"))
+    val cand = minhashCandidates(
+      docs.select(col("doc_id"), expr("word_shingles(text)").as("sh")), minJac)
+    jaccardOf(verifyOverlap(cand, docs, expr("word_shingles(text)")))
   }
 
   /** [[minhashScored]] over a precomputed `(doc_id, sh)` shingle frame
     * (see [[ngramScoredFromShingles]] — the composed pipeline's shared
-    * shingle materialization feeds both edge-producer flavors).
+    * shingle materialization feeds both edge-producer flavors). The
+    * verify reads the candidates' sets from the same frame, so nothing
+    * is shingled here.
     */
-  def minhashScoredFromShingles(shingled: DataFrame, minJac: Double): DataFrame = {
-    val s = shingled.sparkSession
-    graft.functions.MinHashBuckets.register(s, NumHashes, Bands)
-    val docs = shingled.filter(size(col("sh")) > 0)
-    val cand0 = minhashCandidateSizes(docs)
-    val cand =
-      if (minJac > 0.0)
-        cand0.filter(col("nmin").cast("double") >= lit(minJac) * col("nmax"))
-          .select("doc_a", "doc_b")
-      else cand0.select("doc_a", "doc_b")
-    // Verify only the candidates: exact Jaccard runs on O(candidates)
-    // pairs, never O(corpus^2). Two joins fetch the two sides' shingle
-    // sets; both hash-partition the SAME docs subplan by doc_id, so
-    // Catalyst reuses one exchange — the corpus is shingled and
-    // shuffled exactly once, and no shingle-carrying regroup stage is
-    // needed (the pair itself is the join spine).
-    val withSets = cand
-      .join(docs.select(col("doc_id").as("doc_a"), col("sh").as("sa")), "doc_a")
-      .join(docs.select(col("doc_id").as("doc_b"), col("sh").as("sb")), "doc_b")
-    withSets
-      .select(col("doc_a"), col("doc_b"),
-        size(array_intersect(col("sa"), col("sb"))).as("common"),
-        size(col("sa")).as("na"), size(col("sb")).as("nb"))
-      .select(col("doc_a"), col("doc_b"),
-        (col("common").cast("double") / (col("na") + col("nb") - col("common"))).as("jac"))
+  def minhashScoredFromShingles(shingled: DataFrame, minJac: Double): DataFrame =
+    jaccardOf(verifyOverlap(minhashCandidates(shingled, minJac), shingled, col("sh")))
+
+  /** Distinct candidate pairs `(doc_a, doc_b)` of a `(doc_id, sh)`
+    * frame, with the size-ratio prune of [[minhashScored]] applied
+    * when `minJac` > 0.
+    */
+  private def minhashCandidates(shingled: DataFrame, minJac: Double): DataFrame = {
+    graft.functions.MinHashBuckets.register(shingled.sparkSession, NumHashes, Bands)
+    val cand = minhashCandidateSizes(shingled)
+    (if (minJac > 0.0) cand.filter(col("nmin").cast("double") >= lit(minJac) * col("nmax"))
+     else cand).select("doc_a", "doc_b")
   }
+
+  /** Exact overlap of every candidate pair: `(doc_a, doc_b, common, na,
+    * nb)` for the pairs of `cand` (doc_a < doc_b), with `shingles`
+    * evaluated over the rows of `sets` (keyed by `doc_id`). Each pair
+    * fans out to its two endpoints, the endpoints join `sets` — a
+    * broadcast join while either side fits, a shuffle join at scale,
+    * picked by the planner and AQE — and the two shingle sets regroup
+    * by pair. Only candidate documents are fetched, shingled and
+    * shuffled: O(candidates), never O(corpus). Both counts are
+    * symmetric in the pair, so the regroup needs no ordering.
+    */
+  private def verifyOverlap(cand: DataFrame, sets: DataFrame, shingles: Column): DataFrame =
+    cand.select(col("doc_a"), col("doc_b"), explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
+      .join(sets, "doc_id")
+      .select(col("doc_a"), col("doc_b"), shingles.as("sh"))
+      .groupBy("doc_a", "doc_b")
+      .agg(collect_list(col("sh")).as("sets"))
+      .select(col("doc_a"), col("doc_b"),
+        size(array_intersect(col("sets")(0), col("sets")(1))).as("common"),
+        size(col("sets")(0)).as("na"), size(col("sets")(1)).as("nb"))
+
+  /** `(doc_a, doc_b, jac)` from [[verifyOverlap]]'s counts — the one
+    * IEEE Jaccard expression the DuckDB oracle reproduces.
+    */
+  private def jaccardOf(overlap: DataFrame): DataFrame =
+    overlap.select(col("doc_a"), col("doc_b"),
+      (col("common").cast("double") / (col("na") + col("nb") - col("common"))).as("jac"))
 
   /** Distinct in-bucket candidate pairs `(doc_a, doc_b, nmin, nmax)`
     * from the LSH band buckets — the pre-verification pair stream every
-    * minhash consumer refines. Input: `(doc_id, sh)` with non-empty
-    * shingle arrays. Public as the scale-curve diagnostic surface (the
-    * candidate count is the number that must scale linearly with the
-    * corpus for the 100 TB claim to hold — tools/ScaleCurve records it
-    * across a 10× step).
+    * minhash consumer refines. Input: `(doc_id, sh)`; documents with an
+    * empty shingle set get no bucket and never pair. Public as the
+    * scale-curve diagnostic surface (the candidate count is the number
+    * that must scale linearly with the corpus for the 100 TB claim to
+    * hold — tools/ScaleCurve records it across a 10× step).
     */
   def minhashCandidateSizes(docs: DataFrame): DataFrame = {
     // Candidate pairs WITHOUT a self-join on the signature subtree:
@@ -595,13 +638,15 @@ object Dedup {
     // once per document, and only buckets with >1 doc produce work.
     // posexplode_OUTER: a plain posexplode makes InferFiltersFromGenerate
     // push `isnotnull(bks) AND size(bks)>0` through the projection into
-    // the scan, re-evaluating the whole signature chain 3× per row; the
-    // outer variant skips those inferred filters and is identical here
-    // (bks is always a non-null Bands-element array for non-empty sh).
+    // the scan, re-evaluating the whole shingle+signature chain per row.
+    // The outer variant infers nothing; an empty-set document (no
+    // buckets) yields one null placeholder row, dropped by a filter that
+    // sits on the generator's output, so nothing is pushed into the scan.
     val bands = docs
       .select(col("doc_id"), size(col("sh")).as("n"), expr("minhash_buckets(sh)").as("bks"))
       .select(col("doc_id"), col("n"), posexplode_outer(col("bks")))
       .toDF("doc_id", "n", "band", "bucket")
+      .filter(col("bucket").isNotNull)
     // Two-stage expansion (posexplode bucket, explode tail slice), same
     // as ngramScored: per-row memory stays O(k) for a k-doc bucket
     // instead of the O(k^2) array a single flatten-explode builds. Hot
@@ -646,15 +691,12 @@ object Dedup {
     * at 2 dp, so the hash gate applies end to end.
     */
   def dedupEval(s: SparkSession, d: String): DataFrame = {
-    graft.functions.WordShingles.register(s)
     graft.functions.MinHashBuckets.register(s, NumHashes, Bands)
     val docs = Tables.documents(s, d)
     val tau = 0.6
     val truth = ngramScored(docs).filter(col("jac") >= tau)
       .select(col("doc_a"), col("doc_b"), lit(1).as("in_t"))
-    val sh = docs.select(col("doc_id"), expr("word_shingles(text)").as("sh"))
-      .filter(size(col("sh")) > 0)
-    val cand = minhashCandidateSizes(sh)
+    val cand = minhashCandidateSizes(nonEmptyShingles(docs))
       .select(col("doc_a"), col("doc_b"), lit(1).as("in_c"))
     truth.join(cand, Seq("doc_a", "doc_b"), "full_outer")
       .agg(sum("in_t").as("n_truth"), sum("in_c").as("n_cand"),
@@ -693,10 +735,7 @@ object Dedup {
 
   /** Core sketch-candidates-then-verify containment pipeline. */
   def containmentSketchPairs(documents: DataFrame): DataFrame = {
-    val s = documents.sparkSession
-    graft.functions.WordShingles.register(s)
-    val docs = documents.select(col("doc_id"), expr("word_shingles(text)").as("sh"))
-      .filter(size(col("sh")) > 0)
+    val docs = nonEmptyShingles(documents)
     val sk = docs.select(col("doc_id"),
       slice(array_sort(transform(col("sh"),
         x => conv(substring(md5(x), 1, 12), 16, 10).cast("long"))), 1, ContainK).as("sk"))
@@ -743,7 +782,8 @@ object Dedup {
   def decontaminate(s: SparkSession, d: String): DataFrame = {
     val sh = shingleDocs(s, d)
     val bench = sh.filter(col("doc_id") < 20)
-      .select(explode(col("sh")).as("shingle")).distinct()
+      .select(explode_outer(col("sh")).as("shingle"))
+      .filter(col("shingle").isNotNull).distinct()
     val corpus = sh.filter(col("doc_id") >= 20)
       .select(col("doc_id"), explode_outer(col("sh")).as("shingle"))
     corpus.join(broadcast(bench), "shingle")
@@ -911,10 +951,7 @@ object Dedup {
     * Jaccard >= tau.
     */
   def similarityJoin(documents: DataFrame, tau: Double): DataFrame = {
-    val s = documents.sparkSession
-    graft.functions.WordShingles.register(s)
-    val docs = documents.select(col("doc_id"), expr("word_shingles(text)").as("sh"))
-      .filter(size(col("sh")) > 0)
+    val docs = nonEmptyShingles(documents)
     val ex = docs.select(col("doc_id"), size(col("sh")).as("nsh"),
       explode(col("sh")).as("shingle"))
     val cand = ssjCandidates(ssjPrefix(ex, tau), tau)
@@ -1033,12 +1070,9 @@ object Dedup {
     * bucket, scored. (doc_id = batch side, dup_of = corpus side.)
     */
   def minhashCrossScored(batch: DataFrame, corpus: DataFrame): DataFrame = {
-    val s = batch.sparkSession
-    graft.functions.WordShingles.register(s)
-    graft.functions.MinHashBuckets.register(s, NumHashes, Bands)
-    def prep(df: DataFrame, idAs: String): DataFrame = df
-      .select(col("doc_id").as(idAs), expr("word_shingles(text)").as("sh"))
-      .filter(size(col("sh")) > 0)
+    graft.functions.MinHashBuckets.register(batch.sparkSession, NumHashes, Bands)
+    def prep(df: DataFrame, idAs: String): DataFrame =
+      nonEmptyShingles(df).select(col("doc_id").as(idAs), col("sh"))
     def bandsOf(df: DataFrame, idc: String): DataFrame = df
       .select(col(idc), expr("minhash_buckets(sh)").as("bks"))
       .select(col(idc), posexplode_outer(col("bks")))
@@ -1133,11 +1167,8 @@ object Dedup {
     * bucket-bounded, then a Bands-row rollup.
     */
   def dedupBucketStats(s: SparkSession, d: String): DataFrame = {
-    graft.functions.WordShingles.register(s)
     graft.functions.MinHashBuckets.register(s, NumHashes, Bands)
-    val bkt = Tables.documents(s, d)
-      .select(col("doc_id"), expr("word_shingles(text)").as("sh"))
-      .filter(size(col("sh")) > 0)
+    val bkt = nonEmptyShingles(Tables.documents(s, d))
       .select(col("doc_id"), posexplode_outer(expr("minhash_buckets(sh)")))
       .toDF("doc_id", "band", "bucket")
     bkt.groupBy("band", "bucket").agg(count(lit(1)).as("k"))
@@ -1164,7 +1195,8 @@ object Dedup {
     */
   def ngramNovelty(s: SparkSession, d: String): DataFrame = {
     val ex = shingleDocs(s, d)
-      .select(col("doc_id"), explode(col("sh")).as("shingle"))
+      .select(col("doc_id"), explode_outer(col("sh")).as("shingle"))
+      .filter(col("shingle").isNotNull)
     val firstDoc = ex.groupBy("shingle").agg(min("doc_id").as("first_doc"))
     ex.join(firstDoc, "shingle")
       .groupBy("doc_id")
@@ -1235,7 +1267,8 @@ object Dedup {
   def sourceOverlapShingles(s: SparkSession, d: String): DataFrame = {
     graft.functions.WordShingles.register(s)
     val sh = Tables.documents(s, d)
-      .select(col("source"), explode(expr("word_shingles(text)")).as("g"))
+      .select(col("source"), explode_outer(expr("word_shingles(text)")).as("g"))
+      .filter(col("g").isNotNull)
       .select(col("source"), md5(col("g")).as("sd"))
       .distinct()
       .persist()
@@ -1281,12 +1314,8 @@ object Dedup {
 
   /** Core of [[dedupMinhashBbit]] over any (doc_id, text) frame. */
   def dedupMinhashBbitOn(documents: DataFrame): DataFrame = {
-    val s = documents.sparkSession
-    graft.functions.WordShingles.register(s)
-    graft.functions.MinHashBuckets.register(s, NumHashes, Bands)
-    val docs = documents
-      .select(col("doc_id"), expr("word_shingles(text)").as("sh"))
-      .filter(size(col("sh")) > 0)
+    graft.functions.MinHashBuckets.register(documents.sparkSession, NumHashes, Bands)
+    val docs = nonEmptyShingles(documents)
     // the bucket fold minus the band finish: the raw 48 minima
     val sig = aggregate(
       transform(col("sh"),

@@ -169,9 +169,13 @@ object Pipeline {
     // stage 3 — benchmark decontamination (decontaminate semantics):
     // drop survivors sharing ANY shingle with the held-out eval docs
     val bench = docs.filter(col("doc_id") < BenchCap)
-      .select(explode(expr("word_shingles(text)")).as("shingle")).distinct()
+      .select(explode_outer(expr("word_shingles(text)")).as("shingle"))
+      .filter(col("shingle").isNotNull).distinct()
+    // explode_OUTER here too: the null row of a shingle-less doc never
+    // matches the join, and a plain explode would push a re-shingling
+    // size filter into sh1's scan whenever sh1 is not a cut frame
     val contaminated = sh1.join(s2.select("doc_id"), "doc_id")
-      .select(col("doc_id"), explode(col("sh")).as("shingle"))
+      .select(col("doc_id"), explode_outer(col("sh")).as("shingle"))
       .join(broadcast(bench), "shingle")
       .select("doc_id").distinct()
     val s3 = s2.select("doc_id").join(contaminated, Seq("doc_id"), "left_anti")

@@ -523,4 +523,119 @@ class DedupSpec extends SparkSuite {
     val (x, y) = anyPair
     assert(got((x, y))._2 == got((y, x))._2)
   }
+
+  /** The join-both-shingle-sides verify `minhashScored` used before it
+    * verified candidate documents only: shingle and drop empty docs,
+    * take the LSH candidates, fetch each side's set by doc id, score.
+    */
+  private def joinBothSidesScored(docs: org.apache.spark.sql.DataFrame,
+      minJac: Double): org.apache.spark.sql.DataFrame = {
+    graft.functions.WordShingles.register(spark)
+    graft.functions.MinHashBuckets.register(spark)
+    val sh = docs.select(col("doc_id"), expr("word_shingles(text)").as("sh"))
+      .filter(size(col("sh")) > 0)
+    val cand = Dedup.minhashCandidateSizes(sh)
+      .filter(col("nmin").cast("double") >= lit(minJac) * col("nmax"))
+    cand.select("doc_a", "doc_b")
+      .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sa")), "doc_a")
+      .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sb")), "doc_b")
+      .select(col("doc_a"), col("doc_b"),
+        size(array_intersect(col("sa"), col("sb"))).as("common"),
+        size(col("sa")).as("na"), size(col("sb")).as("nb"))
+      .select(col("doc_a"), col("doc_b"),
+        (col("common").cast("double") / (col("na") + col("nb") - col("common"))).as("jac"))
+  }
+
+  private def scoredRows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+    df.select("doc_a", "doc_b", "jac").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  /** Seeded corpus: `groups` planted groups of an 80-word original and
+    * two copies with 2 of their words redrawn, `singles` unrelated
+    * 40-word docs, and `short` docs of 0-2 words (no shingles).
+    */
+  private def plantedCorpus(groups: Int, singles: Int, short: Int): org.apache.spark.sql.DataFrame = {
+    val rnd = new scala.util.Random(7)
+    // letters only: the tokenizer splits on every non-letter
+    val vocab = Array.tabulate(3000)(i =>
+      Seq(i / 676, i / 26 % 26, i % 26).map(d => ('a' + d).toChar).mkString("w", "", ""))
+    def words(n: Int): Array[String] = Array.fill(n)(vocab(rnd.nextInt(vocab.length)))
+    val planted = (0 until groups).flatMap { g =>
+      val orig = words(80)
+      (0 until 3).map { c =>
+        val w = orig.clone()
+        if (c > 0) (0 until 2).foreach(_ => w(rnd.nextInt(w.length)) = vocab(rnd.nextInt(vocab.length)))
+        w.mkString(" ")
+      }
+    }
+    val texts = planted ++ (0 until singles).map(_ => words(40).mkString(" ")) ++
+      (0 until short).map(i => words(i % 3).mkString(" "))
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+  }
+
+  test("minhashScored on a corpus of mostly sub-3-word docs: empty docs never pair or share a bucket") {
+    val groups = 12
+    val docs = plantedCorpus(groups = groups, singles = 60, short = 300)
+    val withText = docs.filter(size(split(col("text"), " ")) >= 3)
+    val longIds = withText.select("doc_id").as[Long].collect().toSet
+    assert(longIds.size == groups * 3 + 60)
+    // empty shingle sets get no band buckets at all
+    graft.functions.WordShingles.register(spark)
+    graft.functions.MinHashBuckets.register(spark)
+    val shAll = docs.select(col("doc_id"), expr("word_shingles(text)").as("sh"))
+    val emptyBuckets = shAll.filter(size(col("sh")) === 0)
+      .select(size(expr("minhash_buckets(sh)"))).as[Int].collect()
+    assert(emptyBuckets.length == 300 && emptyBuckets.forall(_ == 0))
+    // candidates: the 300 short docs add none (sharing one bucket would
+    // add C(300, 2) = 44850 pairs)
+    val candAll = Dedup.minhashCandidateSizes(shAll).select("doc_a", "doc_b")
+      .as[(Long, Long)].collect().toSet
+    val candLong = Dedup.minhashCandidateSizes(shAll.filter(size(col("sh")) > 0))
+      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    assert(candAll === candLong)
+    assert(candAll.size < 10 * groups * 3, s"${candAll.size} candidates")
+    val scored = scoredRows(Dedup.minhashScored(docs))
+    assert(scored.forall { case (a, b, _) => longIds(a) && longIds(b) })
+    // every planted pair verifies (2 of 80 words redrawn per copy)
+    val edges = scoredRows(Dedup.minhashScored(docs, 0.6).filter(col("jac") >= 0.6))
+    val edgePairs = edges.map { case (a, b, _) => (a, b) }
+    (0 until groups).foreach { g =>
+      val ids = (0 until 3).map(c => (g * 3 + c).toLong)
+      for (a <- ids; b <- ids if a < b) assert(edgePairs((a, b)), s"planted pair ($a, $b)")
+    }
+    assert(edges === scoredRows(joinBothSidesScored(docs, 0.6).filter(col("jac") >= 0.6)))
+  }
+
+  test("candidate-only verify ≡ the join-both-sides formulation (sf0.001 + planted)") {
+    graft.functions.WordShingles.register(spark)
+    val sf = graft.core.Tables.documents(spark, sfDir)
+    Seq(sf -> "sf0.001", plantedCorpus(groups = 10, singles = 40, short = 20) -> "planted")
+      .foreach { case (docs, name) =>
+        val shingled = docs.select(col("doc_id"), expr("word_shingles(text)").as("sh"))
+        Seq(0.0, 0.6).foreach { minJac =>
+          val expected = scoredRows(joinBothSidesScored(docs, minJac))
+          assert(expected.nonEmpty, s"$name: no candidates")
+          assert(scoredRows(Dedup.minhashScored(docs, minJac)) === expected, s"$name minhashScored($minJac)")
+          assert(scoredRows(Dedup.minhashScoredFromShingles(shingled, minJac)) === expected,
+            s"$name minhashScoredFromShingles($minJac)")
+        }
+      }
+  }
+
+  test("dedupKeepMinhash's edge plan shingles the corpus scan once and writes one band exchange") {
+    val docs = graft.core.Tables.documents(spark, sfDir)
+    val edges = Dedup.minhashScored(docs, 0.6).filter(col("jac") >= 0.6).select("doc_a", "doc_b")
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Project}
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    def shingles(p: LogicalPlan): Int = p.expressions
+      .map(_.collect { case w: graft.functions.WordShingles => w }.size).sum
+    val opt = edges.queryExecution.optimizedPlan
+    // over the corpus scan: the candidate pass; over the endpoint join:
+    // the candidate documents' verify; no filter anywhere shingles
+    val overScan = opt.collect { case p @ Project(_, _: LogicalRelation) => shingles(p) }.sum
+    val overJoin = opt.collect { case p @ Project(_, _: Join) => shingles(p) }.sum
+    assert(overScan == 1 && overJoin == 1 && opt.map(shingles).sum == 2, opt.toString)
+    val phys = edges.queryExecution.executedPlan.toString
+    assert("hashpartitioning\\(band#".r.findAllIn(phys).size == 1, phys)
+  }
 }

@@ -230,6 +230,32 @@ class PlanLintSpec extends SparkSuite {
         "leaderboard / fixed domain)")
   }
 
+  /** True when a Filter in `df`'s optimized plan evaluates the
+    * shingle or MinHash-signature expression. Catalyst pushes a
+    * predicate on an aliased `word_shingles(text)` column through the
+    * projection by inlining the alias, and InferFiltersFromGenerate
+    * adds `size(...) > 0` under a plain explode of one: either way the
+    * scan shingles every document a second time just to test it.
+    */
+  private def filtersShingles(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.exists {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+        f.condition.exists {
+          case _: graft.functions.WordShingles | _: graft.functions.MinHashBuckets => true
+          case _ => false
+        }
+      case _ => false
+    }
+
+  test("no Filter condition evaluates word_shingles or minhash_buckets") {
+    val offenders = frames.toSeq.collect { case (n, Right(df)) =>
+      (n, try filtersShingles(df) catch { case _: Throwable => false })
+    }.collect { case (n, true) => n }.sorted
+    assert(offenders.isEmpty,
+      s"filters that re-evaluate the shingle/signature chain in: $offenders — " +
+        "filter on a generator's output (Dedup.nonEmptyShingles, explode_outer) instead")
+  }
+
   // ——— the `.stable` blind spot (r13 verdict #2, closed r14) ———
   // A localCheckpoint truncates lineage, so the walks above cannot
   // see plan nodes UPSTREAM of a `.stable` cut — an allowlist comment
@@ -244,7 +270,7 @@ class PlanLintSpec extends SparkSuite {
   // that. Builders still execute their construction-time driver
   // actions, so this walk is slower than the truncated one — it runs
   // once per suite.
-  private lazy val noStable: Map[String, (String, Boolean)] = {
+  private lazy val noStable: Map[String, (String, Boolean, Boolean)] = {
     spark.conf.set("spark.graft.stableOff", "true")
     try {
       SparkEntry.queries.map { case (name, fn) =>
@@ -255,9 +281,9 @@ class PlanLintSpec extends SparkSuite {
             case w: org.apache.spark.sql.catalyst.plans.logical.Window
               if w.partitionSpec.isEmpty => w
           }.nonEmpty
-          (phys, badWin)
+          (phys, badWin, filtersShingles(df))
         } catch {
-          case e: Throwable => (s"PLAN_BUILD_FAILED: ${e.getMessage}", false)
+          case e: Throwable => (s"PLAN_BUILD_FAILED: ${e.getMessage}", false, false)
         })
       }
     } finally {
@@ -315,14 +341,14 @@ class PlanLintSpec extends SparkSuite {
 
   test("no CartesianProduct anywhere — with lineage cuts disabled (end-to-end plans)") {
     val offenders = noStable.collect {
-      case (n, (p, _)) if p.contains("CartesianProduct") => n
+      case (n, (p, _, _)) if p.contains("CartesianProduct") => n
     }.toSeq.sorted
     assert(offenders.isEmpty, s"cartesian products upstream of .stable cuts in: $offenders")
   }
 
   test("BNLJ only where bounded — with lineage cuts disabled (end-to-end plans)") {
     val offenders = noStable.collect {
-      case (n, (p, _)) if p.contains("BroadcastNestedLoopJoin") &&
+      case (n, (p, _, _)) if p.contains("BroadcastNestedLoopJoin") &&
         !nonEquiOk(n) && !nonEquiOkNoStable(n) => n
     }.toSeq.sorted
     assert(offenders.isEmpty,
@@ -331,7 +357,7 @@ class PlanLintSpec extends SparkSuite {
 
   test("no unpartitioned window over an unbounded input — with lineage cuts disabled") {
     val offenders = noStable.collect {
-      case (n, (_, true)) if !globalWindowOk(n) && !globalWindowOkNoStable(n) => n
+      case (n, (_, true, _)) if !globalWindowOk(n) && !globalWindowOkNoStable(n) => n
     }.toSeq.sorted
     assert(offenders.isEmpty,
       s"unpartitioned windows upstream of .stable cuts in: $offenders")
@@ -339,9 +365,15 @@ class PlanLintSpec extends SparkSuite {
 
   test("every registered query plans end-to-end with lineage cuts disabled") {
     val failed = noStable.collect {
-      case (n, (p, _)) if p.startsWith("PLAN_BUILD_FAILED") => n
+      case (n, (p, _, _)) if p.startsWith("PLAN_BUILD_FAILED") => n
     }.toSeq.sorted
     assert(failed.isEmpty, s"stable-off plan build failed for: $failed")
+  }
+
+  test("no Filter evaluates word_shingles or minhash_buckets — with lineage cuts disabled") {
+    val offenders = noStable.collect { case (n, (_, _, true)) => n }.toSeq.sorted
+    assert(offenders.isEmpty,
+      s"shingle/signature filters upstream of .stable cuts in: $offenders")
   }
 
   test("no ShuffledHashJoin/SortMergeJoin against a dimension table in the TPC-H heads") {
