@@ -26,22 +26,34 @@ final case class KV(key: String, value: String)
   *     the reference (map-task concatenation order) — deterministic apps
   *     must sort values themselves (reference: mrapps/indexer.go:37,
   *     mrapps/crash.go:48-52).
-  *   - `nReduce` controls only output partitioning, never grouping
-  *     results (reference: mrmaster.go:23).
+  *   - `nReduce` is the number of reduce tasks, as R is in the
+  *     reference (mrmaster.go:23): the map output is hash-partitioned by
+  *     key into exactly `nReduce` partitions, each reduced in place and
+  *     returned as one output partition. It never changes grouping
+  *     results.
   *
-  * Scale notes: `run` (arbitrary reducef) cannot partially aggregate —
-  * exactly like the reference, which has no combiners (worker.go:78-94).
-  * For associative reducers use [[runAssociative]], which Spark executes
+  * Scale notes: a job is ONE shuffle, as in the reference — scan → map
+  * → partition by hash(key) % nReduce → sort → group → reduce. The
+  * grouping reuses that exchange, which also places the output, and a
+  * shuffled row carries its key once.
+  * `run` (arbitrary reducef) cannot partially aggregate — exactly like
+  * the reference, which has no combiners (worker.go:78-94). For
+  * associative reducers use [[runAssociative]], which Spark executes
   * with map-side partial aggregation (an upgrade the MR paper calls a
   * combiner); at 100 TB this is the difference between shuffling every
-  * pair and shuffling one pre-merged value per (partition, key).
+  * pair and shuffling one pre-merged value per (partition, key). One
+  * reduce task sorts one partition (spilling as needed) and holds one
+  * key's values at a time, so `nReduce` sizes the reduce side as R
+  * does: raise it with the data.
   */
 object MapReduceJob {
 
   /** Generic form: mirrors worker.go:66-100 (sort → group adjacent →
-    * reduce once per key). The groupByKey shuffle hash-partitions by key
-    * (reference ihash%R, worker.go:28-32 — different hash function,
-    * identical grouping semantics).
+    * reduce once per key). The one exchange hash-partitions the pairs by
+    * key into `nReduce` partitions (reference ihash%R, worker.go:28-32 —
+    * Murmur3 instead of FNV, identical grouping semantics), and the
+    * grouping runs inside them: output partition r holds exactly the
+    * keys with pmod(hash(key), nReduce) = r.
     */
   def run(
       records: Dataset[KV],
@@ -54,14 +66,17 @@ object MapReduceJob {
     import spark.implicits._
     records
       .flatMap(r => mapf(r.key, r.value))
-      .groupByKey(_.key)
+      .repartition(nReduce, col("key"))
+      .groupBy(col("key"))
+      .as[String, KV]
       .mapGroups((k, it) => KV(k, reducef(k, it.map(_.value).toSeq)))
-      .repartition(nReduce)
   }
 
   /** Combiner-enabled form for associative+commutative reducers.
     * `reduceGroups` runs as a typed Aggregator with partial (map-side)
-    * merge — the scalable path the reference lacks.
+    * merge — the scalable path the reference lacks. The merged output is
+    * then hash-placed by key into `nReduce` partitions, as `run` places
+    * it.
     */
   def runAssociative(
       records: Dataset[KV],
@@ -77,7 +92,7 @@ object MapReduceJob {
       .groupByKey(_.key)
       .reduceGroups((a, b) => KV(a.key, merge(a.value, b.value)))
       .map(_._2)
-      .repartition(nReduce)
+      .repartition(nReduce, col("key"))
   }
 
   /** Run a ServiceLoader-discovered plugin by name — the reference's
@@ -111,11 +126,15 @@ object MapReduceJob {
   /** Text sink parity: lines "key value", `nReduce` output files
     * (reference: worker.go:92-97). Atomic commit is Spark's
     * FileOutputCommitter (≡ the reference's temp-file + os.Rename).
-    * `byKey = true` hash-places rows by key like the reference's
-    * ihash%R (worker.go:113-117); the round-robin default differs
-    * only in file placement — unobservable under the sorted-cat
-    * comparison (test-mr.sh:59-60) and better balanced under skew,
-    * so the deviation is a documented choice, not an accident.
+    * `run` and `runAssociative` already return their output hash-placed
+    * by key in `nReduce` partitions; writing those partitions as they
+    * are (the [[graft.sources.KvTextSink]] does) is the reference's
+    * placement. This writer takes any Dataset[KV] and shuffles it once
+    * more: `byKey = true` re-places rows by key like the reference's
+    * ihash%R (worker.go:113-117); `byKey = false` deals rows
+    * round-robin, which balances file sizes under key skew. Placement
+    * is unobservable under the sorted-cat comparison
+    * (test-mr.sh:59-60).
     */
   def writeTextOutput(ds: Dataset[KV], dir: String, nReduce: Int = 10,
       byKey: Boolean = false): Unit = {

@@ -1,5 +1,9 @@
 package graft.core
 
+import scala.jdk.CollectionConverters._
+
+import graft.functions.LetterTokens
+
 /** Runtime-loadable MapReduce application — the reference's `.so`
   * plugin ABI (reference: main/mrworker.go:34-51 resolves `Map` and
   * `Reduce` symbols from a shared object at run time;
@@ -50,9 +54,8 @@ object MapReducePlugin {
   */
 final class WordCountPlugin extends MapReducePlugin {
   override def name: String = "wc"
-  private val re = "[^\\p{L}]+".r
   override def mapf(key: String, value: String): IterableOnce[KV] =
-    re.split(value).iterator.filter(_.nonEmpty).map(w => KV(w, "1"))
+    LetterTokens(value).map(w => KV(w, "1"))
   override def reducef(key: String, values: Seq[String]): String =
     values.size.toString
 }
@@ -62,9 +65,8 @@ final class WordCountPlugin extends MapReducePlugin {
   */
 final class IndexerPlugin extends MapReducePlugin {
   override def name: String = "indexer"
-  private val re = "[^\\p{L}]+".r
   override def mapf(key: String, value: String): IterableOnce[KV] =
-    re.split(value).iterator.filter(_.nonEmpty).toSet[String].map(w => KV(w, key))
+    LetterTokens.distinct(value).iterator().asScala.map(w => KV(w, key))
   override def reducef(key: String, values: Seq[String]): String =
     s"${values.size} ${values.sorted.mkString(",")}"
 }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.util.regex.Pattern
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -20,30 +18,22 @@ import org.apache.spark.unsafe.types.UTF8String
   * here. Shingling runs over every document of the corpus, so at
   * 100 TB it must be compiled-loop fast.
   *
-  * Tokenizer = `[^\p{L}]+` split, matching the reference's Go
-  * `unicode.IsLetter` word splitting (reference: mrapps/wc.go:21-34)
-  * and the DuckDB oracle's string_split_regex.
+  * Tokenizer = [[LetterTokens]], the non-empty pieces of a `[^\p{L}]+`
+  * split, matching the reference's Go `unicode.IsLetter` word splitting
+  * (reference: mrapps/wc.go:21-34) and the DuckDB oracle's
+  * string_split_regex.
   */
 case class WordShingles(child: Expression, n: Int)
   extends UnaryExpression with CodegenFallback {
 
-  @transient private lazy val re = Pattern.compile("[^\\p{L}]+")
-
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
   override def nullSafeEval(input: Any): Any = {
-    val text = input.asInstanceOf[UTF8String].toString
-    val raw = re.split(text)
-    var nw = 0
-    val words = new Array[String](raw.length)
-    var i = 0
-    while (i < raw.length) {
-      if (raw(i).nonEmpty) { words(nw) = raw(i); nw += 1 }
-      i += 1
-    }
+    val words = LetterTokens(input.asInstanceOf[UTF8String].toString).toArray
+    val nw = words.length
     if (nw < n) return new GenericArrayData(Array.empty[Any])
     val seen = new java.util.LinkedHashSet[String](nw * 2)
-    i = 0
+    var i = 0
     while (i <= nw - n) {
       val sb = new java.lang.StringBuilder(words(i))
       var k = 1

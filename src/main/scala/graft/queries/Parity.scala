@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{KV, MapReduceJob, Tables}
+import graft.functions.LetterTokens
 
 /** The reference's bundled applications (reference: mrapps/ wc.go,
   * indexer.go, crash.go, nocrash.go),
@@ -19,7 +20,8 @@ object Parity {
   /** Go `unicode.IsLetter` tokenizer parity (reference: mrapps/wc.go:21-34
     * splits on non-letter runes). Java \p{L} matches the same Unicode L*
     * categories; `split` leaves empty strings where Go's FieldsFunc drops
-    * them, hence the length filter (SURVEY.md §7.4).
+    * them, hence the length filter (SURVEY.md §7.4). The closure forms
+    * tokenize with [[LetterTokens]], the same split without the regex.
     */
   val TokenRe = "[^\\p{L}]+"
 
@@ -49,12 +51,10 @@ object Parity {
       .select(format_string("d%06d", col("doc_id")).as("key"),
         col("text").as("value"))
       .as[KV]
-    val re = TokenRe.r
     MapReduceJob
       .runAssociative(
         records,
-        mapf = (_, contents) =>
-          re.split(contents).iterator.filter(_.nonEmpty).map(w => KV(w, "1")),
+        mapf = (_, contents) => LetterTokens(contents).map(w => KV(w, "1")),
         merge = (a, b) => (a.toLong + b.toLong).toString)
       .toDF("key", "value")
   }
@@ -106,8 +106,9 @@ object Parity {
     *     (one InputPartition per file, column pruning);
     *  3. run wc through the closure ABI with the combiner path;
     *  4. write through the DSv2 [[graft.sources.KvTextSink]] — real
-    *     `mr-out-<r>` files, temp-file + atomic-rename commit —
-    *     hash-placed by key (worker.go:113-117 ihash%R parity);
+    *     `mr-out-<r>` files, temp-file + atomic-rename commit — one
+    *     per reduce partition, which runAssociative hash-places by key
+    *     (worker.go:113-117 ihash%R parity);
     *  5. read the committed bytes back and split "key value" lines.
     *
     * The returned rows therefore certify the sink's on-disk byte
@@ -154,15 +155,12 @@ object Parity {
     val records = spark.read.format("graft.sources.WholeFileSource").load(stage)
       .select(col("path").as("key"), col("content").as("value"))
       .as[KV]
-    val re = TokenRe.r
     val counted = MapReduceJob.runAssociative(
       records,
-      mapf = (_, contents) =>
-        re.split(contents).iterator.filter(_.nonEmpty).map(w => KV(w, "1")),
+      mapf = (_, contents) => LetterTokens(contents).map(w => KV(w, "1")),
       merge = (a, b) => (a.toLong + b.toLong).toString,
       nReduce = 5)
     counted.toDF()
-      .repartition(5, col("key"))
       .write.format("graft.sources.KvTextSink").mode("append").save(outDir)
     // the sink write above is an action, so the staged inputs are fully
     // consumed — reclaim them now rather than leaking a corpus copy per

@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -17,10 +18,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * only the attempt Spark's commit coordinator accepts gets renamed in
   * the driver-side job commit, so stragglers/retries (the reference's
   * backup tasks, master.go:111-127) can never tear or duplicate an
-  * output file.
+  * output file. Lines hold each field's UTF-8 bytes, whatever the
+  * platform charset.
   *
   * Usage: `df.select(key, value).repartition(R, key).write
-  * .format("graft.sources.KvTextSink").mode("append").save(dir)`.
+  * .format("graft.sources.KvTextSink").mode("append").save(dir)`; the
+  * output of `MapReduceJob.run` is already R key-hashed partitions and
+  * is written as it is.
   */
 class KvTextSink extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -78,11 +82,18 @@ private[sources] class KvWriterFactory(path: String) extends DataWriterFactory {
       private val tmp = s"$path/_tmp-$partitionId-$taskId"
       private val out = {
         Files.createDirectories(Paths.get(path))
-        new java.io.BufferedWriter(new java.io.FileWriter(tmp))
+        new java.io.BufferedOutputStream(Files.newOutputStream(Paths.get(tmp)), 1 << 16)
       }
+      // each field's UTF-8 bytes as the row holds them: no decode, no
+      // platform-charset re-encode
+      private def field(row: InternalRow, i: Int): Unit =
+        if (row.isNullAt(i)) out.write("null".getBytes(StandardCharsets.UTF_8))
+        else row.getUTF8String(i).writeTo(out)
       override def write(row: InternalRow): Unit = {
-        out.write(s"${row.getUTF8String(0)} ${row.getUTF8String(1)}")
-        out.write("\n")
+        field(row, 0)
+        out.write(' ')
+        field(row, 1)
+        out.write('\n')
       }
       override def commit(): WriterCommitMessage = {
         out.close()

@@ -110,15 +110,18 @@ object StreamingOps {
     val s = corpus.sparkSession
     graft.functions.WordShingles.register(s)
     graft.functions.MinHashBuckets.register(s)
-    val corpusSh = corpus
-      .select(col("doc_id").as("dup_of"), expr("word_shingles(text)").as("sh"))
-      .filter(size(col("sh")) > 0)
+    // shingle once per document on both sides: the emptiness filter sits
+    // above a one-element explode_outer, so it cannot be pushed below the
+    // projection as a second word_shingles (see Dedup.nonEmptyShingles)
+    val corpusSh = graft.queries.Dedup.nonEmptyShingles(corpus)
+      .withColumnRenamed("doc_id", "dup_of")
     val corpusBands = corpusSh
       .select(col("dup_of"), posexplode_outer(expr("minhash_buckets(sh)")))
       .toDF("dup_of", "band", "bucket")
     docStream
       .withWatermark("tsm", "10 minutes")
-      .select(col("doc_id"), col("tsm"), expr("word_shingles(text)").as("sh"))
+      .select(col("doc_id"), col("tsm"),
+        explode_outer(array(expr("word_shingles(text)"))).as("sh"))
       .filter(size(col("sh")) > 0)
       .select(col("doc_id"), col("tsm"), col("sh").as("sa"),
         posexplode_outer(expr("minhash_buckets(sh)")))

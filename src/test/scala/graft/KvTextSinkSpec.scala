@@ -25,6 +25,19 @@ class KvTextSinkSpec extends SparkSuite {
     assert(!new java.io.File(dir).listFiles().exists(_.getName.startsWith("_tmp")))
   }
 
+  test("non-ASCII and supplementary-plane keys round-trip byte-exact as UTF-8") {
+    // the committed bytes must not depend on the platform default charset
+    val dir = s"/tmp/graft_kvsink_utf8_${System.nanoTime()}"
+    val rows = Seq(("héllo", "1"), ("wörld", "ß"), ("日本語", "2"),
+      ("𝐀𝐁", "😀"), ("plain", "x"))
+    rows.toDF("key", "value").coalesce(1)
+      .write.format("graft.sources.KvTextSink").mode("append").save(dir)
+    val got = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir, "mr-out-0"))
+    val expected = rows.map { case (k, v) => s"$k $v\n" }.mkString
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    assert(got.toSeq === expected.toSeq)
+  }
+
   test("full reference pipeline through DSv2: WholeFileSource → map/reduce → KvTextSink") {
     // F1→F9 end-to-end on the connector API: whole-file scan, wc
     // closures, partitioned text commit — then the test-mr.sh check

@@ -3,6 +3,11 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.TaskContext
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.functions._
 import graft.core.{KV, MapReduceJob}
 
 /** Parity tests for the MapReduce closure ABI, mirroring the
@@ -54,6 +59,43 @@ class MapReduceJobSpec extends SparkSuite {
       .collect().map(kv => kv.key -> kv.value).toMap
     assert(got("a") === "d1 d2 d3 d4")
     assert(got("c") === docs.map(_.value.length.toString).sorted.mkString(" "))
+  }
+
+  test("run is one nReduce-way hash exchange: partition r holds the keys with pmod(hash(key), nReduce) = r") {
+    val nReduce = 3
+    val out = MapReduceJob.run(spark.createDataset(docs), wcMap, wcReduce, nReduce)
+    assert(out.collect().map(kv => kv.key -> kv.value).toMap === naiveWc(docs))
+    // the executed (final adaptive) plan: the grouping reuses the exchange
+    val plan = out.queryExecution.executedPlan
+    val exchanges = MapReduceJobSpec.Plans.collect(plan) { case e: Exchange => e }
+    assert(exchanges.size === 1, s"expected exactly one exchange:\n$plan")
+    exchanges.head.outputPartitioning match {
+      case HashPartitioning(Seq(k: Attribute), n) =>
+        assert(k.name === "key" && n === nReduce, plan)
+      case other => fail(s"expected hashpartitioning(key, $nReduce), got $other:\n$plan")
+    }
+    assert(out.rdd.getNumPartitions === nReduce)
+    val placed = out.toDF()
+      .select(spark_partition_id().as("pid"), pmod(hash(col("key")), lit(nReduce)).as("want"))
+      .collect()
+    assert(placed.length === naiveWc(docs).size)
+    assert(placed.forall(r => r.getInt(0) == r.getInt(1)), placed.mkString(", "))
+  }
+
+  test("runPlugin(\"indexer\") into KvTextSink commits nReduce mr-out files of the reference's lines") {
+    val out = Files.createTempDirectory("mrout").resolve("indexer").toString
+    MapReduceJob.runPlugin(spark.createDataset(docs), "indexer", nReduce = 4).toDF()
+      .write.format("graft.sources.KvTextSink").mode("append").save(out)
+    val files = new java.io.File(out).listFiles().map(_.getName).filter(_.startsWith("mr-out-"))
+    assert(files.sorted.toSeq === (0 until 4).map(r => s"mr-out-$r"))
+    val lines = files.toSeq.flatMap(f => Files.readAllLines(
+      java.nio.file.Paths.get(out, f), java.nio.charset.StandardCharsets.UTF_8)
+      .toArray(Array.empty[String]).toSeq)
+    val expected = docs
+      .flatMap(d => wcMap(d.key, d.value).map(_.key).distinct.map(_ -> d.key))
+      .groupBy(_._1).toSeq
+      .map { case (w, ps) => s"$w ${ps.size} ${ps.map(_._2).sorted.mkString(",")}" }
+    assert(lines.sorted === expected.sorted)
   }
 
   test("fileRecords reads whole files with path keys (worker.go:102-109 parity)") {
@@ -218,4 +260,9 @@ class MapReduceJobSpec extends SparkSuite {
       assert(outFiles.exists(_.getName.startsWith("mr-out-")), "sink wrote no mr-out-<r> files")
     } finally spark.conf.unset("spark.graft.scratchDir")
   }
+}
+
+object MapReduceJobSpec {
+  /** Plan traversal that descends into adaptive query stages. */
+  object Plans extends AdaptiveSparkPlanHelper
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
 import graft.core.{KV, MapReduceJob}
 
 /** Property-based differential tests (SURVEY.md §5.3-5): random
@@ -84,6 +85,41 @@ class PropertySpec extends SparkSuite {
         .groupBy(_._1).map { case (w, ps) => w -> ps.map(_._2).sorted.mkString(",") }
       got == model
     })
+  }
+
+  private def chars(cp: Int): String = new String(Character.toChars(cp))
+
+  /** Unicode text built from pieces the tokenizer must agree with the
+    * regex on: ASCII letters, digits and punctuation, Latin letters with
+    * combining marks, CJK, supplementary-plane letters, digits and
+    * symbols (surrogate pairs), lone surrogates (which may pair up with
+    * a neighbour), and any BMP char.
+    */
+  private val genUnicode: Gen[String] = Gen.listOf(Gen.frequency(
+    4 -> Gen.alphaChar.map(_.toString),
+    2 -> Gen.oneOf(" ", "  ", ",", "-", "'", "\n", "\t", "_"),
+    2 -> Gen.numChar.map(_.toString),
+    2 -> Gen.choose(0x00c0, 0x024f).map(chars),
+    2 -> Gen.choose(0x0300, 0x036f).map(chars),
+    2 -> Gen.choose(0x4e00, 0x9fff).map(chars),
+    2 -> Gen.choose(0x1d400, 0x1d7ff).map(chars),
+    1 -> Gen.choose(0x1f600, 0x1f64f).map(chars),
+    1 -> Gen.choose(0x20000, 0x2a6df).map(chars),
+    2 -> Gen.choose(0xd800, 0xdfff).map(_.toChar.toString),
+    1 -> Gen.choose(0x0000, 0xffff).map(_.toChar.toString))).map(_.mkString)
+
+  test("LetterTokens ≡ the non-empty pieces of a [^\\p{L}]+ split (random Unicode)") {
+    val re = java.util.regex.Pattern.compile(graft.queries.Parity.TokenRe)
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(2000),
+      Prop.forAll(genUnicode) { s =>
+        val want = re.split(s).toSeq.filter(_.nonEmpty)
+        val got = graft.functions.LetterTokens(s).toSeq
+        val set = graft.functions.LetterTokens.distinct(s)
+        ((got == want) && set.size == want.distinct.size && want.forall(set.contains)) :|
+          s"input ${s.codePoints().toArray.map(Integer.toHexString).mkString(" ")}"
+      })
+    assert(res.passed, res.status.toString)
   }
 
   // --- round-6 algorithmic components -------------------------------

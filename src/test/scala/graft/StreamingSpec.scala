@@ -2,7 +2,9 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.Filter
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.StreamingOps
@@ -223,6 +225,13 @@ class StreamingSpec extends SparkSuite {
       assert(rows.length === rows.toSet.size, "pair dedup must collapse per-band re-emissions")
       assert(rows.toSet === expected)
       assert(rows.nonEmpty)
+      // each side shingles each document once: no emptiness filter is
+      // pushed below a shingle projection as a second word_shingles
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.optimizedPlan
+      val isShingles = (e: Expression) => e.isInstanceOf[graft.functions.WordShingles]
+      assert(plan.exists(_.expressions.exists(_.exists(isShingles))), plan)
+      val shingledFilters = plan.collect { case f: Filter if f.condition.exists(isShingles) => f }
+      assert(shingledFilters.isEmpty, s"filters re-evaluate word_shingles:\n$plan")
     } finally q.stop()
   }
 
