@@ -15,7 +15,9 @@ final case class KV(key: String, value: String)
   * control plane — task queue, phase barrier, straggler re-execution,
   * atomic output commit (master.go:111-127, 171-223; worker.go:141-157) —
   * is supplied by Spark's DAG scheduler, shuffle, task retry, speculation
-  * and FileOutputCommitter; none of it is re-implemented here.
+  * and the DSv2 commit protocol; none of it is re-implemented here.
+  * File input and output are [[graft.sources.WholeFileSource]] (key =
+  * path, value = contents) and [[graft.sources.KvTextSink]] (mr-out-r).
   *
   * Semantics preserved exactly (reference: worker.go:45, 78-98):
   *   - `mapf(key, value)` is called once per input record (for file
@@ -33,7 +35,10 @@ final case class KV(key: String, value: String)
   *     results.
   *
   * Scale notes: a job is ONE shuffle, as in the reference — scan → map
-  * → partition by hash(key) % nReduce → sort → group → reduce. The
+  * → partition by hash(key) % nReduce → sort → group → reduce. A map
+  * task is one scan partition, and WholeFileSource packs many small
+  * files into one (the paper's 16-64 MB splits); a record is still a
+  * whole file, so for row-shaped data prefer graft.queries. The
   * grouping reuses that exchange, which also places the output, and a
   * shuffled row carries its key once.
   * `run` (arbitrary reducef) cannot partially aggregate — exactly like
@@ -107,41 +112,6 @@ object MapReduceJob {
       speculation: Boolean = false): Dataset[KV] = {
     val p = MapReducePlugin.load(pluginName)
     run(records, p.mapf, p.reducef, nReduce, speculation)
-  }
-
-  /** Whole-file input records, as the reference reads them
-    * (worker.go:102-109: one record per file, key = path, value = full
-    * contents). At 100 TB one-record-per-file only scales if files are
-    * bounded (the paper's 16-64 MB splits); for row-shaped data prefer
-    * the relational queries in graft.queries.
-    */
-  def fileRecords(spark: SparkSession, paths: Seq[String]): Dataset[KV] = {
-    import spark.implicits._
-    spark.sparkContext
-      .wholeTextFiles(paths.mkString(","))
-      .toDF("key", "value")
-      .as[KV]
-  }
-
-  /** Text sink parity: lines "key value", `nReduce` output files
-    * (reference: worker.go:92-97). Atomic commit is Spark's
-    * FileOutputCommitter (≡ the reference's temp-file + os.Rename).
-    * `run` and `runAssociative` already return their output hash-placed
-    * by key in `nReduce` partitions; writing those partitions as they
-    * are (the [[graft.sources.KvTextSink]] does) is the reference's
-    * placement. This writer takes any Dataset[KV] and shuffles it once
-    * more: `byKey = true` re-places rows by key like the reference's
-    * ihash%R (worker.go:113-117); `byKey = false` deals rows
-    * round-robin, which balances file sizes under key skew. Placement
-    * is unobservable under the sorted-cat comparison
-    * (test-mr.sh:59-60).
-    */
-  def writeTextOutput(ds: Dataset[KV], dir: String, nReduce: Int = 10,
-      byKey: Boolean = false): Unit = {
-    val parted = if (byKey) ds.repartition(nReduce, col("key")) else ds.repartition(nReduce)
-    parted
-      .select(concat_ws(" ", col("key"), col("value")))
-      .write.mode("overwrite").text(dir)
   }
 
   /** F11 backup-task parity (reference: master.go:111-127 re-queues

@@ -99,11 +99,11 @@ object Parity {
     *
     *  1. stage one input FILE per document (executor-side writes — the
     *     driver never holds contents), bounded to doc_id < 500 so the
-    *     file count — and hence the one-task-per-file F1 contract
-    *     (master.go:129-144) — is constant at any SF (the unbounded
-    *     row-shaped form is [[wc]]);
+    *     file count is constant at any SF (the unbounded row-shaped
+    *     form is [[wc]]);
     *  2. read them through the DSv2 [[graft.sources.WholeFileSource]]
-    *     (one InputPartition per file, column pruning);
+    *     (one record per file, files packed into byte-balanced map
+    *     tasks, column pruning);
     *  3. run wc through the closure ABI with the combiner path;
     *  4. write through the DSv2 [[graft.sources.KvTextSink]] — real
     *     `mr-out-<r>` files, temp-file + atomic-rename commit — one

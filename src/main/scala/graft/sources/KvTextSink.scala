@@ -1,7 +1,9 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
@@ -18,8 +20,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * only the attempt Spark's commit coordinator accepts gets renamed in
   * the driver-side job commit, so stragglers/retries (the reference's
   * backup tasks, master.go:111-127) can never tear or duplicate an
-  * output file. Lines hold each field's UTF-8 bytes, whatever the
-  * platform charset.
+  * output file; job commit and abort delete every `_tmp-*` file left,
+  * a killed attempt's included. Lines hold each field's UTF-8 bytes.
+  * A directory holds one run's `mr-out-*` set: `append` into one that
+  * has them fails at planning; `overwrite` replaces them at job
+  * commit, so a failed overwrite leaves the old run in place.
   *
   * Usage: `df.select(key, value).repartition(R, key).write
   * .format("graft.sources.KvTextSink").mode("append").save(dir)`; the
@@ -49,9 +54,19 @@ private[sources] class KvSinkTable(path: String) extends Table with SupportsWrit
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(info.schema().fields.length == 2,
       s"KvTextSink expects exactly (key, value); got ${info.schema().simpleString}")
-    new WriteBuilder {
-      override def build(): Write = new Write {
-        override def toBatch: BatchWrite = new KvBatchWrite(path)
+    new WriteBuilder with SupportsTruncate {
+      private var overwrite = false
+      override def truncate(): WriteBuilder = { overwrite = true; this }
+      override def build(): Write = {
+        if (!overwrite) {
+          val old = KvBatchWrite.listed(path, "mr-out-")
+          if (old.nonEmpty) throw new IllegalStateException(s"KvTextSink: $path already " +
+            s"holds ${old.size} mr-out files of another run; write with mode(\"overwrite\") " +
+            "to replace them")
+        }
+        new Write {
+          override def toBatch: BatchWrite = new KvBatchWrite(path, overwrite)
+        }
       }
     }
   }
@@ -60,20 +75,38 @@ private[sources] class KvSinkTable(path: String) extends Table with SupportsWrit
 private[sources] case class KvCommit(tmp: String, target: String)
   extends WriterCommitMessage
 
-private[sources] class KvBatchWrite(path: String) extends BatchWrite {
+private[sources] class KvBatchWrite(path: String, overwrite: Boolean) extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new KvWriterFactory(path)
   // job commit: only coordinator-accepted attempts are renamed —
-  // the worker.go:96 os.Rename, moved to the single commit point
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach { case KvCommit(tmp, target) =>
+  // the worker.go:96 os.Rename, moved to the single commit point;
+  // an overwrite then drops the old files this run did not replace
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    val committed = messages.map { case KvCommit(tmp, target) =>
       Files.move(Paths.get(tmp), Paths.get(target),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING).getFileName
+    }.toSet
+    if (overwrite) KvBatchWrite.listed(path, "mr-out-")
+      .filterNot(p => committed(p.getFileName)).foreach(Files.delete)
+    KvBatchWrite.sweepTemps(path)
+  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit = KvBatchWrite.sweepTemps(path)
+}
+
+private[sources] object KvBatchWrite {
+  /** The files in `dir` (if it exists) whose names start with `prefix`. */
+  def listed(dir: String, prefix: String): Seq[Path] = {
+    val d = Paths.get(dir)
+    if (!Files.isDirectory(d)) Nil
+    else {
+      val s = Files.list(d)
+      try s.iterator().asScala.filter(_.getFileName.toString.startsWith(prefix)).toList
+      finally s.close()
     }
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach { case KvCommit(tmp, _) =>
-      Files.deleteIfExists(Paths.get(tmp))
-    }
+  }
+
+  /** Uncommitted attempts' temp files, this job's or a killed one's. */
+  def sweepTemps(dir: String): Unit = listed(dir, "_tmp-").foreach(Files.deleteIfExists)
 }
 
 private[sources] class KvWriterFactory(path: String) extends DataWriterFactory {

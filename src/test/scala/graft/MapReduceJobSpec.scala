@@ -98,22 +98,22 @@ class MapReduceJobSpec extends SparkSuite {
     assert(lines.sorted === expected.sorted)
   }
 
-  test("fileRecords reads whole files with path keys (worker.go:102-109 parity)") {
+  test("WholeFileSource reads whole files as records with path keys (worker.go:102-109 parity)") {
     val dir = Files.createTempDirectory("mrin")
     Files.writeString(dir.resolve("f1.txt"), "alpha beta")
     Files.writeString(dir.resolve("f2.txt"), "gamma")
-    val recs = MapReduceJob.fileRecords(spark, Seq(dir.toString)).collect()
-    assert(recs.length === 2)
-    assert(recs.forall(r => r.key.endsWith(".txt")))
+    val recs = spark.read.format("graft.sources.WholeFileSource").load(dir.toString)
+      .select(col("path").as("key"), col("content").as("value")).as[KV].collect()
+    assert(recs.map(_.key).toSet === Set("f1.txt", "f2.txt").map(n => dir.resolve(n).toString))
     assert(recs.map(_.value).toSet === Set("alpha beta", "gamma"))
   }
 
-  test("writeTextOutput emits 'key value' lines (worker.go:92 parity)") {
-    val out = Files.createTempDirectory("mrout").toString + "/wc"
-    val res = MapReduceJob.run(spark.createDataset(docs), wcMap, wcReduce)
-    MapReduceJob.writeTextOutput(res, out, nReduce = 3)
-    val lines = spark.read.text(out).as[String].collect().toSet
-    assert(lines === naiveWc(docs).map { case (k, v) => s"$k $v" }.toSet)
+  test("KvTextSink commits run output as 'key value' lines (worker.go:92 parity)") {
+    val out = Files.createTempDirectory("mrout").resolve("wc").toString
+    MapReduceJob.run(spark.createDataset(docs), wcMap, wcReduce, nReduce = 3).toDF()
+      .write.format("graft.sources.KvTextSink").mode("append").save(out)
+    assert(MapReduceJobSpec.mrOut(out).values.flatten.toSet ===
+      naiveWc(docs).map { case (k, v) => s"$k $v" }.toSet)
   }
 
   test("task failure is retried and output matches no-fault run (crash.go analog)") {
@@ -160,12 +160,19 @@ class MapReduceJobSpec extends SparkSuite {
     assert(gotAssoc === naiveWc(docs))
   }
 
-  test("writeTextOutput byKey hash-places lines by key (worker.go:113-117 parity)") {
-    val out = Files.createTempDirectory("mrout").toString + "/wc_bykey"
-    val res = MapReduceJob.run(spark.createDataset(docs), wcMap, wcReduce)
-    MapReduceJob.writeTextOutput(res, out, nReduce = 3, byKey = true)
-    val lines = spark.read.text(out).as[String].collect().toSet
-    assert(lines === naiveWc(docs).map { case (k, v) => s"$k $v" }.toSet)
+  test("KvTextSink files hold run output hash-placed by key (worker.go:113-117 parity)") {
+    // mr-out-r holds exactly the keys with pmod(hash(key), nReduce) = r
+    val out = Files.createTempDirectory("mrout").resolve("wc_bykey").toString
+    MapReduceJob.run(spark.createDataset(docs), wcMap, wcReduce, nReduce = 3).toDF()
+      .write.format("graft.sources.KvTextSink").mode("append").save(out)
+    val placed = MapReduceJobSpec.mrOut(out).toSeq.flatMap { case (f, ls) =>
+      ls.map(l => (l.split(" ")(0), f.stripPrefix("mr-out-").toInt))
+    }
+    assert(placed.map(_._1).toSet === naiveWc(docs).keySet)
+    val want = placed.toDF("key", "r")
+      .select(col("key"), pmod(hash(col("key")), lit(3)).as("want")).as[(String, Int)]
+      .collect().toMap
+    assert(placed.forall { case (k, r) => want(k) == r }, placed)
   }
 
   test("ServiceLoader plugin ABI: name-resolved apps match closure runs (mrworker.go:34-51 parity)") {
@@ -265,4 +272,11 @@ class MapReduceJobSpec extends SparkSuite {
 object MapReduceJobSpec {
   /** Plan traversal that descends into adaptive query stages. */
   object Plans extends AdaptiveSparkPlanHelper
+
+  /** Each committed mr-out file's lines, by file name. */
+  def mrOut(dir: String): Map[String, Seq[String]] =
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("mr-out-"))
+      .map(f => f.getName -> Files.readAllLines(f.toPath, java.nio.charset.StandardCharsets.UTF_8)
+        .toArray(Array.empty[String]).toSeq)
+      .toMap
 }
