@@ -28,11 +28,14 @@ final case class KV(key: String, value: String)
   *     the reference (map-task concatenation order) — deterministic apps
   *     must sort values themselves (reference: mrapps/indexer.go:37,
   *     mrapps/crash.go:48-52).
-  *   - `nReduce` is the number of reduce tasks, as R is in the
-  *     reference (mrmaster.go:23): the map output is hash-partitioned by
-  *     key into exactly `nReduce` partitions, each reduced in place and
-  *     returned as one output partition. It never changes grouping
-  *     results.
+  *   - In [[run]], `nReduce` is the number of reduce tasks, as R is in
+  *     the reference (mrmaster.go:23): the map output is
+  *     hash-partitioned by key into exactly `nReduce` partitions, each
+  *     reduced in place and returned as one output partition. In
+  *     [[runAssociative]] it is only the OUTPUT partitioning: the reduce
+  *     runs in `spark.sql.shuffle.partitions` tasks, and a second
+  *     exchange then hash-places the merged pairs into `nReduce`
+  *     partitions. Either way it never changes grouping results.
   *
   * Scale notes: a job is ONE shuffle, as in the reference — scan → map
   * → partition by hash(key) % nReduce → sort → group → reduce. A map
@@ -48,8 +51,8 @@ final case class KV(key: String, value: String)
   * combiner); at 100 TB this is the difference between shuffling every
   * pair and shuffling one pre-merged value per (partition, key). One
   * reduce task sorts one partition (spilling as needed) and holds one
-  * key's values at a time, so `nReduce` sizes the reduce side as R
-  * does: raise it with the data.
+  * key's values at a time, so in [[run]] `nReduce` sizes the reduce
+  * side as R does: raise it with the data.
   */
 object MapReduceJob {
 
@@ -79,9 +82,11 @@ object MapReduceJob {
 
   /** Combiner-enabled form for associative+commutative reducers.
     * `reduceGroups` runs as a typed Aggregator with partial (map-side)
-    * merge — the scalable path the reference lacks. The merged output is
-    * then hash-placed by key into `nReduce` partitions, as `run` places
-    * it.
+    * merge — the scalable path the reference lacks — in
+    * `spark.sql.shuffle.partitions` reduce tasks. The merged output is
+    * then hash-placed by key into `nReduce` partitions by a second
+    * exchange, so here `nReduce` sets the output partitioning (the
+    * mr-out-r files), not the reduce-task count.
     */
   def runAssociative(
       records: Dataset[KV],

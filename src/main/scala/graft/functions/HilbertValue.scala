@@ -49,27 +49,6 @@ object HilbertValue {
     d
   }
 
-  /** Inverse (d → xy) — spec-side adjacency/bijection checks. */
-  def d2xy(bits: Int, d0: Long): (Long, Long) = {
-    val n = 1L << bits
-    var x = 0L; var y = 0L
-    var t = d0
-    var s = 1L
-    while (s < n) {
-      val rx = 1L & (t / 2)
-      val ry = 1L & (t ^ rx)
-      if (ry == 0L) {
-        if (rx == 1L) { x = s - 1 - x; y = s - 1 - y }
-        val tmp = x; x = y; y = tmp
-      }
-      x += s * rx
-      y += s * ry
-      t /= 4
-      s <<= 1
-    }
-    (x, y)
-  }
-
   def hilbert16(x: Long, y: Long): Long = xy2d(Bits, x, y)
 
   def register(spark: SparkSession): Unit =

@@ -168,48 +168,6 @@ object Multimodal {
     (64 + (h % 512).toInt.abs, 64 + ((h >> 9) % 512).toInt.abs, 1 + (h % 3).toInt.abs)
   }
 
-  /** Real image RESIZE via the JVM's Graphics2D: decode with ImageIO,
-    * scale with bilinear interpolation, re-encode as PNG. Returns None
-    * for undecodable payloads (callers keep the original). This is the
-    * preprocessing normalization step (fixed training resolution) run
-    * where decode runs — inside the narrow partition-batched stage, so
-    * resized bytes replace originals in place and still never shuffle.
-    */
-  def resizeImage(payload: Array[Byte], w: Int, h: Int): Option[Array[Byte]] =
-    try {
-      Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))).map { src =>
-        val dst = new java.awt.image.BufferedImage(w, h,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        val g = dst.createGraphics()
-        g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-          java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-        g.drawImage(src, 0, 0, w, h, null)
-        g.dispose()
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(dst, "png", bos)
-        bos.toByteArray
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Normalize every image payload to `w`×`h` (audio/video and
-    * undecodable payloads pass through untouched). Narrow stage —
-    * same batched-iterator shape as [[extractFeatures]].
-    */
-  def resizeImages(ds: Dataset[MediaRecord], w: Int = 224, h: Int = 224,
-      batchSize: Int = 64): Dataset[MediaRecord] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { r =>
-          if (r.media_type != "image") r
-          else resizeImage(r.payload, w, h)
-            .map(p => r.copy(payload = p)).getOrElse(r)
-        }
-      }
-    }
-  }
-
   /** STUB frame sampler — every k-th 64-byte slice as a "frame". */
   def frameSampleStub(payload: Array[Byte], k: Int): Seq[Array[Byte]] =
     payload.grouped(64).zipWithIndex.collect {
@@ -336,9 +294,8 @@ object Multimodal {
     val keys = synthesize(graft.core.Tables.documents(s, d))
       .filter(_.media_type == "image")
       .map { r =>
-        val ah = aHash(r.payload)
-        (ah.map(b => f"ahash:$b%016x").getOrElse("raw:" + md5Hex(r.payload)),
-          r.doc_id, if (ah.isDefined) 1L else 0L)
+        val key = imageKeyOf(r.payload)
+        (key, r.doc_id, if (key.startsWith("ahash:")) 1L else 0L)
       }
       .toDF("key", "doc_id", "decoded")
     keys.agg(

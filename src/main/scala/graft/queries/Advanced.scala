@@ -488,7 +488,7 @@ object Advanced {
     * synthetic parent edge (key → key-5), rolled up per root. The
     * anchor/recursive-step SQL is engine-portable; Spark executes the
     * loop as iterated distributed joins (same shape as
-    * [[Cluster.connectedComponents]], driven by the engine itself).
+    * [[Cluster.clustersOf]], driven by the engine itself).
     */
   def recursiveCte(s: SparkSession, d: String): DataFrame = {
     Tables.nation(s, d).createOrReplaceTempView("nation_r")

@@ -32,26 +32,18 @@ import graft.core.Checkpoints.StableOps
   * fused onto the converged labels with one co-partitioned count, and
   * the result is a frame over a single ExistingRDD leaf.
   *
+  * Deep graphs (chains: citation/link graphs, session stitching) cost
+  * diameter + 1 rounds here. Large-star/small-star contraction (Kiveris
+  * et al., "Connected Components in MapReduce and Beyond") bounds that
+  * at O(log n) rounds; should a workload need it, it belongs inside
+  * this same RDD fixpoint, not in a DataFrame loop.
+  *
   * Spark 4's recursive CTE (see Advanced.recursiveCte) could express
   * the closure too, but it materializes reachable-PAIR state — O(k²)
-  * per k-node cluster — where both algorithms here carry one label per
+  * per k-node cluster — where the fixpoint here carries one label per
   * node; keep CTE recursion for hierarchies, not components.
   */
 object Cluster {
-
-  /** Connected components of an undirected graph. Input: first two
-    * columns of `edges` are the (src, dst) endpoint ids (integral;
-    * rows with a null endpoint are dropped). Output: (node,
-    * cluster_id) — one row per node incident to at least one edge,
-    * cluster_id = min node id in the component (deterministic,
-    * partition-layout-independent) — as a frame over the converged
-    * label RDD of [[componentLabels]].
-    */
-  def connectedComponents(edges: DataFrame): DataFrame =
-    edges.sparkSession.createDataFrame(
-      componentLabels(edges).map { case (n, l) => Row(n, l) },
-      StructType(Seq(StructField("node", LongType, nullable = false),
-        StructField("cluster_id", LongType, nullable = false))))
 
   /** Min-label propagation run to its fixpoint over pair RDDs: the
     * converged (node, min node id of its component) table,
@@ -106,81 +98,6 @@ object Cluster {
     prev.foreach(_.unpersist(false))
     adj.unpersist(false)
     labels
-  }
-
-  /** Connected components by alternating large-star / small-star
-    * contraction — O(log n) rounds regardless of graph DIAMETER
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond"),
-    * vs [[connectedComponents]]'s O(diameter) rounds. Near-dup graphs
-    * are shallow (label propagation wins on constants); chains —
-    * citation/link graphs, session stitching — are deep: use this one.
-    * Each round is two key-partitioned agg+join passes, linear in |E|.
-    *
-    * large-star (per node u): attach every neighbor v > u to
-    * m = min(neighbors ∪ u). small-star (per node u over min-oriented
-    * edges): attach u and all smaller neighbors to their minimum.
-    * Fixpoint = disjoint stars centered at component minima.
-    */
-  def connectedComponentsLogStar(edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    val Seq(c0, c1) = edges.columns.take(2).toSeq
-    var e = edges.select(col(c0).cast("long").as("u"), col(c1).cast("long").as("v"))
-      .filter(col("u") =!= col("v")).distinct().stable
-    val nodes = e.select(col("u").as("node")).union(e.select(col("v").as("node")))
-      .distinct().stable
-
-    // fixpoint signature: (|E|, Σu, Σv) — invariant exactly at the
-    // star state (rounds strictly shrink the paper's potential).
-    def sig(df: DataFrame): String = {
-      val r = df.agg(count(lit(1)),
-        sum(col("u").cast("decimal(38,0)")), sum(col("v").cast("decimal(38,0)"))).head()
-      s"${r.getLong(0)}|${r.getDecimal(1)}|${r.getDecimal(2)}"
-    }
-
-    def largeStar(es: DataFrame): DataFrame = {
-      val sym = es.union(es.select(col("v").as("u"), col("u").as("v")))
-      val m = sym.groupBy("u").agg(min("v").as("minv"))
-        .select(col("u"), least(col("minv"), col("u")).as("m"))
-      sym.join(m, "u").where(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v")).distinct()
-    }
-
-    def smallStar(es: DataFrame): DataFrame = {
-      val o = es.select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-      val m = o.groupBy("u").agg(min("v").as("m"))
-      val rest = o.join(m, "u").where(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-      rest.union(m.select(col("u"), col("m").as("v"))).distinct()
-    }
-
-    var s = sig(e)
-    var it = 0
-    var done = e.isEmpty
-    // sig() already materializes every round through the persisted
-    // frame; the reliable checkpoint only bounds plan depth (each round
-    // re-references its predecessor ~5× through the two star passes),
-    // so stride 2 halves the checkpoint truncations — ≤ ~25 subtree
-    // refs between cuts, same converged output. The ckpt decision is
-    // taken AFTER the convergence test so the frame the caller receives
-    // is always file-backed (a persist-round exit would otherwise leave
-    // its recompute path chained to retired localCheckpoint blocks).
-    val retired = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    while (!done && it < maxIter) {
-      val raw = smallStar(largeStar(e)).persist()
-      val s2 = sig(raw)
-      done = s2 == s
-      s = s2
-      val isCkpt = it % 2 == 1 || done || it == maxIter - 1
-      val e2 = if (isCkpt) raw.stableLoop else raw
-      retired += e
-      if (isCkpt) { retired.foreach(_.unpersist(false)); retired.clear() }
-      e = e2
-      it += 1
-    }
-    retired.foreach(_.unpersist(false))
-    nodes.join(
-        e.groupBy("u").agg(min("v").as("cluster_id")).withColumnRenamed("u", "node"),
-        Seq("node"), "left")
-      .select(col("node"), coalesce(col("cluster_id"), col("node")).as("cluster_id"))
   }
 
   /** (doc_id, cluster_id, n_docs) from a (doc_a, doc_b) edge list —

@@ -49,9 +49,9 @@ object Corpus {
   /** Per-doc repetition signals + keep gate: fraction of tokens that
     * are the single most frequent token, fraction of duplicate word
     * 2-grams / 3-grams. Pure per-row map (array lambdas, no shuffle).
-    * Per-row cost is O(distinct·n) for the top-token scan — fine for
-    * bounded documents; for mega-docs prefer the explode + groupBy
-    * (doc, token) twin, which is strictly linear.
+    * Per-row cost is O(distinct·n) for the top-token scan — linear in
+    * n for a bounded vocabulary (CorpusSpec runs a 100k-token
+    * document through it).
     */
   def qualityRepetition(s: SparkSession, d: String): DataFrame =
     qualityRepetitionOn(Tables.documents(s, d))
@@ -63,26 +63,6 @@ object Corpus {
     repetitionFromTopTf(documents
       .select(col("doc_id"), toks(col("text")).as("ws"))
       .select(col("doc_id"), ws, topTf.as("top_tf")))
-  }
-
-  /** LINEAR twin of [[qualityRepetitionOn]] for mega-documents: the
-    * top-token frequency comes from explode + groupBy(doc_id, tok) +
-    * per-doc max — strictly O(n) rows through two partial-agg'd
-    * shuffles — instead of the per-row O(distinct·n) array scan. The
-    * 2/3-gram signals stay per-row (array_distinct is O(n) already).
-    * Spec-checked identical to the quadratic form, including on a
-    * planted 100k-token document (CorpusSpec).
-    */
-  def qualityRepetitionLinearOn(documents: DataFrame): DataFrame = {
-    val base = documents.select(col("doc_id"), toks(col("text")).as("ws"))
-    val topTf = base
-      .select(col("doc_id"), explode_outer(col("ws")).as("tok"))
-      .filter(col("tok").isNotNull)
-      .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
-      .groupBy("doc_id").agg(max("c").cast("int").as("top_tf"))
-    repetitionFromTopTf(
-      base.join(topTf, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("ws"), col("top_tf")))
   }
 
   /** Shared tail over (doc_id, ws, top_tf): the 2/3-gram duplicate
@@ -377,8 +357,11 @@ object Corpus {
   // dedup (50 BPE tokens ≈ 20-25 words; 20 keeps short docs in play).
   private val SpanLen = 20
 
-  /** Distinct SpanLen-token windows of a token-array attribute (same
-    * materialized-attribute contract as Dedup.shinglesFromTokens).
+  /** Distinct SpanLen-token windows of a token-array ATTRIBUTE. `ws`
+    * must be a materialized column, not an inline expression: the lambda
+    * references it per window, and higher-order functions re-evaluate
+    * non-attribute subtrees on every call (no CSE inside lambdas) —
+    * inlining the tokenizer here is O(words^2) per document.
     */
   def spansFromTokens(ws: Column): Column =
     when(size(ws) >= SpanLen,

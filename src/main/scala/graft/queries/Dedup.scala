@@ -23,21 +23,8 @@ object Dedup {
   def tokensCol(text: Column): Column =
     filter(split(text, Parity.TokenRe), w => length(w) > 0)
 
-  /** Distinct word 3-gram shingles from a TOKEN-ARRAY ATTRIBUTE. `ws`
-    * must be a materialized column, not an inline expression: the lambda
-    * references it per shingle, and higher-order functions re-evaluate
-    * non-attribute subtrees on every call (no CSE inside lambdas) —
-    * inlining the tokenizer here is O(words^2) per document.
-    */
-  def shinglesFromTokens(ws: Column): Column =
-    when(size(ws) >= 3,
-      array_distinct(transform(sequence(lit(1), size(ws) - 2),
-        i => concat_ws(" ", element_at(ws, i), element_at(ws, i + 1), element_at(ws, i + 2)))))
-      .otherwise(array().cast("array<string>"))
-
   /** (doc_id, sh): one compiled pass per document via the native
-    * [[graft.functions.WordShingles]] expression (the declarative
-    * twin [[shinglesFromTokens]] stays for spec cross-checks).
+    * [[graft.functions.WordShingles]] expression.
     */
   def shingleDocs(s: SparkSession, d: String): DataFrame = {
     graft.functions.WordShingles.register(s)
@@ -495,29 +482,6 @@ object Dedup {
   private val hashA = array(Array.tabulate(NumHashes)(i => lit(2L * i + 1)).toIndexedSeq: _*)
   private val hashB = array(Array.tabulate(NumHashes)(i => lit((2654435761L * (i + 1)) % P)).toIndexedSeq: _*)
 
-  /** Bands band-bucket keys per doc in ONE pass over the shingle set:
-    * aggregate(shingle-hashes, [P]*48, running zip_with min, finish =
-    * per band the polynomial fold acc := (acc·31 + sig) mod P seeded
-    * with band+1 — all arithmetic < 2^36, so DuckDB reproduces it with
-    * plain BIGINT ops. The merge and finish lambdas only touch bound
-    * lambda variables — nothing is re-evaluated per iteration (the
-    * trap that made the first cut O(48x) slower). An empty shingle set
-    * has no signature and gets no buckets, as in the native expression.
-    */
-  def minhashBuckets(sh: Column): Column = {
-    val hs = transform(sh,
-      x => conv(substring(md5(x), 1, 12), 16, 10).cast("long") % P)
-    when(size(sh) > 0, aggregate(hs,
-      array_repeat(lit(P), NumHashes),
-      (acc, h) => zip_with(acc,
-        zip_with(hashA, hashB, (a, b) => (a * h + b) % P),
-        (x, y) => least(x, y)),
-      acc => transform(sequence(lit(0), lit(Bands - 1)),
-        b => aggregate(slice(acc, b * RowsPerBand + 1, lit(RowsPerBand)),
-          b.cast("long") + 1, (a, x) => (a * 31 + x) % P))))
-      .otherwise(array().cast("array<bigint>"))
-  }
-
   /** MinHash + LSH banding near-dedup — the scale path: per doc compute
     * a 48-int signature (one pass over shingles), hash 16 bands of 3
     * rows into bucket keys, shuffle on (band, bucket); only docs
@@ -603,25 +567,41 @@ object Dedup {
     * broadcast join while either side fits, a shuffle join at scale,
     * picked by the planner and AQE — and the two shingle sets regroup
     * by pair. Only candidate documents are fetched, shingled and
-    * shuffled: O(candidates), never O(corpus). Both counts are
-    * symmetric in the pair, so the regroup needs no ordering.
+    * shuffled: O(candidates), never O(corpus). Every consumer derives
+    * values symmetric in the pair (counts, Jaccard, containment, b-bit
+    * agreement), so the regroup needs no ordering; `sets` holds the
+    * two regrouped sets for consumers that derive more from them.
+    *
+    * A doc_id repeated in `sets` would put more than two sets into a
+    * group and silently score the wrong pair, so such a group fails
+    * the job, naming the pair.
     */
-  private def verifyOverlap(cand: DataFrame, sets: DataFrame, shingles: Column): DataFrame =
+  private def verifyOverlap(cand: DataFrame, sets: DataFrame, shingles: Column): DataFrame = {
+    val n = size(col("sets"))
     cand.select(col("doc_a"), col("doc_b"), explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
       .join(sets, "doc_id")
       .select(col("doc_a"), col("doc_b"), shingles.as("sh"))
       .groupBy("doc_a", "doc_b")
       .agg(collect_list(col("sh")).as("sets"))
       .select(col("doc_a"), col("doc_b"),
+        when(n === 2, col("sets")).otherwise(raise_error(concat(
+          lit("verify pair (doc_a, doc_b) = ("), col("doc_a").cast("string"), lit(", "),
+          col("doc_b").cast("string"), lit(") holds "), n.cast("string"),
+          lit(" shingle sets, not 2: a doc_id repeats in the input")))).as("sets"))
+      .select(col("doc_a"), col("doc_b"), col("sets"),
         size(array_intersect(col("sets")(0), col("sets")(1))).as("common"),
         size(col("sets")(0)).as("na"), size(col("sets")(1)).as("nb"))
+  }
 
-  /** `(doc_a, doc_b, jac)` from [[verifyOverlap]]'s counts — the one
-    * IEEE Jaccard expression the DuckDB oracle reproduces.
+  /** Exact Jaccard over [[verifyOverlap]]'s counts — the one IEEE
+    * expression the DuckDB oracle reproduces.
     */
+  private val jaccard: Column =
+    col("common").cast("double") / (col("na") + col("nb") - col("common"))
+
+  /** `(doc_a, doc_b, jac)` from [[verifyOverlap]]'s counts. */
   private def jaccardOf(overlap: DataFrame): DataFrame =
-    overlap.select(col("doc_a"), col("doc_b"),
-      (col("common").cast("double") / (col("na") + col("nb") - col("common"))).as("jac"))
+    overlap.select(col("doc_a"), col("doc_b"), jaccard.as("jac"))
 
   /** Distinct in-bucket candidate pairs `(doc_a, doc_b, nmin, nmax)`
     * from the LSH band buckets — the pre-verification pair stream every
@@ -650,9 +630,11 @@ object Dedup {
     // Two-stage expansion (posexplode bucket, explode tail slice), same
     // as ngramScored: per-row memory stays O(k) for a k-doc bucket
     // instead of the O(k^2) array a single flatten-explode builds. Hot
-    // buckets here = exact-duplicate mega-groups (identical docs share
-    // all bands) — a real hazard at 100 TB, which is why pipelines run
-    // dedup_exact first; this keeps the operator memory-safe either way.
+    // buckets here = exact-duplicate mega-groups: k identical docs share
+    // all 16 bands, so they still expand to 16·k(k−1)/2 pair rows before
+    // the distinct — and Cluster.dedupKeepMinhash runs no exact-dedup
+    // pass first. ROADMAP item 5 tracks collapsing exact copies before
+    // banding; the two-stage expansion only bounds per-row memory.
     bands
       .groupBy("band", "bucket")
       .agg(collect_list(struct(col("doc_id"), col("n"))).as("ids"))
@@ -749,15 +731,10 @@ object Dedup {
           greatest(col("a"), b).as("doc_b")))).as("p"))
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .distinct()
-    cand
-      .join(docs.select(col("doc_id").as("doc_a"), col("sh").as("sa")), "doc_a")
-      .join(docs.select(col("doc_id").as("doc_b"), col("sh").as("sb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        size(array_intersect(col("sa"), col("sb"))).as("common"),
-        size(col("sa")).as("na"), size(col("sb")).as("nb"))
+    verifyOverlap(cand, docs, col("sh"))
       .select(col("doc_a"), col("doc_b"),
         (col("common").cast("double") / least(col("na"), col("nb"))).as("cont"),
-        (col("common").cast("double") / (col("na") + col("nb") - col("common"))).as("jac"))
+        jaccard.as("jac"))
       .filter(col("cont") >= ContainTau)
       .select(col("doc_a"), col("doc_b"),
         round(col("cont"), 4).as("cont"), round(col("jac"), 4).as("jac"))
@@ -939,9 +916,9 @@ object Dedup {
     *
     * Plan: explode once; df via one shingle-keyed agg; per-doc rank via
     * a doc_id-partitioned window; candidates via the group-per-shingle
-    * two-stage O(k) expansion (ngramScored's shape); verify via two
-    * doc_id joins against the same shingled subplan (exchange-reused).
-    * Every stage is linear in corpus + candidate volume.
+    * two-stage O(k) expansion (ngramScored's shape); verify via the
+    * shared [[verifyOverlap]] regroup. Every stage is linear in corpus
+    * + candidate volume.
     */
   def dedupSimilarityJoin(s: SparkSession, d: String): DataFrame =
     similarityJoin(Tables.documents(s, d), SimJoinTau)
@@ -954,15 +931,7 @@ object Dedup {
     val docs = nonEmptyShingles(documents)
     val ex = docs.select(col("doc_id"), size(col("sh")).as("nsh"),
       explode(col("sh")).as("shingle"))
-    val cand = ssjCandidates(ssjPrefix(ex, tau), tau)
-    cand
-      .join(docs.select(col("doc_id").as("doc_a"), col("sh").as("sa")), "doc_a")
-      .join(docs.select(col("doc_id").as("doc_b"), col("sh").as("sb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        size(array_intersect(col("sa"), col("sb"))).as("common"),
-        size(col("sa")).as("na"), size(col("sb")).as("nb"))
-      .select(col("doc_a"), col("doc_b"),
-        (col("common").cast("double") / (col("na") + col("nb") - col("common"))).as("jac"))
+    jaccardOf(verifyOverlap(ssjCandidates(ssjPrefix(ex, tau), tau), docs, col("sh")))
       .filter(col("jac") >= tau)
       .select(col("doc_a"), col("doc_b"), round(col("jac"), 4).as("jac"))
   }
@@ -1316,33 +1285,25 @@ object Dedup {
   def dedupMinhashBbitOn(documents: DataFrame): DataFrame = {
     graft.functions.MinHashBuckets.register(documents.sparkSession, NumHashes, Bands)
     val docs = nonEmptyShingles(documents)
-    // the bucket fold minus the band finish: the raw 48 minima
-    val sig = aggregate(
-      transform(col("sh"),
-        x => conv(substring(md5(x), 1, 12), 16, 10).cast("long") % P),
-      array_repeat(lit(P), NumHashes),
-      (acc, h) => zip_with(acc,
-        zip_with(hashA, hashB, (a, b) => (a * h + b) % P),
-        (x, y) => least(x, y)))
-    // low bit of each minimum, MSB-first fold → bit j weighs 2^(47-j)
-    val mask = aggregate(transform(sig, v => pmod(v, lit(2L))),
+    // the bucket fold minus the band finish: the raw 48 minima of `sh`,
+    // then the low bit of each, MSB-first → bit j weighs 2^(47-j)
+    def mask(sh: Column): Column = aggregate(
+      transform(aggregate(
+        transform(sh, x => conv(substring(md5(x), 1, 12), 16, 10).cast("long") % P),
+        array_repeat(lit(P), NumHashes),
+        (acc, h) => zip_with(acc,
+          zip_with(hashA, hashB, (a, b) => (a * h + b) % P),
+          (x, y) => least(x, y))), v => pmod(v, lit(2L))),
       lit(0L), (a, b) => a * 2 + b)
-    val withMask = docs.withColumn("mask", mask)
-    val cand = minhashCandidateSizes(docs).select("doc_a", "doc_b")
-    cand
-      .join(withMask.select(col("doc_id").as("doc_a"), col("sh").as("sa"),
-        col("mask").as("ma")), "doc_a")
-      .join(withMask.select(col("doc_id").as("doc_b"), col("sh").as("sb"),
-        col("mask").as("mb")), "doc_b")
+    verifyOverlap(minhashCandidateSizes(docs).select("doc_a", "doc_b"), docs, col("sh"))
       .select(col("doc_a"), col("doc_b"),
-        expr(s"$NumHashes - bit_count(ma ^ mb)").as("bit_matches"),
-        size(array_intersect(col("sa"), col("sb"))).as("common"),
-        size(col("sa")).as("na"), size(col("sb")).as("nb"))
+        (lit(NumHashes) - bit_count(mask(col("sets")(0)).bitwiseXOR(mask(col("sets")(1)))))
+          .as("bit_matches"),
+        jaccard.as("jac"))
       .select(col("doc_a"), col("doc_b"), col("bit_matches").cast("long").as("bit_matches"),
         round(greatest(lit(0.0),
           lit(2.0) * col("bit_matches") / NumHashes - 1.0), 4).as("jac_bbit"),
-        round(col("common").cast("double")
-          / (col("na") + col("nb") - col("common")), 4).as("jac"))
+        round(col("jac"), 4).as("jac"))
       .orderBy(col("jac").desc, col("doc_a").asc, col("doc_b").asc)
       .limit(50)
   }
@@ -1372,9 +1333,9 @@ object Dedup {
 
   // ---- DuckDB oracle fragments for the MinHash family ---------------
   // The whole signature pipeline is md5-derived + mod-P integer
-  // arithmetic (see minhashBuckets), so DuckDB reproduces every bucket
-  // bit-for-bit and the entire family sits under the driver's hash
-  // gate. These fragments are COMPOSED by string concatenation (never
+  // arithmetic (see graft.functions.MinHashBuckets), so DuckDB
+  // reproduces every bucket bit-for-bit and the entire family sits
+  // under the driver's hash gate. These fragments are COMPOSED by string concatenation (never
   // nested stripMargin — an embedded line starting with '|' would be
   // eaten by an outer stripMargin).
 
@@ -1449,7 +1410,8 @@ object Dedup {
   /** CTE chain `shm, mh, sig, bkt` — md5 shingle hashes → NumHashes-row
     * minimum signature → Bands polynomial band buckets per doc,
     * assuming a `sh(doc_id, shingles)` CTE is in scope. Constants
-    * mirror [[minhashBuckets]] exactly: m = first-48-md5-bits mod P,
+    * mirror [[graft.functions.MinHashBuckets]] exactly:
+    * m = first-48-md5-bits mod P,
     * h_j = ((2j+1)m + (2654435761(j+1) mod P)) mod P, bucket_b =
     * ((b+1)·31^r + Σ_k sig_{rb+k}·31^(r-1-k)) mod P (the closed form
     * of the seeded ·31 fold; DuckDB sums in HUGEINT so nothing wraps).

@@ -173,13 +173,8 @@ object Embeddings {
       pcaComponents(Tables.embeddings(s, d), PcaK, PcaIters)
     }
 
-  def pcaTopOn(embeddings: DataFrame, iters: Int = PcaIters): DataFrame = {
-    val s = embeddings.sparkSession
-    val comps = pcaComponents(embeddings, k = 1, iters)
-    pcaTopDf(s, comps)
-  }
-
-  private def pcaTopDf(s: SparkSession, comps: Seq[Array[Long]]): DataFrame = {
+  /** (dim, weight_micro) rows of the first component. */
+  private[graft] def pcaTopDf(s: SparkSession, comps: Seq[Array[Long]]): DataFrame = {
     import s.implicits._
     comps.headOption.getOrElse(Array.empty[Long])
       .zipWithIndex.map { case (w, i) => (i.toLong, w) }.toSeq
@@ -198,10 +193,7 @@ object Embeddings {
     * sequential BigInt reference and pairwise-orthogonal in
     * EmbeddingsSpec.
     */
-  def pcaTopkOn(embeddings: DataFrame, k: Int = PcaK, iters: Int = PcaIters): DataFrame =
-    pcaTopkDf(embeddings.sparkSession, pcaComponents(embeddings, k, iters))
-
-  private def pcaTopkDf(s: SparkSession, comps: Seq[Array[Long]]): DataFrame = {
+  private[graft] def pcaTopkDf(s: SparkSession, comps: Seq[Array[Long]]): DataFrame = {
     import s.implicits._
     comps.zipWithIndex.flatMap { case (u, c) =>
       u.zipWithIndex.map { case (w, i) => (c.toLong, i.toLong, w) }
@@ -321,11 +313,7 @@ object Embeddings {
     * units: ≤ 64·1e6·1e6 per vector) — hash-exact under the full
     * DuckDB oracle, which retrains the identical integer chain.
     */
-  def embedProjectOn(embeddings: DataFrame, k: Int = PcaK,
-      iters: Int = PcaIters): DataFrame =
-    projectDf(embeddings, pcaComponents(embeddings, k, iters))
-
-  private def projectDf(embeddings: DataFrame, comps: Seq[Array[Long]]): DataFrame = {
+  private[graft] def projectDf(embeddings: DataFrame, comps: Seq[Array[Long]]): DataFrame = {
     val s = embeddings.sparkSession
     import s.implicits._
     if (comps.isEmpty) // empty corpus

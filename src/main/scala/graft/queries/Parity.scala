@@ -107,7 +107,9 @@ object Parity {
     *  3. run wc through the closure ABI with the combiner path;
     *  4. write through the DSv2 [[graft.sources.KvTextSink]] — real
     *     `mr-out-<r>` files, temp-file + atomic-rename commit — one
-    *     per reduce partition, which runAssociative hash-places by key
+    *     per OUTPUT partition: runAssociative reduces in
+    *     `spark.sql.shuffle.partitions` tasks, then hash-places the
+    *     merged pairs by key into nReduce = 5 partitions
     *     (worker.go:113-117 ihash%R parity);
     *  5. read the committed bytes back and split "key value" lines.
     *

@@ -23,13 +23,10 @@ import graft.core.Checkpoints.StableOps
 object Similarity {
 
   /** Compiled dot product (graft.functions.DotProduct — true codegen).
-    * The declarative twin [[dotLambda]] stays for spec cross-checks.
+    * Its declarative twin lives with the specs (DeclarativeTwins).
     */
   private def dot(a: Column, b: Column): Column =
     graft.functions.DotProduct.dotCol(a, b)
-
-  def dotLambda(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
   /** vec_id, v (double[]), nrm. */
   private def vecs(s: SparkSession, d: String): DataFrame = {
@@ -265,26 +262,6 @@ object Similarity {
   val AnnSeedBase = 0
   val NumTables = 4
   val PlanesPerTable = 8
-  private val Dim = 64
-  private def planeSeed(k: Int): Array[Double] =
-    Array.tabulate(Dim)(j => math.sin(k * Dim + j + 1.0))
-  private def plane(t: Int, p: Int): Array[Double] =
-    planeSeed(t * PlanesPerTable + p)
-  private def planeLit(t: Int, p: Int): Column =
-    array(plane(t, p).map(lit).toIndexedSeq: _*)
-
-  /** Signature of vector v in table t: 8 sign bits packed to an int.
-    * DECLARATIVE TWIN kept for the VectorOpsSpec bit-identity check —
-    * production paths use the native `hyperplane_sigs_*` expression
-    * (graft.functions.HyperplaneSigs), which computes all tables in
-    * one compiled pass instead of a ~5,000-node interpreted tree.
-    */
-  def declarativeAnnSigs(v: Column): Column =
-    array((0 until NumTables).map { t =>
-      (0 until PlanesPerTable).map { p =>
-        when(dot(v, planeLit(t, p)) > 0, lit(1 << p)).otherwise(lit(0))
-      }.reduce(_ + _)
-    }: _*)
 
   /** Registers both hyperplane signature families (≡ GraftExtensions). */
   def registerSigFunctions(s: SparkSession): Unit = {
@@ -521,29 +498,11 @@ object Similarity {
   // cos 0.45 while 6 tables push near-dup recall > 0.999. At a bigger
   // corpus, raise bits ≈ log2(n / wanted-bucket-size): bucket count
   // scales with the corpus, candidate count stays ∝ true near-dups.
+  // Plane seeds start past the ANN tables' 0..31 so the families are
+  // independent.
   val DedupSeedBase = 1000
   val DedupTables = 6
   val DedupBits = 12
-  // plane seeds offset past the ANN tables' 0..31 so the families are
-  // independent
-  /** Dev probe: the raw signature+explode stage (see tools/ProbeIncr). */
-  def probeBuckets(embeddings: DataFrame): DataFrame = {
-    registerSigFunctions(embeddings.sparkSession)
-    val all = embeddings
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    all.select(col("vec_id"),
-      posexplode_outer(call_function("hyperplane_sigs_dedup", col("v"))))
-      .toDF("vec_id", "table_id", "sig")
-  }
-
-  /** Declarative twin of `hyperplane_sigs_dedup` (VectorOpsSpec). */
-  def declarativeDedupSigs(v: Column): Column =
-    array((0 until DedupTables).map { t =>
-      (0 until DedupBits).map { p =>
-        when(dot(v, array(planeSeed(DedupSeedBase + t * DedupBits + p).map(lit).toIndexedSeq: _*)) > 0,
-          lit(1 << p)).otherwise(lit(0))
-      }.reduce(_ + _)
-    }: _*)
 
   /** Scale form of [[dedupEmbedding]]: hyperplane-LSH bucket candidates
     * + exact cosine verify — the minhashPairs shape for vectors. Corpus

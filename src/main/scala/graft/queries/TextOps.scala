@@ -64,7 +64,7 @@ object TextOps {
     * usual cheap pre-filters before expensive dedup/training.
     */
   def qualityScore(s: SparkSession, d: String): DataFrame = {
-    val ws = col("ws") // materialized token attribute (see shinglesFromTokens note)
+    val ws = col("ws") // materialized token attribute (see Corpus.spansFromTokens note)
     val nTok = size(ws)
     val sumLen = aggregate(transform(ws, w => length(w)), lit(0), (a, x) => a + x)
     val punct = length(regexp_replace(col("text"), "[\\p{L}\\p{N}\\s]", ""))

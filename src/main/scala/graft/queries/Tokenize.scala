@@ -60,7 +60,7 @@ object Tokenize {
     * flush INSIDE the fold (the sentinel can never equal a merge
     * symbol — symbols are letter runs), so the finish step is a single
     * `.getField("out")` reference. That keeps the expression tree
-    * LINEAR when merges compose (bpeEncodeOn chains NMerges of
+    * LINEAR when merges compose (bpeEncodeWith chains NMerges of
     * these); a finish that referenced the fold three times grows the
     * tree 3^N-fold and kills the driver at plan build.
     */
@@ -194,14 +194,9 @@ object Tokenize {
     * distinct word, not once per token), then per-word symbol counts
     * join back to the per-doc word stream by word. The merge chain is
     * nMerges nested `aggregate` folds — plan-time composition, still
-    * one map over the vocab.
+    * one map over the vocab. `merges` is an already-trained merge
+    * list (the serve path).
     */
-  def bpeEncodeOn(documents: DataFrame, nMerges: Int = NMerges): DataFrame =
-    bpeEncodeWith(documents,
-      bpeMergesOn(documents, nMerges).collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq) // bounded: nMerges rows
-
-  /** Encode with an already-trained merge list (the serve path). */
   def bpeEncodeWith(documents: DataFrame,
       merges: Seq[(String, String)]): DataFrame = {
     // collapse the token stream to (lang, word, f) BEFORE the join —

@@ -105,33 +105,6 @@ object Unigram {
     docs.select(explode(Dedup.tokensCol(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("f"))
 
-  /** Seed vocabulary: every substring up to [[MaxPieceLen]] weighted by
-    * word frequency; singles always kept (segmentability), multis
-    * gated at [[MinFreq]] and capped at [[SeedCap]].
-    */
-  private[graft] def seedPieces(wf: Seq[(String, Long)]): Seq[(String, Long)] = {
-    val subCounts = scala.collection.mutable.HashMap.empty[String, Long]
-    wf.foreach { case (w, f) =>
-      var i = 0
-      while (i < w.length) {
-        var j = i + 1
-        while (j <= math.min(w.length, i + MaxPieceLen)) {
-          val p = w.substring(i, j)
-          subCounts.update(p, subCounts.getOrElse(p, 0L) + f)
-          j += 1
-        }
-        i += 1
-      }
-    }
-    val singles = subCounts.iterator.filter(_._1.length == 1).toSeq
-    val multis = subCounts.iterator
-      .filter { case (p, c) => p.length > 1 && c >= MinFreq }
-      .toSeq
-      .sortBy { case (p, c) => (-c, p) }
-      .take(SeedCap)
-    singles ++ multis
-  }
-
   /** The EM loop from a seed vocabulary — shared by the distributed
     * trainer and the spec's sequential reference; `countsOf` supplies
     * each round's Viterbi usage counts under the round's integer

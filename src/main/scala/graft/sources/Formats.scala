@@ -134,18 +134,6 @@ object Formats {
         round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
   }
 
-  /** Robust JSONL ingestion: malformed lines land in a corrupt-record
-    * column instead of failing the 100 TB job (PERMISSIVE mode). The
-    * quarantine split (good vs corrupt) is the standard landing-zone
-    * pattern; FormatsSpec exercises it with injected garbage.
-    */
-  def readJsonlRobust(s: SparkSession, dir: String, schema: StructType): DataFrame =
-    s.read
-      .schema(schema.add("_corrupt_record", StringType))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(dir)
-
   /** PERMISSIVE ingest of a feed containing malformed rows: one bad
     * row must never kill a 100 TB load. A deliberately corrupt shard
     * (unparseable numerics) is staged next to the good CSV; corrupt

@@ -277,15 +277,6 @@ object StreamingOps {
       .select(graft.functions.MisraGriesShareAggregator.frequentCandidates(k, share))
       .toDF("candidates")
 
-  /** Stream-static join: enrich the event stream with a static
-    * dimension (auto-broadcast — each micro-batch joins against the
-    * executor-cached dim, no shuffle of the stream side). The static
-    * side is re-read per batch, so slowly-changing dims pick up
-    * updates between batches.
-    */
-  def enrichWithDim(events: DataFrame, dim: DataFrame, key: String): DataFrame =
-    events.join(broadcast(dim), Seq(key), "left")
-
   /** Stream-stream interval join: clicks attribute to the impression
     * of the same user at most `windowMin` minutes earlier. Both sides
     * carry watermarks and the join condition bounds event-time distance,
@@ -461,58 +452,6 @@ object StreamingOps {
       .transformWithState(new RunningCountProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
         org.apache.spark.sql.streaming.OutputMode.Update())
-  }
-
-  final case class SessionState(start: Long, last: Long, n: Long, sum: Double)
-  final case class SessionOut(user_id: Long, start_s: Long, n: Long, sum_val: Double)
-
-  /** Custom sessionization via flatMapGroupsWithState with an
-    * event-time timeout: state per user accumulates until no event
-    * arrives within `gapSec` of the watermark, then the closed session
-    * is EMITTED and the state dropped. Unlike `session_window` this
-    * exposes arbitrary per-session state (here count+sum; in a real
-    * pipeline: full feature vectors) — the general stateful-operator
-    * escape hatch. Input: (tsm timestamp, user_id long, value double);
-    * the watermark that drives timeouts is set here.
-    */
-  def customSessions(events: DataFrame, gapSec: Long): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("tsm", "10 minutes")
-      // the event-time column must survive into the stateful operator's
-      // input — projecting it away severs the watermark
-      .select(col("user_id"), col("tsm"), col("value"))
-      .as[(Long, java.sql.Timestamp, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user, rows, state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(SessionOut(user, s.start, s.n, s.sum))
-          } else {
-            val sorted = rows.toSeq.sortBy(_._2.getTime).map(r => (r._1, r._2.getTime / 1000, r._3))
-            var closed = List.empty[SessionOut]
-            var cur = state.getOption
-            sorted.foreach { case (_, ts, v) =>
-              cur match {
-                case Some(s) if ts - s.last <= gapSec =>
-                  cur = Some(s.copy(last = ts, n = s.n + 1, sum = s.sum + v))
-                case Some(s) =>
-                  closed ::= SessionOut(user, s.start, s.n, s.sum)
-                  cur = Some(SessionState(ts, ts, 1, v))
-                case None =>
-                  cur = Some(SessionState(ts, ts, 1, v))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp((s.last + gapSec) * 1000)
-            }
-            closed.reverseIterator
-          }
-      }
   }
 
   final case class AnomalyState(openHour: Long, openCount: Long,

@@ -26,11 +26,7 @@ class ClusterSpec extends SparkSuite {
   }
 
   private def ccOf(edges: Seq[(Long, Long)]): Map[Long, Long] =
-    Cluster.connectedComponents(edges.toDF("src", "dst"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-  private def ccStarOf(edges: Seq[(Long, Long)]): Map[Long, Long] =
-    Cluster.connectedComponentsLogStar(edges.toDF("src", "dst"))
+    Cluster.clustersOf(edges.toDF("src", "dst"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("cliques, cycles, and isolated pairs get min-id cluster labels") {
@@ -72,34 +68,27 @@ class ClusterSpec extends SparkSuite {
       Map(3L -> ((3L, 1L)), 7L -> ((7L, 1L))))
   }
 
-  test("logStar variant: cliques, cycles, pairs, self-loop-only input") {
+  test("a broom and a complete binary tree converge to a minimum id at their far ends") {
+    // broom: a 60-edge path whose minimum sits at the tip of a 30-leaf
+    // star hung off the far end; tree: 255 heap-numbered nodes whose
+    // minimum id is the last leaf — each label crosses the diameter
+    val path = (0L until 60L).map(i => (2000L + i, 2001L + i))
+    val star = (0L until 30L).map(i => (2060L, 1000L + i))
+    val tree = (2 to 255).map(k => (5000L + 255 - k / 2, 5000L + 255 - k))
+    val edges = path ++ star ++ tree
+    val got = ccOf(edges)
+    assert(got === unionFind(edges))
+    assert(got.values.toSet === Set(1000L, 5000L))
+  }
+
+  test("negative and extreme node ids label by their numeric minimum") {
     val edges = Seq[(Long, Long)](
-      (1, 2), (2, 3), (3, 1), (10, 11),
-      (20, 21), (21, 22), (22, 20), (20, 22),
-      (30, 31), (31, 32), (30, 32))
-    assert(ccStarOf(edges) === unionFind(edges))
-  }
-
-  test("logStar converges on a deep path in O(log n) rounds") {
-    // Path 0-..-60: diameter 60 >> maxIter 25 — only the star-contract
-    // algorithm can finish inside the round budget.
-    val edges = (0L until 60L).map(i => (i, i + 1))
-    val got = ccStarOf(edges)
-    assert(got.size === 61 && got.values.forall(_ === 0L))
-  }
-
-  test("logStar random graphs match union-find and label propagation (ScalaCheck)") {
-    val genEdges = Gen.listOfN(50,
-      Gen.zip(Gen.choose(0L, 24L), Gen.choose(0L, 24L)).suchThat(e => e._1 != e._2))
-    val res = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(8),
-      Prop.forAll(genEdges) { edges =>
-        edges.isEmpty || {
-          val uf = unionFind(edges)
-          ccStarOf(edges) == uf && ccOf(edges) == uf
-        }
-      })
-    assert(res.passed, res.status.toString)
+      (Long.MaxValue, Long.MaxValue - 1), (Long.MinValue, -1L), (-1L, 0L), (0L, 42L),
+      (7L, 7L), (-9L, Long.MaxValue - 5))
+    val got = ccOf(edges)
+    assert(got === unionFind(edges))
+    assert(got(Long.MaxValue) === Long.MaxValue - 1 && got(42L) === Long.MinValue &&
+      got(7L) === 7L && got(Long.MaxValue - 5) === -9L)
   }
 
   test("minhash-edged clusters equal ngram-edged clusters on synthetic near-dup corpora") {
@@ -366,17 +355,23 @@ class ClusterSpec extends SparkSuite {
   }
 
   test("spark.graft.checkpointDir switches lineage truncation to reliable checkpoint()") {
-    // a path graph forces several contraction rounds through .stable
     val edges = (0L until 12L).map(i => (i, i + 1))
     // checkpoint part files under a root (setCheckpointDir adds an app subdir)
     def rddFiles(f: java.io.File): Long =
       if (f.isDirectory) f.listFiles().map(rddFiles).sum
       else if (f.getName.startsWith("part-")) 1L else 0L
-    val base = ccStarOf(edges)
+    // dedupKeepCentralFrom cuts its scored edges with `.stable`; this
+    // star converges in one CC round, so only that cut can write files
+    val docs = Seq(1L, 2L, 3L, 5L, 9L).toDF("doc_id")
+    val star = Seq((1L, 5L, 0.9), (2L, 5L, 0.9), (3L, 5L, 0.9),
+      (1L, 2L, 0.6), (1L, 3L, 0.6), (2L, 3L, 0.6)).toDF("doc_a", "doc_b", "jac")
+    def kept(): Map[Long, Long] = Cluster.dedupKeepCentralFrom(docs, star)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val base = kept()
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     spark.conf.set("spark.graft.checkpointDir", dir)
     try {
-      assert(ccStarOf(edges) === base) // same labels through the reliable path
+      assert(kept() === base) // same survivors through the reliable path
       // the truncation really went through checkpoint(): files landed
       // under the configured root
       assert(rddFiles(new java.io.File(dir)) > 0, s"no checkpoint files under $dir")

@@ -23,27 +23,27 @@ class CorpusSpec extends SparkSuite {
     assert(df.count() === 500)
   }
 
-  test("qualityRepetition linear twin equals the per-row form, incl. a 100k-token doc") {
+  test("qualityRepetitionOn gates planted repetition, incl. a 100k-token doc") {
     val vocab = Vector("alpha", "bravo", "charlie", "delta", "echo", "foxtrot",
       "golf", "hotel", "india", "juliet", "kilo", "lima", "mike", "november",
       "oscar", "papa", "quebec", "romeo", "sierra", "tango")
     val r = new scala.util.Random(7) // seeded — deterministic corpus
-    val mega = Seq.fill(100000)(vocab(r.nextInt(vocab.size))).mkString(" ")
+    val megaToks = Seq.fill(100000)(vocab(r.nextInt(vocab.size)))
     val docs = Seq(
       (1L, "a a a a a b"),                       // top-token-heavy → gated
-      (2L, ""),                                  // token-less: null metrics
+      (2L, ""),                                  // token-less
       (3L, "one two three four five six seven eight nine ten"), // clean: top frac 0.1 ≤ gate
       (4L, "x y x y x y x y"),                   // duplicate-2-gram-heavy
-      (5L, mega))                                // the per-row-scan stress doc
+      (5L, megaToks.mkString(" ")))              // the per-row-scan stress doc
       .toDF("doc_id", "text")
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Seq[Any])] =
-      df.collect().map(r => r.getLong(0) -> r.toSeq.tail).toSeq.sortBy(_._1)
-    val quadratic = rows(Corpus.qualityRepetitionOn(docs))
-    val linear = rows(Corpus.qualityRepetitionLinearOn(docs))
-    assert(linear === quadratic)
+    val byId = Corpus.qualityRepetitionOn(docs).collect()
+      .map(r => r.getLong(0) -> r.toSeq.tail).toMap
     // the planted repetition patterns actually fire the gates
-    val byId = quadratic.toMap
     assert(byId(1L).last === 0 && byId(4L).last === 0 && byId(3L).last === 1)
+    // the mega doc's top-token fraction matches a local count
+    val topFrac = megaToks.groupBy(identity).values.map(_.size).max / 100000.0
+    assert(byId(5L).head === 100000)
+    assert(math.abs(byId(5L)(1).asInstanceOf[Double] - topFrac) < 1e-4, byId(5L))
   }
 
   test("registered quality_repetition matches the On-form (refactor guard)") {

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.queries.Dedup
+import graft.queries.{Cluster, Dedup}
 
 class DedupSpec extends SparkSuite {
   import spark.implicits._
@@ -23,7 +23,7 @@ class DedupSpec extends SparkSuite {
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     val declarative = corpus
       .select(col("doc_id"), Dedup.tokensCol(col("text")).as("ws"))
-      .select(col("doc_id"), array_sort(Dedup.shinglesFromTokens(col("ws"))).as("sh"))
+      .select(col("doc_id"), array_sort(DeclarativeTwins.shinglesFromTokens(col("ws"))).as("sh"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(native === declarative)
     assert(native(5L).isEmpty && native(4L).isEmpty) // <3 words → no shingles
@@ -40,7 +40,7 @@ class DedupSpec extends SparkSuite {
     // the native expression — buckets must be IDENTICAL, not just
     // collision-compatible (this is also what makes the DuckDB oracle
     // chain a bit-for-bit mirror).
-    val declarative = sh.select(col("doc_id"), Dedup.minhashBuckets(col("sh")).as("b"))
+    val declarative = sh.select(col("doc_id"), DeclarativeTwins.minhashBuckets(col("sh")).as("b"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(buckets === declarative)
     assert(buckets(0L).size === Dedup.Bands)
@@ -620,6 +620,167 @@ class DedupSpec extends SparkSuite {
             s"$name minhashScoredFromShingles($minJac)")
         }
       }
+  }
+
+  /** The message chain of the failure `df` raises when collected. */
+  private def failure(df: => org.apache.spark.sql.DataFrame): String = {
+    val e = intercept[Exception](df.collect())
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+  }
+
+  /** `word_shingles` of every row, as Scala sets keyed by doc id. */
+  private def shingleSets(docs: org.apache.spark.sql.DataFrame): Map[Long, Set[String]] = {
+    graft.functions.WordShingles.register(spark)
+    docs.select(col("doc_id"), expr("word_shingles(text)")).collect()
+      .map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
+  }
+
+  /** Spark's `round(x, 4)` on a double: HALF_UP at 4 decimals. */
+  private def round4(x: Double): Double =
+    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  test("a repeated doc_id fails every shingle-set verify, naming the pair") {
+    // doc 1 holds two texts: each verify group that contains doc 1
+    // would regroup three sets, and comparing two of them scored the
+    // exact copies 2 and 3 as 0.0 — so neither edge formed
+    val a = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"
+    val b = "one two three four five six seven eight nine ten eleven twelve thirteen"
+    val docs = Seq((1L, a), (1L, b), (2L, a), (3L, b)).toDF("doc_id", "text")
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "minhashScored" -> (() => Dedup.minhashScored(docs)),
+      "dedupKeepFrom" -> (() => Cluster.dedupKeepFrom(docs,
+        Dedup.minhashScored(docs, 0.6).filter(col("jac") >= 0.6).select("doc_a", "doc_b"))),
+      "similarityJoin" -> (() => Dedup.similarityJoin(docs, 0.6)),
+      "containmentSketchPairs" -> (() => Dedup.containmentSketchPairs(docs)),
+      "dedupMinhashBbitOn" -> (() => Dedup.dedupMinhashBbitOn(docs))
+    ).foreach { case (name, df) =>
+      val msg = failure(df())
+      assert(msg.contains("a doc_id repeats") && "\\(1, [23]\\)".r.findFirstIn(msg).isDefined,
+        s"$name: $msg")
+    }
+  }
+
+  test("exact copies under distinct doc_ids pass every guarded verify at full score") {
+    val a = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"
+    val b = "november oscar papa quebec romeo sierra tango uniform victor whiskey xray yankee"
+    val docs = Seq((1L, a), (2L, a), (3L, b), (4L, b)).toDF("doc_id", "text")
+    val copies = Set((1L, 2L), (3L, 4L))
+    assert(scoredRows(Dedup.minhashScored(docs)) === copies.map { case (x, y) => (x, y, 1.0) })
+    assert(scoredRows(Dedup.similarityJoin(docs, 0.6)) === copies.map { case (x, y) => (x, y, 1.0) })
+    val cont = Dedup.containmentSketchPairs(docs).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSet
+    assert(cont === copies.map { case (x, y) => (x, y, 1.0, 1.0) })
+    val bbit = Dedup.dedupMinhashBbitOn(docs).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(bbit === copies.map { case (x, y) => (x, y, Dedup.NumHashes.toLong) })
+    val kept = Cluster.dedupKeepFrom(docs,
+      Dedup.minhashScored(docs, 0.6).filter(col("jac") >= 0.6).select("doc_a", "doc_b"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    assert(kept.sorted === Seq(1L -> 2L, 3L -> 2L))
+  }
+
+  test("a doc_id repeated with identical text also fails the guarded verify") {
+    // every set in doc 1's groups is equal, so an unguarded verify
+    // scores 1.0 and looks right, while dedupKeepFrom keeps doc 1 twice
+    val a = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"
+    val docs = Seq((1L, a), (1L, a), (2L, a)).toDF("doc_id", "text")
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "minhashScored" -> (() => Dedup.minhashScored(docs)),
+      "dedupKeepFrom" -> (() => Cluster.dedupKeepFrom(docs,
+        Dedup.minhashScored(docs, 0.6).filter(col("jac") >= 0.6).select("doc_a", "doc_b"))),
+      "similarityJoin" -> (() => Dedup.similarityJoin(docs, 0.6)),
+      "containmentSketchPairs" -> (() => Dedup.containmentSketchPairs(docs)),
+      "dedupMinhashBbitOn" -> (() => Dedup.dedupMinhashBbitOn(docs))
+    ).foreach { case (name, df) =>
+      val msg = failure(df())
+      assert(msg.contains("a doc_id repeats") && "\\(1, [12]\\)".r.findFirstIn(msg).isDefined,
+        s"$name: $msg")
+    }
+  }
+
+  test("minhashScoredFromShingles, the pipelines' verify, fails on a repeated doc_id") {
+    val a = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"
+    val b = "one two three four five six seven eight nine ten eleven twelve thirteen"
+    graft.functions.WordShingles.register(spark)
+    val shingled = Seq((1L, a), (1L, b), (2L, a), (3L, b)).toDF("doc_id", "text")
+      .select(col("doc_id"), expr("word_shingles(text)").as("sh"))
+    Seq(0.0, 0.6).foreach { minJac =>
+      val msg = failure(Dedup.minhashScoredFromShingles(shingled, minJac))
+      assert(msg.contains("a doc_id repeats") && "\\(1, [23]\\)".r.findFirstIn(msg).isDefined,
+        s"minJac $minJac: $msg")
+    }
+  }
+
+  test("containment sketch verify: cont = common / least(na, nb) in either id order (Scala set recompute)") {
+    // every doc has at most ContainK shingles, so each sketch is the
+    // whole set and every overlapping pair is a candidate
+    val small = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
+    val filler = "kilo lima mike november oscar papa quebec romeo sierra tango uniform victor"
+    val docs = Seq(
+      (1L, s"$small $filler"),                            // the superset holds the smaller id
+      (2L, small),                                        // cont 1.0 over nb
+      (3L, s"$filler whiskey xray"),                      // cont 10/12 over nb
+      (4L, "alpha bravo charlie delta echo zulu yankee"), // cont 3/5: under ContainTau
+      (5L, "one two three four five six"))
+      .toDF("doc_id", "text")
+    val sets = shingleSets(docs)
+    assert(sets.values.forall(_.size <= Dedup.ContainK))
+    val expected = (for {
+      (x, sx) <- sets; (y, sy) <- sets if x < y
+      common = (sx & sy).size if common > 0
+      cont = common.toDouble / math.min(sx.size, sy.size) if cont >= Dedup.ContainTau
+    } yield (x, y, round4(cont), round4(common.toDouble / (sx.size + sy.size - common)))).toSet
+    val got = Dedup.containmentSketchPairs(docs).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSet
+    assert(got === expected)
+    assert(got.map(t => (t._1, t._2, t._3)) === Set((1L, 2L, 1.0), (1L, 3L, round4(10.0 / 12))))
+  }
+
+  test("b-bit verify: bit_matches equals a Scala recompute of the 48 low signature bits") {
+    val p = 2147483647L
+    def hashOf(x: String): Long = {
+      val md5 = java.security.MessageDigest.getInstance("MD5").digest(x.getBytes("UTF-8"))
+      java.lang.Long.parseLong(md5.map(b => f"$b%02x").mkString.take(12), 16) % p
+    }
+    // the low bit of each of the 48 hash minima, the first hash's bit most significant
+    def mask(sh: Set[String]): Long = {
+      val hs = sh.toSeq.map(hashOf)
+      (0 until Dedup.NumHashes).foldLeft(0L) { (m, i) =>
+        val (a, b) = (2L * i + 1, (2654435761L * (i + 1)) % p)
+        m * 2 + hs.foldLeft(p)((acc, h) => math.min(acc, (a * h + b) % p)) % 2
+      }
+    }
+    val docs = plantedCorpus(groups = 4, singles = 8, short = 2)
+    val sets = shingleSets(docs)
+    val rows = Dedup.dedupMinhashBbitOn(docs).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4)))
+    assert(rows.length >= 12)
+    assert(rows.exists(_._3 < Dedup.NumHashes), "no pair disagrees on any bit")
+    rows.foreach { case (x, y, m, est, jac) =>
+      val (sx, sy) = (sets(x), sets(y))
+      val common = (sx & sy).size
+      val want = Dedup.NumHashes - java.lang.Long.bitCount(mask(sx) ^ mask(sy))
+      assert(m === want, s"($x, $y)")
+      assert(est === round4(math.max(0.0, 2.0 * want / Dedup.NumHashes - 1.0)), s"($x, $y)")
+      assert(jac === round4(common.toDouble / (sx.size + sy.size - common)), s"($x, $y)")
+    }
+  }
+
+  test("similarityJoin scores equal rounded Scala-set Jaccard; tau 1.0 keeps exactly the exact copies") {
+    val docs = plantedCorpus(groups = 4, singles = 10, short = 3)
+      .union(Seq((1000L, base), (1001L, base), (1002L, nearDup)).toDF("doc_id", "text"))
+    val sets = shingleSets(docs).filter(_._2.nonEmpty)
+    def truth(tau: Double): Set[(Long, Long, Double)] = (for {
+      (x, sx) <- sets; (y, sy) <- sets if x < y
+      common = (sx & sy).size
+      jac = common.toDouble / (sx.size + sy.size - common) if jac >= tau
+    } yield (x, y, round4(jac))).toSet
+    Seq(0.5, 1.0).foreach { tau =>
+      assert(scoredRows(Dedup.similarityJoin(docs, tau)) === truth(tau), s"tau $tau")
+    }
+    assert(truth(1.0).map(t => (t._1, t._2)).contains((1000L, 1001L)))
+    assert(truth(0.5).size > truth(1.0).size)
   }
 
   test("dedupKeepMinhash's edge plan shingles the corpus scan once and writes one band exchange") {

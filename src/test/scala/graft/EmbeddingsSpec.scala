@@ -17,6 +17,9 @@ class EmbeddingsSpec extends SparkSuite {
       .select(col("embedding").cast("array<double>"))
       .collect().map(_.getSeq[Double](0).toArray)
 
+  private def pcaTop(df: org.apache.spark.sql.DataFrame, iters: Int) =
+    Embeddings.pcaTopDf(spark, Embeddings.pcaComponents(df, k = 1, iters))
+
   /** Sequential mirror of Embeddings.pcaComponents: exact integer
     * power iteration with L∞-1e6 renormalization and sequential
     * deflation, written independently (plain loops over the collected
@@ -107,7 +110,8 @@ class EmbeddingsSpec extends SparkSuite {
       Seq(5.0 * ((i % 21) - 10) / 10.0, 2.0 * ((i % 13) - 6) / 6.0,
         1.0 * ((i % 7) - 3) / 3.0, 0.0)
     }
-    val comps = Embeddings.pcaTopkOn(rows.toDF("embedding"), k = 3, iters = 30)
+    val comps = Embeddings.pcaTopkDf(spark,
+      Embeddings.pcaComponents(rows.toDF("embedding"), k = 3, iters = 30))
       .collect().map(r => (r.getLong(0).toInt, r.getLong(1).toInt) -> r.getLong(2)).toMap
     // L∞-1e6 scale: the dominant axis entry is (near-)±1e6 and every
     // off-axis entry is comparatively tiny
@@ -124,7 +128,7 @@ class EmbeddingsSpec extends SparkSuite {
       Seq(t, 0.05 * ((i % 7).toDouble - 3.0), 0.0, 0.0)
     }
     val df = rows.toDF("embedding")
-    val v = Embeddings.pcaTopOn(df, iters = 20).collect()
+    val v = pcaTop(df, iters = 20).collect()
       .map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
     assert(math.abs(v(0)) > 990000L, s"expected e1-dominant, got $v")
     assert(math.abs(v(2)) <= 1L && math.abs(v(3)) <= 1L)
@@ -153,9 +157,9 @@ class EmbeddingsSpec extends SparkSuite {
   test("pca_top degenerate inputs: empty corpus → empty frame; all-zero corpus → finite vector") {
     import spark.implicits._
     val empty = Seq.empty[Seq[Double]].toDF("embedding")
-    assert(Embeddings.pcaTopOn(empty, iters = 3).collect().isEmpty)
+    assert(pcaTop(empty, iters = 3).collect().isEmpty)
     val zeros = Seq.fill(5)(Seq(0.0, 0.0, 0.0)).toDF("embedding")
-    val v = Embeddings.pcaTopOn(zeros, iters = 3).collect().map(_.getLong(1))
+    val v = pcaTop(zeros, iters = 3).collect().map(_.getLong(1))
     assert(v.length === 3)
     // zero update keeps the uniform init (integer convention: no NaN
     // is even representable)
@@ -181,8 +185,8 @@ class EmbeddingsSpec extends SparkSuite {
   test("embed_project ≡ driver-side integer projection EXACTLY") {
     val k = 3
     val comps = referenceDeflatedQ(mat, k, Embeddings.PcaIters)
-    val got = Embeddings.embedProjectOn(
-      Tables.embeddings(spark, sfDir), k, Embeddings.PcaIters)
+    val emb = Tables.embeddings(spark, sfDir)
+    val got = Embeddings.projectDf(emb, Embeddings.pcaComponents(emb, k, Embeddings.PcaIters))
       .collect().map(r => (r.getLong(0), r.getLong(1).toInt) -> r.getLong(2)).toMap
     assert(got.size === mat.length * k)
     // check every vector against the reference integer dot product

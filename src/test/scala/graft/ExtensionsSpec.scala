@@ -35,7 +35,7 @@ class ExtensionsSpec extends SparkSuite {
       array(col("id").cast("double"), lit(2.0)).as("a"),
       array(lit(3.0), col("id").cast("double")).as("b"))
     val df = arrays
-      .select(graft.queries.Similarity.dotLambda(col("a"), col("b")).as("d"))
+      .select(graft.DeclarativeTwins.dotLambda(col("a"), col("b")).as("d"))
     val opt = df.queryExecution.optimizedPlan.toString
     assert(opt.contains("vec_dot"),
       s"lambda form not rewritten to the native expression:\n$opt")

@@ -63,27 +63,6 @@ class FormatsSpec extends SparkSuite {
     assert(got === direct)
   }
 
-  test("permissive jsonl read quarantines corrupt lines, keeps good rows") {
-    val dir = "/tmp/graft_stage/corrupt_test"
-    val f = new java.io.File(dir)
-    f.mkdirs()
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "part-0.json"),
-      ("""{"event_id": 1, "user_id": 10, "event_type": "click", "value": 1.5}
-         |not json at all
-         |{"event_id": 2, "user_id": 11, "event_type": "view", "value": 2.5}
-         |{"event_id": "BAD_TYPE", "user_id": 12}
-         |{"event_id": 3, "user_id": 12, "event_type": "click", "value": 3.5}
-         |""".stripMargin).getBytes)
-    val df = Formats.readJsonlRobust(spark, dir, Formats.eventsJsonSchema).cache()
-    val corrupt = df.filter(col("_corrupt_record").isNotNull).count()
-    val good = df.filter(col("_corrupt_record").isNull).count()
-    assert(corrupt === 2, "garbage line + type-mismatch line quarantined")
-    assert(good === 3)
-    assert(df.filter(col("_corrupt_record").isNull)
-      .agg(sum("value")).collect()(0).getDouble(0) === 7.5)
-    df.unpersist()
-  }
-
   test("salted join result identical to plain join") {
     val salted = Skew.joinSalted(spark, sfDir).collect()
       .map(r => r.getAs[Number](0).longValue -> (r.getLong(1), r.getDouble(2))).toMap

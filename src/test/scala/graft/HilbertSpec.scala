@@ -11,6 +11,29 @@ import graft.queries.Sharding
   */
 class HilbertSpec extends SparkSuite {
 
+  /** Inverse of HilbertValue.xy2d (d → xy), for the adjacency and
+    * bijection checks.
+    */
+  private def d2xy(bits: Int, d0: Long): (Long, Long) = {
+    val n = 1L << bits
+    var x = 0L; var y = 0L
+    var t = d0
+    var s = 1L
+    while (s < n) {
+      val rx = 1L & (t / 2)
+      val ry = 1L & (t ^ rx)
+      if (ry == 0L) {
+        if (rx == 1L) { x = s - 1 - x; y = s - 1 - y }
+        val tmp = x; x = y; y = tmp
+      }
+      x += s * rx
+      y += s * ry
+      t /= 4
+      s <<= 1
+    }
+    (x, y)
+  }
+
   test("bijection + unit-step adjacency + round-trip on a 32x32 grid") {
     val bits = 5
     val n = 1 << bits
@@ -18,14 +41,14 @@ class HilbertSpec extends SparkSuite {
       yield HilbertValue.xy2d(bits, x, y)
     assert(ds.toSet === (0 until n * n).map(_.toLong).toSet) // bijection
     // walk the curve: consecutive indices are grid neighbors
-    val cells = (0 until n * n).map(d => HilbertValue.d2xy(bits, d))
+    val cells = (0 until n * n).map(d => d2xy(bits, d))
     cells.zip(cells.tail).foreach { case ((x1, y1), (x2, y2)) =>
       assert(math.abs(x1 - x2) + math.abs(y1 - y2) === 1,
         s"non-adjacent step ($x1,$y1)->($x2,$y2)")
     }
     // round-trip
     (0 until n * n).foreach { d =>
-      val (x, y) = HilbertValue.d2xy(bits, d)
+      val (x, y) = d2xy(bits, d)
       assert(HilbertValue.xy2d(bits, x, y) === d)
     }
   }
@@ -37,7 +60,7 @@ class HilbertSpec extends SparkSuite {
       val y = rnd.nextInt(1 << 16).toLong
       val d = HilbertValue.xy2d(16, x, y)
       assert(d >= 0L && d < (1L << 32), s"($x,$y) -> $d out of range")
-      assert(HilbertValue.d2xy(16, d) === ((x, y)), s"round-trip failed at ($x,$y)")
+      assert(d2xy(16, d) === ((x, y)), s"round-trip failed at ($x,$y)")
     }
   }
 

@@ -82,6 +82,33 @@ class MapReduceJobSpec extends SparkSuite {
     assert(placed.forall(r => r.getInt(0) == r.getInt(1)), placed.mkString(", "))
   }
 
+  test("runAssociative reduces in shuffle-partition tasks, then hash-places its output into nReduce partitions") {
+    val nReduce = 3
+    val reduceTasks = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(reduceTasks != nReduce)
+    val out = MapReduceJob.runAssociative(spark.createDataset(docs), wcMap,
+      (x, y) => (x.toLong + y.toLong).toString, nReduce)
+    assert(out.collect().map(kv => kv.key -> kv.value).toMap === naiveWc(docs))
+    // two exchanges: the combiner's reduce, then the placement by key
+    val plan = out.queryExecution.executedPlan
+    val parts = MapReduceJobSpec.Plans.collect(plan) { case e: Exchange => e.outputPartitioning }
+    assert(parts.size === 2, s"expected exactly two exchanges:\n$plan")
+    assert(parts.exists {
+      case HashPartitioning(Seq(k: Attribute), n) => k.name == "key" && n == nReduce
+      case _ => false
+    }, plan)
+    assert(parts.exists {
+      case HashPartitioning(_, n) => n == reduceTasks
+      case _ => false
+    }, plan)
+    assert(out.rdd.getNumPartitions === nReduce)
+    val placed = out.toDF()
+      .select(spark_partition_id().as("pid"), pmod(hash(col("key")), lit(nReduce)).as("want"))
+      .collect()
+    assert(placed.length === naiveWc(docs).size)
+    assert(placed.forall(r => r.getInt(0) == r.getInt(1)), placed.mkString(", "))
+  }
+
   test("runPlugin(\"indexer\") into KvTextSink commits nReduce mr-out files of the reference's lines") {
     val out = Files.createTempDirectory("mrout").resolve("indexer").toString
     MapReduceJob.runPlugin(spark.createDataset(docs), "indexer", nReduce = 4).toDF()

@@ -54,35 +54,6 @@ class MultimodalSpec extends SparkSuite {
     assert((feats(5L).width, feats(5L).height, feats(5L).channels) === stub5)
   }
 
-  test("resizeImages normalizes image payloads to the target resolution") {
-    import spark.implicits._
-    def png(w: Int, h: Int): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(w, h,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      (0 until w).foreach(x => (0 until h).foreach(y =>
-        img.setRGB(x, y, (x * 13 + y * 7) & 0xFFFFFF)))
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", bos)
-      bos.toByteArray
-    }
-    val audio = "waveformbytes".getBytes("UTF-8")
-    val recs = Seq(
-      graft.multimodal.MediaRecord(1L, "image", png(320, 200)),
-      graft.multimodal.MediaRecord(2L, "image", png(9, 400)),
-      graft.multimodal.MediaRecord(3L, "audio", audio),
-      graft.multimodal.MediaRecord(4L, "image", "garbage".getBytes("UTF-8")))
-    val resized = Multimodal.resizeImages(spark.createDataset(recs), w = 32, h = 48)
-    // resize → decode composes inside the same narrow pipeline
-    val feats = Multimodal.extractFeatures(resized).collect()
-      .map(f => f.doc_id -> f).toMap
-    assert((feats(1L).width, feats(1L).height) === ((32, 48)))
-    assert((feats(2L).width, feats(2L).height) === ((32, 48)))
-    val out = resized.collect().map(r => r.doc_id -> r.payload).toMap
-    assert(out(3L).toSeq === audio.toSeq, "non-image payloads pass through untouched")
-    assert(out(4L).toSeq === "garbage".getBytes("UTF-8").toSeq,
-      "undecodable image bytes pass through untouched")
-  }
-
   test("real WAV payloads decode to sample-rate/duration/channels via javax.sound.sampled") {
     import spark.implicits._
     def wav(rate: Float, channels: Int, seconds: Double): Array[Byte] = {

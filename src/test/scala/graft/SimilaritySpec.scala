@@ -273,7 +273,7 @@ class SimilaritySpec extends SparkSuite {
       (11L, Seq(1.0, 1.0, 0.0)),
       (12L, Seq(0.0, 0.0, 1.0)))
     val df = rows.toDF("vec_id", "v")
-      .withColumn("nrm", sqrt(Similarity.dotLambda(col("v"), col("v"))))
+      .withColumn("nrm", sqrt(DeclarativeTwins.dotLambda(col("v"), col("v"))))
     val eval = df.filter(col("vec_id") === 0L)
     val got = Similarity.decontaminateEmbeddingOn(df, eval, tau = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet

@@ -235,46 +235,6 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("stream-static join enriches events with a broadcast dim") {
-    val mem = MemoryStream[(Timestamp, Long, String, Double)](spark)
-    val dim = Seq((1L, "gold"), (2L, "silver")).toDF("user_id", "tier")
-    val df = StreamingOps.enrichWithDim(
-      mem.toDF().toDF("tsm", "user_id", "event_type", "value"), dim, "user_id")
-    val name = s"enrich_${System.nanoTime()}"
-    val q = df.writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(Seq((ts(1), 1L, "click", 1.0), (ts(2), 3L, "click", 2.0)))
-      q.processAllAvailable()
-      val got = spark.table(name).collect()
-        .map(r => r.getLong(0) -> Option(r.getString(4)).getOrElse("none")).toMap
-      assert(got === Map(1L -> "gold", 3L -> "none")) // left join keeps unmatched
-    } finally q.stop()
-  }
-
-  test("flatMapGroupsWithState sessions: gap splits, timeout closes (event-time)") {
-    val mem = MemoryStream[(Timestamp, Long, String, Double)](spark)
-    val ds = StreamingOps.customSessions(
-      mem.toDF().toDF("tsm", "user_id", "event_type", "value"), gapSec = 1800)
-    val name = s"csess_${System.nanoTime()}"
-    val q = ds.toDF().writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // user 1: events at minute 1, 5 (one session), then 131 (> 30 min gap → new session)
-      mem.addData(Seq((ts(1), 1L, "a", 1.0), (ts(5), 1L, "a", 2.0), (ts(131), 1L, "a", 6.0)))
-      q.processAllAvailable()
-      // advance watermark far beyond every session's gap → timeout fires
-      mem.addData(Seq((ts(24 * 60), 99L, "flush", 0.0)))
-      q.processAllAvailable()
-      mem.addData(Seq((ts(48 * 60), 98L, "flush2", 0.0)))
-      q.processAllAvailable()
-      val got = spark.table(name).collect()
-        .filter(_.getLong(0) == 1L)
-        .map(r => (r.getLong(2), r.getDouble(3))).toSet
-      assert(got === Set((2L, 3.0), (1L, 6.0)), s"got $got")
-    } finally q.stop()
-  }
-
   test("foreachBatch sink: per-micro-batch upsert into external state") {
     val mem = MemoryStream[(Timestamp, Long, String, Double)](spark)
     val df = mem.toDF().toDF("tsm", "user_id", "event_type", "value")

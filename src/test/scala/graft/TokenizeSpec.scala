@@ -136,7 +136,9 @@ class TokenizeSpec extends SparkSuite {
       val syms = ws.map { case (w, _) => applyAll(w) }.sum
       lang -> (n.toLong, ws.map(_._1.length).sum.toLong, syms.toLong)
     }
-    val got = Tokenize.bpeEncodeOn(docs, nm).collect()
+    val trained = Tokenize.bpeMergesOn(docs, nm).collect()
+      .map(r => (r.getString(1), r.getString(2))).toSeq
+    val got = Tokenize.bpeEncodeWith(docs, trained).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got === want)
     // merges compress: fewer symbols than characters

@@ -10,8 +10,36 @@ import graft.queries.{Dedup, Unigram}
   */
 class UnigramSpec extends SparkSuite {
 
+  /** Sequential reference of the distributed seed pass: every
+    * substring up to MaxPieceLen weighted by word frequency; singles
+    * always kept (segmentability), multis gated at MinFreq and capped
+    * at SeedCap.
+    */
+  private def seedPieces(wf: Seq[(String, Long)]): Seq[(String, Long)] = {
+    val subCounts = scala.collection.mutable.HashMap.empty[String, Long]
+    wf.foreach { case (w, f) =>
+      var i = 0
+      while (i < w.length) {
+        var j = i + 1
+        while (j <= math.min(w.length, i + Unigram.MaxPieceLen)) {
+          val p = w.substring(i, j)
+          subCounts.update(p, subCounts.getOrElse(p, 0L) + f)
+          j += 1
+        }
+        i += 1
+      }
+    }
+    val singles = subCounts.iterator.filter(_._1.length == 1).toSeq
+    val multis = subCounts.iterator
+      .filter { case (p, c) => p.length > 1 && c >= Unigram.MinFreq }
+      .toSeq
+      .sortBy { case (p, c) => (-c, p) }
+      .take(Unigram.SeedCap)
+    singles ++ multis
+  }
+
   private def sequentialCounts(words: Seq[(String, Long)]): Map[String, Long] =
-    Unigram.emLoop(Unigram.seedPieces(words), probs =>
+    Unigram.emLoop(seedPieces(words), probs =>
       words.flatMap { case (w, f) => Unigram.viterbi(w, probs).map(p => (p, f)) }
         .groupBy(_._1).map { case (p, v) => p -> v.map(_._2).sum }.toSeq)
 

@@ -18,7 +18,7 @@ class VectorOpsSpec extends SparkSuite {
       .limit(200)
     val both = e.select(
       call_function("vec_dot", col("v"), col("v")).as("native"),
-      Similarity.dotLambda(col("v"), col("v")).as("lambda")).collect()
+      DeclarativeTwins.dotLambda(col("v"), col("v")).as("lambda")).collect()
     assert(both.nonEmpty)
     both.foreach(r => assert(r.getDouble(0) == r.getDouble(1),
       s"native=${r.getDouble(0)} lambda=${r.getDouble(1)}"))
@@ -70,9 +70,9 @@ class VectorOpsSpec extends SparkSuite {
       .limit(200)
     val both = e.select(
       call_function("hyperplane_sigs_dedup", col("v")).as("nd"),
-      Similarity.declarativeDedupSigs(col("v")).as("dd"),
+      DeclarativeTwins.dedupSigs(col("v")).as("dd"),
       call_function("hyperplane_sigs_ann", col("v")).as("na"),
-      Similarity.declarativeAnnSigs(col("v")).as("da")).collect()
+      DeclarativeTwins.annSigs(col("v")).as("da")).collect()
     assert(both.nonEmpty)
     both.foreach { r =>
       assert(r.getSeq[Int](0) === r.getSeq[Int](1), "dedup family diverged")

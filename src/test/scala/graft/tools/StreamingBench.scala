@@ -74,8 +74,6 @@ object StreamingBench {
     bench("sliding", OutputMode.Complete())(StreamingOps.slidingCounts)
     bench("session_window", OutputMode.Append())(StreamingOps.sessionCounts)
     bench("dedup", OutputMode.Append())(StreamingOps.dedupStream(_, "user_id"))
-    bench("sessions_fmgws", OutputMode.Append())(
-      StreamingOps.customSessions(_, 600).toDF())
     bench("anomaly_fmgws", OutputMode.Append())(
       StreamingOps.anomalyAlerts(_).toDF())
     bench("ewma_fmgws", OutputMode.Append())(StreamingOps.ewmaStream(_).toDF())
