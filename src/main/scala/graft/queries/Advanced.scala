@@ -487,8 +487,9 @@ object Advanced {
   /** Recursive CTE (Spark 4 UnionLoop): ancestor chains over a
     * synthetic parent edge (key → key-5), rolled up per root. The
     * anchor/recursive-step SQL is engine-portable; Spark executes the
-    * loop as iterated distributed joins (same shape as
-    * [[Cluster.clustersOf]], driven by the engine itself).
+    * loop as iterated distributed joins, driven by the engine itself
+    * ([[Cluster.clustersOf]] runs its own fixpoint instead, and only
+    * for graphs over Spark's broadcast threshold).
     */
   def recursiveCte(s: SparkSession, d: String): DataFrame = {
     Tables.nation(s, d).createOrReplaceTempView("nation_r")
@@ -597,20 +598,15 @@ object Advanced {
     val names = Tables.part(s, d)
       .groupBy("p_name")
       .agg(count(lit(1)).as("n_parts"), min("p_partkey").as("canon_key"))
-    // checkpoint the pair producer ONCE — the CC loop iterates joins
-    // over this frame and would otherwise re-run the blocked
-    // levenshtein join every round (the Pipeline shared-stage rule)
-    val edges = graft.core.Checkpoints.stable(erBlock(s, d)
+    // clustersOf reads the blocked levenshtein pairs once
+    val lab = Cluster.clustersOf(erBlock(s, d)
       .select(col("canon_a").as("doc_a"), col("canon_b").as("doc_b")))
-    val lab = Cluster.clustersOf(edges)
       .select(col("doc_id").as("canon_key"), col("cluster_id"))
     // `resolved` is self-joined with its own entity-size aggregate —
-    // without a cut, the names⋈labels subtree (whose FORMATTED plan
-    // nests the CC loop's cached-plan expansions, 25k lines at r14)
-    // plans and executes TWICE per run. It is vocabulary-bounded
-    // (|distinct p_name| rows, three narrow columns), so one stable
-    // materialization is cheap and the final join plans over a single
-    // Scan ExistingRDD leaf.
+    // without a cut, the names⋈labels subtree plans and executes TWICE
+    // per run. It is vocabulary-bounded (|distinct p_name| rows, three
+    // narrow columns), so one stable materialization is cheap and the
+    // final join plans over a single Scan ExistingRDD leaf.
     val resolved = graft.core.Checkpoints.stable(
       names.join(lab, Seq("canon_key"), "left")
         .select(col("p_name"), col("n_parts"),

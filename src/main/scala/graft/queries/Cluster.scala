@@ -2,12 +2,14 @@ package graft.queries
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.core.{Checkpoints, Tables}
 import graft.core.Checkpoints.StableOps
+import scala.jdk.CollectionConverters._
 
 /** Duplicate-cluster formation ([EXT] — SURVEY.md §0): candidate-pair
   * producers (n-gram Jaccard, MinHash, SimHash — queries/Dedup.scala)
@@ -15,56 +17,117 @@ import graft.core.Checkpoints.StableOps
   * transitive closure — "keep one doc per duplicate CLUSTER". That is
   * connected components over the similarity graph.
   *
-  * Scale design: min-label propagation — per round, every node adopts
-  * the smallest label among itself and its neighbors — run as an RDD
-  * fixpoint. The symmetrized adjacency is built once, hash-partitioned
-  * by node and persisted; each round zips the (co-partitioned) label
-  * table against it, shuffles one map-side-combined min per node
-  * (linear in |E|), and counts the labels that changed: one Spark job
-  * per round, with no query planning inside the loop. The round count
-  * is the graph diameter + 1; near-dup graphs are unions of small
-  * dense cliques (diameter ≈ 2-4), so at 100 TB this runs a handful of
-  * linear shuffles; the edge list is the MinHash candidate set (∝ true
-  * dups), never n². Every 4th round is a reliable checkpoint
-  * ([[graft.core.Checkpoints.stableLoop]]; `spark.graft.checkpointDir`
-  * points it at durable shared storage — the executor-loss recovery
-  * story) so deep graphs keep a bounded lineage. Cluster sizes are
-  * fused onto the converged labels with one co-partitioned count, and
-  * the result is a frame over a single ExistingRDD leaf.
+  * Size rule: [[clustersOf]] picks a local or a distributed plan the way
+  * Spark picks a broadcast join, by `spark.sql.autoBroadcastJoinThreshold`.
+  * At 16 bytes per edge, a graph of at most threshold / 16 edges (655,360
+  * at the default 10 MB) is collected and labelled on the driver by
+  * union-find ([[unionFind]], Tarjan 1975): one bounded read, no shuffle,
+  * and a LocalRelation result whose true size lets the keep join
+  * broadcast it. A threshold ≤ 0 turns the local path off, as it turns
+  * off broadcast joins. Near-dup graphs are small next to their corpus
+  * (the edge list is the verified MinHash candidate set, ∝ true dups):
+  * 16,000 documents with 10% planted near-dups give about 1,800 edges,
+  * while a 100 TB corpus's graph runs the fixpoint below.
+  *
+  * Above the threshold: min-label propagation — per round, every node
+  * adopts the smallest label among itself and its neighbors — run as an
+  * RDD fixpoint. The symmetrized adjacency is built once,
+  * hash-partitioned by node and persisted; each round zips the
+  * (co-partitioned) label table against it, shuffles one
+  * map-side-combined min per node (linear in |E|), and counts the labels
+  * that changed: one Spark job per round, with no query planning inside
+  * the loop. The round count is the graph diameter + 1; near-dup graphs
+  * are unions of small dense cliques (diameter ≈ 2-4), so at 100 TB this
+  * runs a handful of linear shuffles, never n². Every 4th round is a
+  * reliable checkpoint ([[graft.core.Checkpoints.stableLoop]];
+  * `spark.graft.checkpointDir` points it at durable shared storage — the
+  * executor-loss recovery story) so deep graphs keep a bounded lineage.
+  * Cluster sizes are fused onto the converged labels with one
+  * co-partitioned count, and the result is a frame over a single
+  * ExistingRDD leaf.
   *
   * Deep graphs (chains: citation/link graphs, session stitching) cost
-  * diameter + 1 rounds here. Large-star/small-star contraction (Kiveris
-  * et al., "Connected Components in MapReduce and Beyond") bounds that
-  * at O(log n) rounds; should a workload need it, it belongs inside
-  * this same RDD fixpoint, not in a DataFrame loop.
+  * diameter + 1 rounds in the fixpoint. Large-star/small-star
+  * contraction (Kiveris et al., "Connected Components in MapReduce and
+  * Beyond") bounds that at O(log n) rounds; should a workload need it,
+  * it belongs inside this same RDD fixpoint, not in a DataFrame loop.
   *
   * Spark 4's recursive CTE (see Advanced.recursiveCte) could express
   * the closure too, but it materializes reachable-PAIR state — O(k²)
-  * per k-node cluster — where the fixpoint here carries one label per
+  * per k-node cluster — where both paths here carry one label per
   * node; keep CTE recursion for hierarchies, not components.
   */
 object Cluster {
+
+  /** Bytes one edge counts for in the size rule: two longs. */
+  private val EdgeBytes = 16L
+
+  /** Spark refuses to broadcast more than 8 GB; the same cap keeps the
+    * driver path's arrays addressable under an outsized threshold.
+    */
+  private val MaxLocalBytes = 8L << 30
+
+  private val JobDescription = "spark.job.description"
+
+  private val ClusterSchema = StructType(Seq("doc_id", "cluster_id", "n_docs")
+    .map(StructField(_, LongType, nullable = false)))
+
+  /** Connected components of an in-memory edge list by union-find
+    * (Tarjan, 1975): for each distinct endpoint, ascending, its node id,
+    * its component's minimum node id and the component's node count.
+    * Nodes are indexed by rank among the sorted distinct endpoints, so
+    * linking the larger root under the smaller keeps every root its
+    * component's minimum; path halving keeps the finds short. Primitive
+    * arrays throughout, and a plain function: a physical operator can
+    * call it as readily as the driver.
+    */
+  private[graft] def unionFind(src: Array[Long], dst: Array[Long])
+      : (Array[Long], Array[Long], Array[Long]) = {
+    val nodes = {
+      val all = src ++ dst
+      java.util.Arrays.sort(all)
+      var n = 0
+      for (i <- all.indices) if (n == 0 || all(i) != all(n - 1)) { all(n) = all(i); n += 1 }
+      java.util.Arrays.copyOf(all, n)
+    }
+    val parent = Array.range(0, nodes.length)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    for (e <- src.indices) {
+      val a = find(java.util.Arrays.binarySearch(nodes, src(e)))
+      val b = find(java.util.Arrays.binarySearch(nodes, dst(e)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val roots = Array.tabulate(nodes.length)(find)
+    val counts = new Array[Long](nodes.length)
+    roots.foreach(r => counts(r) += 1)
+    (nodes, roots.map(nodes(_)), roots.map(counts(_)))
+  }
 
   /** Min-label propagation run to its fixpoint over pair RDDs: the
     * converged (node, min node id of its component) table,
     * hash-partitioned by node. Labels strictly decrease until they
     * settle, so the loop ends within diameter + 1 rounds; each round
     * is one Spark job (zip against the adjacency, map-side-combined
-    * min shuffle, count of the labels that changed). Every 4th round
-    * is a reliable checkpoint ([[Checkpoints.stableLoop]]) so the
-    * lineage of a deep graph stays bounded. Each generation is freed
-    * once its successor is materialized: the successor recomputes from
-    * its own shuffle output, never through the freed generation.
+    * min shuffle, count of the labels that changed), described as
+    * `connected components: fixpoint round N`. Every 4th round is a
+    * reliable checkpoint ([[Checkpoints.stableLoop]]) so the lineage of
+    * a deep graph stays bounded. Each generation is freed once its
+    * successor is materialized: the successor recomputes from its own
+    * shuffle output, never through the freed generation. `pairs` is the
+    * caller's cached edge read; it is freed once round 1 has built the
+    * adjacency from it.
     */
-  private def componentLabels(edges: DataFrame): RDD[(Long, Long)] = {
-    val s = edges.sparkSession
+  private def componentLabels(s: SparkSession, pairs: RDD[(Long, Long)]): RDD[(Long, Long)] = {
     val part = new HashPartitioner(s.conf.get("spark.sql.shuffle.partitions").toInt)
-    val Seq(c0, c1) = edges.columns.take(2).toSeq
     // Symmetrize once into a node-partitioned adjacency list; every
     // round zips the label table against it in place, so only the
     // per-neighbor label messages shuffle.
-    val adj = edges.select(col(c0).cast("long"), col(c1).cast("long")).na.drop().rdd
-      .flatMap { r => val (a, b) = (r.getLong(0), r.getLong(1)); Iterator((a, b), (b, a)) }
+    val adj = pairs
+      .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
       .groupByKey(part)
       .mapValues(_.toArray.distinct)
       .persist()
@@ -90,7 +153,9 @@ object Cluster {
         }
       }.reduceByKey(part, (a, b) => (math.min(a._1, b._1), math.min(a._2, b._2)))
       if (round % 4 == 0) Checkpoints.stableLoop(step, s) else step.persist()
+      s.sparkContext.setJobDescription(s"connected components: fixpoint round $round")
       changed = step.filter { case (_, (l, old)) => l < old }.count()
+      if (round == 1) pairs.unpersist(false)
       prev.foreach(_.unpersist(false))
       prev = Some(step)
       labels = step.mapValues(_._1)
@@ -100,23 +165,86 @@ object Cluster {
     labels
   }
 
+  /** All of `pairs` on the driver when it holds at most `max` edges,
+    * else None; at most `max` edges ever reach the driver. One job
+    * over every partition (so the producer's last stage keeps its full
+    * parallelism, which `take`'s one-partition first scan would not)
+    * counts each partition and ships it whole when it is within its
+    * even share of `max`; a partition over its share while the total
+    * is within `max` is fetched in a second job, from `pairs`' cache.
+    */
+  private def boundedRead(pairs: RDD[(Long, Long)], max: Int): Option[Array[(Long, Long)]] = {
+    val sc = pairs.sparkContext
+    val share = max / math.max(1, pairs.getNumPartitions)
+    val parts = sc.runJob(pairs, (it: Iterator[(Long, Long)]) => {
+      val head = Array.newBuilder[(Long, Long)]
+      var n = 0L
+      it.foreach { e => if (n < share) head += e; n += 1 }
+      (n, if (n <= share) head.result() else Array.empty[(Long, Long)])
+    })
+    if (parts.map(_._1).sum > max) None
+    else {
+      val over = parts.indices.filter(parts(_)._1 > share)
+      val rest = if (over.isEmpty) Array.empty[Array[(Long, Long)]]
+        else sc.runJob(pairs, (it: Iterator[(Long, Long)]) => it.toArray, over)
+      Some(parts.flatMap(_._2) ++ rest.flatten)
+    }
+  }
+
   /** (doc_id, cluster_id, n_docs) from a (doc_a, doc_b) edge list —
     * the shared CC + cluster-size tail of every dedup-cluster consumer.
-    * Sizes come from a reduceByKey over the converged labels, re-keyed
-    * by label once so the count and the attach-back join are both
-    * co-partitioned (narrow). The result is a frame over one
-    * ExistingRDD leaf that keeps the full RDD lineage: an evicted block
-    * costs a recompute from the last round's shuffle output, never a
-    * dead frame.
+    * Rows with a null endpoint are dropped; a self-loop makes a
+    * one-node cluster.
+    *
+    * The edge producer is read once, into a cache that both paths
+    * share. A bounded read ([[boundedRead]]) brings the edges to the
+    * driver only if there are at most T of them, T =
+    * `spark.sql.autoBroadcastJoinThreshold` / 16 bytes per edge (its
+    * job is described as `connected components: local`):
+    *  - at most T edges: [[unionFind]] on the driver, and the result is
+    *    a LocalRelation whose true size lets a join against it
+    *    broadcast;
+    *  - more than T edges, or a threshold ≤ 0: the [[componentLabels]]
+    *    fixpoint over the same cached read, so the producer's stages
+    *    run once. Sizes come from a reduceByKey over the converged
+    *    labels, re-keyed by label once so the count and the attach-back
+    *    join are both co-partitioned (narrow). The result is a frame
+    *    over one ExistingRDD leaf that keeps the full RDD lineage: an
+    *    evicted block costs a recompute from the last round's shuffle
+    *    output, never a dead frame.
+    * Both paths give the same rows. The caller's job description is
+    * restored on return.
     */
   def clustersOf(edges: DataFrame): DataFrame = {
-    val labels = componentLabels(edges)
-    val byLabel = labels.map(_.swap).partitionBy(labels.partitioner.get)
-    val sizes = byLabel.mapValues(_ => 1L).reduceByKey(_ + _)
-    edges.sparkSession.createDataFrame(
-      byLabel.join(sizes).map { case (cid, (node, n)) => Row(node, cid, n) },
-      StructType(Seq("doc_id", "cluster_id", "n_docs")
-        .map(StructField(_, LongType, nullable = false))))
+    val s = edges.sparkSession
+    val sc = s.sparkContext
+    val Seq(c0, c1) = edges.columns.take(2).toSeq
+    val pairs = edges.select(col(c0).cast("long"), col(c1).cast("long")).na.drop().rdd
+      .map(r => (r.getLong(0), r.getLong(1)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val threshold = s.sessionState.conf.autoBroadcastJoinThreshold
+    val maxLocal = (math.min(threshold, MaxLocalBytes) / EdgeBytes).toInt
+    val caller = sc.getLocalProperty(JobDescription)
+    try {
+      val local = if (threshold <= 0) None else {
+        sc.setJobDescription("connected components: local")
+        boundedRead(pairs, maxLocal)
+      }
+      local match {
+        case Some(head) =>
+          pairs.unpersist(false)
+          val (nodes, labels, sizes) = unionFind(head.map(_._1), head.map(_._2))
+          s.createDataFrame(
+            nodes.indices.map(i => Row(nodes(i), labels(i), sizes(i))).asJava, ClusterSchema)
+        case None =>
+          val labels = componentLabels(s, pairs)
+          val byLabel = labels.map(_.swap).partitionBy(labels.partitioner.get)
+          val sizes = byLabel.mapValues(_ => 1L).reduceByKey(_ + _)
+          s.createDataFrame(
+            byLabel.join(sizes).map { case (cid, (node, n)) => Row(node, cid, n) },
+            ClusterSchema)
+      }
+    } finally sc.setJobDescription(caller)
   }
 
   /** Near-duplicate clusters on `documents`: edges = doc pairs with

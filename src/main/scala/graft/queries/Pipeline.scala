@@ -53,10 +53,11 @@ object Pipeline {
 
   /** The shared stage chain: corpus, quality survivors (stabled),
     * their shingle frame (stabled — fed to BOTH the edge producer and
-    * the stage-3 decontamination scan), cluster labels (stabled),
-    * dedup survivors, decontaminated ids, per-doc split labels.
-    * Callers MUST unpersist s1, sh1 and clusters when done (after
-    * stabling their own output).
+    * the stage-3 decontamination scan), cluster labels (as
+    * [[Cluster.clustersOf]] returns them: within Spark's broadcast
+    * threshold already a local relation), dedup survivors,
+    * decontaminated ids, per-doc split labels. Callers MUST unpersist
+    * s1 and sh1 when done (after stabling their own output).
     */
   private[graft] case class Stages(corpus: DataFrame, s1: DataFrame,
       sh1: DataFrame, clusters: DataFrame, s2: DataFrame, s3: DataFrame,
@@ -159,7 +160,7 @@ object Pipeline {
 
     // stage 2 — near-dup keep (dedup_keep semantics over s1)
     val edges = edgeProducer(sh1)
-    val clusters = Cluster.clustersOf(edges).stable // reused by the split
+    val clusters = Cluster.clustersOf(edges) // reused by the split
     val keepIds = s1.select("doc_id")
       .join(clusters, Seq("doc_id"), "left")
       .filter(col("cluster_id").isNull || col("doc_id") === col("cluster_id"))
@@ -227,7 +228,6 @@ object Pipeline {
     }
     st.s1.unpersist(false)
     st.sh1.unpersist(false)
-    st.clusters.unpersist(false)
     out
   }
 
@@ -269,7 +269,6 @@ object Pipeline {
         val out = pretrainTail(s, d, census03, splits)
         st.s1.unpersist(false)
         st.sh1.unpersist(false)
-        st.clusters.unpersist(false)
         out
     }
   }

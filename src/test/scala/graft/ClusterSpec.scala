@@ -1,16 +1,55 @@
 package graft
 
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.queries.{Cluster, Dedup}
 
 /** Connected components vs a local union-find model: fixed shapes
   * (cliques, a long path exercising multi-round convergence, isolated
-  * pairs, cycles) plus ScalaCheck random graphs; and the end-to-end
+  * pairs, cycles) plus ScalaCheck random graphs, each through both
+  * paths of the size rule (driver union-find and the RDD fixpoint); the
+  * T / T + 1 boundary between them, the single read of the edge
+  * producer, and the CC job descriptions; and the end-to-end
   * dedup_cluster consistency with the MinHash candidate producer.
   */
 class ClusterSpec extends SparkSuite {
   import spark.implicits._
+
+  private val Threshold = "spark.sql.autoBroadcastJoinThreshold"
+
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Runs `body` through the driver path (a 10 MB broadcast threshold
+    * holds every graph here) and through the fixpoint (threshold -1).
+    */
+  private def onBothPaths(body: => Unit): Unit = {
+    withClue("driver path: ")(withConf(Threshold, "10MB")(body))
+    withClue("fixpoint path: ")(withConf(Threshold, "-1")(body))
+  }
+
+  /** The descriptions of the Spark jobs `body` starts, in start order. */
+  private def jobsOf[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    ListenerDrain(sc)
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      ListenerDrain(sc)
+      (out, seen.toArray(Array.empty[String]).toSeq)
+    } finally sc.removeSparkListener(l)
+  }
 
   private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map.empty[Long, Long]
@@ -35,7 +74,7 @@ class ClusterSpec extends SparkSuite {
       (10, 11),                    // pair      -> 10
       (20, 21), (21, 22), (22, 20), (20, 22), // cycle + dup edge -> 20
       (30, 31), (31, 32), (30, 32))
-    assert(ccOf(edges) === unionFind(edges))
+    onBothPaths(assert(ccOf(edges) === unionFind(edges)))
   }
 
   private def clustersOf(edges: Seq[(Long, Long)]): Map[Long, (Long, Long)] =
@@ -46,26 +85,30 @@ class ClusterSpec extends SparkSuite {
     // Path 0-1-2-...-120: min-label needs ~diameter rounds (far past
     // any fixed round cap); all nodes -> 0.
     val edges = (0L until 120L).map(i => (i, i + 1))
-    val got = ccOf(edges)
-    assert(got.size === 121 && got.values.forall(_ === 0L))
+    onBothPaths {
+      val got = ccOf(edges)
+      assert(got.size === 121 && got.values.forall(_ === 0L))
+    }
   }
 
   test("random graphs match union-find (ScalaCheck)") {
     val genEdges = Gen.listOfN(60,
       Gen.zip(Gen.choose(0L, 29L), Gen.choose(0L, 29L)).suchThat(e => e._1 != e._2))
-    val res = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(8),
-      Prop.forAll(genEdges) { edges =>
-        val uf = unionFind(edges)
-        val sizes = uf.values.groupBy(identity).view.mapValues(_.size.toLong).toMap
-        edges.isEmpty || (ccOf(edges) == uf &&
-          clustersOf(edges) == uf.map { case (n, c) => n -> (c, sizes(c)) })
-      })
-    assert(res.passed, res.status.toString)
-    // no edges -> no clusters; self-loops -> one single-node cluster each
-    assert(clustersOf(Seq.empty).isEmpty)
-    assert(clustersOf(Seq((3L, 3L), (7L, 7L), (7L, 7L))) ===
-      Map(3L -> ((3L, 1L)), 7L -> ((7L, 1L))))
+    onBothPaths {
+      val res = SCTest.check(
+        SCTest.Parameters.default.withMinSuccessfulTests(8),
+        Prop.forAll(genEdges) { edges =>
+          val uf = unionFind(edges)
+          val sizes = uf.values.groupBy(identity).view.mapValues(_.size.toLong).toMap
+          edges.isEmpty || (ccOf(edges) == uf &&
+            clustersOf(edges) == uf.map { case (n, c) => n -> (c, sizes(c)) })
+        })
+      assert(res.passed, res.status.toString)
+      // no edges -> no clusters; self-loops -> one single-node cluster each
+      assert(clustersOf(Seq.empty).isEmpty)
+      assert(clustersOf(Seq((3L, 3L), (7L, 7L), (7L, 7L))) ===
+        Map(3L -> ((3L, 1L)), 7L -> ((7L, 1L))))
+    }
   }
 
   test("a broom and a complete binary tree converge to a minimum id at their far ends") {
@@ -76,19 +119,108 @@ class ClusterSpec extends SparkSuite {
     val star = (0L until 30L).map(i => (2060L, 1000L + i))
     val tree = (2 to 255).map(k => (5000L + 255 - k / 2, 5000L + 255 - k))
     val edges = path ++ star ++ tree
-    val got = ccOf(edges)
-    assert(got === unionFind(edges))
-    assert(got.values.toSet === Set(1000L, 5000L))
+    onBothPaths {
+      val got = ccOf(edges)
+      assert(got === unionFind(edges))
+      assert(got.values.toSet === Set(1000L, 5000L))
+    }
   }
 
   test("negative and extreme node ids label by their numeric minimum") {
     val edges = Seq[(Long, Long)](
       (Long.MaxValue, Long.MaxValue - 1), (Long.MinValue, -1L), (-1L, 0L), (0L, 42L),
       (7L, 7L), (-9L, Long.MaxValue - 5))
-    val got = ccOf(edges)
-    assert(got === unionFind(edges))
-    assert(got(Long.MaxValue) === Long.MaxValue - 1 && got(42L) === Long.MinValue &&
-      got(7L) === 7L && got(Long.MaxValue - 5) === -9L)
+    onBothPaths {
+      val got = ccOf(edges)
+      assert(got === unionFind(edges))
+      assert(got(Long.MaxValue) === Long.MaxValue - 1 && got(42L) === Long.MinValue &&
+        got(7L) === 7L && got(Long.MaxValue - 5) === -9L)
+    }
+  }
+
+  /** clustersOf's rows over nullable endpoints, sorted by doc_id. */
+  private def rowsOf(edges: Seq[(Option[Long], Option[Long])]): Seq[(Long, Long, Long)] =
+    Cluster.clustersOf(edges.toDF("doc_a", "doc_b")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sortBy(_._1)
+
+  /** The threshold 16·5 bytes makes T = 5 edges. */
+  private val FiveEdges = "80"
+
+  test("5 edges take the driver path and 6 the fixpoint under a 16·5-byte threshold") {
+    val five = (0L until 5L).map(i => (Option(i), Option(i + 1)))
+    val six = (0L until 6L).map(i => (Option(i), Option(i + 1)))
+    val (got5, jobs5) = withConf(Threshold, FiveEdges)(jobsOf(rowsOf(five)))
+    val (got6, jobs6) = withConf(Threshold, FiveEdges)(jobsOf(rowsOf(six)))
+    // the driver path runs only the bounded read; a 6-hop path needs
+    // at least 6 fixpoint rounds after it
+    assert(jobs5.nonEmpty && jobs5.forall(_ === "connected components: local"), jobs5)
+    val rounds = jobs6.filter(_.startsWith("connected components: fixpoint round "))
+    assert(rounds.size >= 6 && jobs6.size > jobs5.size, jobs6)
+    assert(got5 === (0L to 5L).map(n => (n, 0L, 6L)))
+    assert(got6 === (0L to 6L).map(n => (n, 0L, 7L)))
+    // each graph gives the same rows through the other path
+    assert(withConf(Threshold, "-1")(rowsOf(five)) === got5)
+    assert(withConf(Threshold, "10MB")(rowsOf(six)) === got6)
+  }
+
+  test("clustersOf reads its edge producer once on either side of the boundary") {
+    withConf(Threshold, FiveEdges) {
+      for (n <- Seq(5L, 6L)) {
+        val read = spark.sparkContext.longAccumulator(s"edges read of $n")
+        val edges = spark.sparkContext.parallelize((0L until n).map(i => (i, i + 1)), 3)
+          .map { e => read.add(1); e }.toDF("doc_a", "doc_b")
+        val got = Cluster.clustersOf(edges).collect()
+        assert(got.length === n + 1)
+        assert(read.value === n, s"$n edges")
+      }
+    }
+  }
+
+  test("clustersOf describes its jobs and restores the caller's description and group") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "caller")
+    sc.setJobDescription("caller's job")
+    try {
+      val edges = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
+      val (_, local) = jobsOf(Cluster.clustersOf(edges))
+      assert(local.nonEmpty && local.forall(_ === "connected components: local"), local)
+      assert(sc.getLocalProperty("spark.job.description") === "caller's job")
+      val (_, fixpoint) = withConf(Threshold, "-1")(jobsOf(Cluster.clustersOf(edges)))
+      assert(fixpoint.nonEmpty && fixpoint.zipWithIndex.forall { case (d, i) =>
+        d === s"connected components: fixpoint round ${i + 1}" }, fixpoint)
+      assert(sc.getLocalProperty("spark.job.description") === "caller's job")
+      assert(sc.getLocalProperty("spark.jobGroup.id") === "caller-group")
+    } finally sc.clearJobGroup()
+  }
+
+  test("random chains, stars, cliques, self-loops and null endpoints: both paths agree (ScalaCheck)") {
+    val node = Gen.choose(-40L, 40L)
+    val sized = Gen.choose(1, 7)
+    val edge = (a: Long, b: Long) => (Option(a), Option(b))
+    val chain = sized.flatMap(k => Gen.listOfN(k + 1, node))
+      .map(ns => ns.zip(ns.tail).map { case (a, b) => edge(a, b) })
+    val star = Gen.zip(node, sized.flatMap(Gen.listOfN(_, node)))
+      .map { case (hub, leaves) => leaves.map(edge(hub, _)) }
+    val clique = sized.flatMap(k => Gen.listOfN(k + 1, node))
+      .map(ns => ns.combinations(2).map(c => edge(c(0), c(1))).toList)
+    val selfLoop = node.map(n => List(edge(n, n)))
+    val nulls = node.flatMap(n => Gen.oneOf[List[(Option[Long], Option[Long])]](
+      List((None, Some(n))), List((Some(n), None)), List((None, None))))
+    val graph = Gen.choose(0, 6)
+      .flatMap(Gen.listOfN(_, Gen.oneOf(chain, star, clique, selfLoop, nulls)))
+      .map(_.flatten)
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(10),
+      Prop.forAll(graph) { edges =>
+        val kept = edges.collect { case (Some(a), Some(b)) => (a, b) }
+        val uf = unionFind(kept)
+        val sizes = uf.values.groupBy(identity).view.mapValues(_.size.toLong).toMap
+        val want = uf.toSeq.map { case (n, c) => (n, c, sizes(c)) }.sortBy(_._1)
+        val driver = withConf(Threshold, "10MB")(rowsOf(edges))
+        val fixpoint = withConf(Threshold, "-1")(rowsOf(edges))
+        Prop(driver == want && fixpoint == want) :| s"edges $edges"
+      })
+    assert(res.passed, res.status.toString)
   }
 
   test("minhash-edged clusters equal ngram-edged clusters on synthetic near-dup corpora") {
@@ -376,16 +508,18 @@ class ClusterSpec extends SparkSuite {
       // under the configured root
       assert(rddFiles(new java.io.File(dir)) > 0, s"no checkpoint files under $dir")
     } finally spark.conf.unset("spark.graft.checkpointDir")
-    // label propagation checkpoints every 4th round: a 12-hop path runs
-    // 12 rounds, so its reliable cuts land under a fresh configured root
-    val ccBase = ccOf(edges)
-    assert(ccBase === unionFind(edges))
-    val ccDir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
-    spark.conf.set("spark.graft.checkpointDir", ccDir)
-    try {
-      assert(ccOf(edges) === ccBase)
-      assert(rddFiles(new java.io.File(ccDir)) > 0, s"no checkpoint files under $ccDir")
-    } finally spark.conf.unset("spark.graft.checkpointDir")
+    // the fixpoint checkpoints every 4th round: a 12-hop path runs 12
+    // rounds, so its reliable cuts land under a fresh configured root
+    // (a -1 broadcast threshold keeps this small graph off the driver)
+    withConf(Threshold, "-1") {
+      val ccBase = ccOf(edges)
+      assert(ccBase === unionFind(edges))
+      val ccDir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
+      withConf("spark.graft.checkpointDir", ccDir) {
+        assert(ccOf(edges) === ccBase)
+        assert(rddFiles(new java.io.File(ccDir)) > 0, s"no checkpoint files under $ccDir")
+      }
+    }
   }
 
   /** Sequential synchronous LPA reference: plurality neighbor label,

@@ -119,7 +119,6 @@ object PipelineScaleCurve {
       val nCap = s5.count()
       val tAll = (System.nanoTime() - t0) / 1e9
       st.s1.unpersist(false); st.sh1.unpersist(false)
-      st.clusters.unpersist(false)
       println(f"[pipe-scale] $tag corpus=$nCorpus quality=$nS1 " +
         f"clustered=$nClustered dedup=$nS2 decontam=$nS3 train=$nTrain " +
         f"cap=$nCap wall=$tAll%.2f s")
