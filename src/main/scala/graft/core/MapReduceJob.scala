@@ -1,5 +1,7 @@
 package graft.core
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,14 +30,10 @@ final case class KV(key: String, value: String)
   *     the reference (map-task concatenation order) — deterministic apps
   *     must sort values themselves (reference: mrapps/indexer.go:37,
   *     mrapps/crash.go:48-52).
-  *   - In [[run]], `nReduce` is the number of reduce tasks, as R is in
-  *     the reference (mrmaster.go:23): the map output is
-  *     hash-partitioned by key into exactly `nReduce` partitions, each
-  *     reduced in place and returned as one output partition. In
-  *     [[runAssociative]] it is only the OUTPUT partitioning: the reduce
-  *     runs in `spark.sql.shuffle.partitions` tasks, and a second
-  *     exchange then hash-places the merged pairs into `nReduce`
-  *     partitions. Either way it never changes grouping results.
+  *   - `nReduce` is the number of reduce tasks, as R is in the reference
+  *     (mrmaster.go:23): the map output is hash-partitioned by key into
+  *     exactly `nReduce` partitions, each reduced in place and returned
+  *     as one output partition (one mr-out file).
   *
   * Scale notes: a job is ONE shuffle, as in the reference — scan → map
   * → partition by hash(key) % nReduce → sort → group → reduce. A map
@@ -43,66 +41,64 @@ final case class KV(key: String, value: String)
   * files into one (the paper's 16-64 MB splits); a record is still a
   * whole file, so for row-shaped data prefer graft.queries. The
   * grouping reuses that exchange, which also places the output, and a
-  * shuffled row carries its key once.
-  * `run` (arbitrary reducef) cannot partially aggregate — exactly like
-  * the reference, which has no combiners (worker.go:78-94). For
-  * associative reducers use [[runAssociative]], which Spark executes
-  * with map-side partial aggregation (an upgrade the MR paper calls a
-  * combiner); at 100 TB this is the difference between shuffling every
-  * pair and shuffling one pre-merged value per (partition, key). One
+  * shuffled row carries its key once. The reference has no combiner
+  * (worker.go:78-94), so by default every map pair is shuffled;
+  * `combine` adds the MR paper's (§4.3): each map task merges its
+  * pairs per key before the one exchange, so a hot key ships about one
+  * value per map task. `combine` must be associative and commutative,
+  * and `reducef` must accept combined values in place of raw ones. One
   * reduce task sorts one partition (spilling as needed) and holds one
-  * key's values at a time, so in [[run]] `nReduce` sizes the reduce
-  * side as R does: raise it with the data.
+  * key's values at a time, so `nReduce` sizes the reduce side as R
+  * does: raise it with the data.
   */
 object MapReduceJob {
 
-  /** Generic form: mirrors worker.go:66-100 (sort → group adjacent →
-    * reduce once per key). The one exchange hash-partitions the pairs by
-    * key into `nReduce` partitions (reference ihash%R, worker.go:28-32 —
-    * Murmur3 instead of FNV, identical grouping semantics), and the
-    * grouping runs inside them: output partition r holds exactly the
-    * keys with pmod(hash(key), nReduce) = r.
+  /** Mirrors worker.go:66-100 (sort → group adjacent → reduce once per
+    * key). The one exchange hash-partitions the pairs by key into
+    * `nReduce` partitions (reference ihash%R, worker.go:28-32 — Murmur3
+    * instead of FNV, identical grouping semantics), and the grouping
+    * runs inside them: output partition r holds exactly the keys with
+    * pmod(hash(key), nReduce) = r. With `combine`, each map task first
+    * folds every key's values into one with `combine(k, Seq(acc, v))`.
     */
   def run(
       records: Dataset[KV],
       mapf: (String, String) => IterableOnce[KV],
       reducef: (String, Seq[String]) => String,
       nReduce: Int = 10,
-      speculation: Boolean = false): Dataset[KV] = {
+      speculation: Boolean = false,
+      combine: Option[(String, Seq[String]) => String] = None): Dataset[KV] = {
     val spark = records.sparkSession
     if (speculation) requireSpeculation(spark)
     import spark.implicits._
-    records
-      .flatMap(r => mapf(r.key, r.value))
+    val mapped = combine match {
+      case None => records.flatMap(r => mapf(r.key, r.value))
+      case Some(c) => records.mapPartitions(it => combined(it.flatMap(r => mapf(r.key, r.value)), c))
+    }
+    mapped
       .repartition(nReduce, col("key"))
       .groupBy(col("key"))
       .as[String, KV]
       .mapGroups((k, it) => KV(k, reducef(k, it.map(_.value).toSeq)))
   }
 
-  /** Combiner-enabled form for associative+commutative reducers.
-    * `reduceGroups` runs as a typed Aggregator with partial (map-side)
-    * merge — the scalable path the reference lacks — in
-    * `spark.sql.shuffle.partitions` reduce tasks. The merged output is
-    * then hash-placed by key into `nReduce` partitions by a second
-    * exchange, so here `nReduce` sets the output partitioning (the
-    * mr-out-r files), not the reduce-task count.
+  /** Keys a map task's combiner holds before it emits them and starts
+    * over, so its memory stays bounded on any vocabulary.
     */
-  def runAssociative(
-      records: Dataset[KV],
-      mapf: (String, String) => IterableOnce[KV],
-      merge: (String, String) => String,
-      nReduce: Int = 10,
-      speculation: Boolean = false): Dataset[KV] = {
-    val spark = records.sparkSession
-    if (speculation) requireSpeculation(spark)
-    import spark.implicits._
-    records
-      .flatMap(r => mapf(r.key, r.value))
-      .groupByKey(_.key)
-      .reduceGroups((a, b) => KV(a.key, merge(a.value, b.value)))
-      .map(_._2)
-      .repartition(nReduce, col("key"))
+  private[graft] val CombineKeys = 1 << 16
+
+  private def combined(pairs: Iterator[KV], c: (String, Seq[String]) => String): Iterator[KV] = {
+    var acc = new java.util.HashMap[String, String]
+    def flush(): Iterator[KV] = {
+      val full = acc
+      acc = new java.util.HashMap[String, String]
+      full.entrySet().iterator().asScala.map(e => KV(e.getKey, e.getValue))
+    }
+    pairs.flatMap { kv =>
+      val prev = acc.get(kv.key)
+      acc.put(kv.key, if (prev == null) kv.value else c(kv.key, Seq(prev, kv.value)))
+      if (acc.size >= CombineKeys) flush() else Iterator.empty
+    } ++ flush()
   }
 
   /** Run a ServiceLoader-discovered plugin by name — the reference's

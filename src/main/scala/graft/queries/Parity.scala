@@ -40,10 +40,17 @@ object Parity {
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"))
 
-  /** A1+A2 through the closure ABI (mapf emits (word,"1") per occurrence,
-    * reference wc.go:21-34; reducef = count, wc.go:41-44). Uses the
-    * associative path (combiner) — the reference's semantics, Spark's
-    * scalability.
+  /** wc through the closure ABI: mapf emits (word,"1") per occurrence
+    * (reference wc.go:21-34); the reduce counts them (wc.go:41-44) as a
+    * sum, which also serves as the map-side combiner.
+    */
+  private val wcMap: (String, String) => IterableOnce[KV] =
+    (_, contents) => LetterTokens(contents).map(w => KV(w, "1"))
+  private val wcSum: (String, Seq[String]) => String =
+    (_, counts) => counts.map(_.toLong).sum.toString
+
+  /** A1+A2 through the closure ABI, with the combiner — the reference's
+    * semantics, Spark's scalability.
     */
   def wcMapReduce(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -51,11 +58,7 @@ object Parity {
       .select(format_string("d%06d", col("doc_id")).as("key"),
         col("text").as("value"))
       .as[KV]
-    MapReduceJob
-      .runAssociative(
-        records,
-        mapf = (_, contents) => LetterTokens(contents).map(w => KV(w, "1")),
-        merge = (a, b) => (a.toLong + b.toLong).toString)
+    MapReduceJob.run(records, wcMap, reducef = wcSum, combine = Some(wcSum))
       .toDF("key", "value")
   }
 
@@ -91,32 +94,6 @@ object Parity {
       .agg(array_join(sort_array(collect_list(col("value"))), " ").as("agg"))
   }
 
-  /** The reference's FULL pipeline under the driver's hash gate — F1
-    * scan → F2..F8 map/shuffle/reduce → F9 sink, byte-for-byte
-    * (reference: main/test-mr.sh:59-60 checks `sort mr-out-* | grep .`
-    * against the sequential run; worker.go:92-97 writes "key value"
-    * lines):
-    *
-    *  1. stage one input FILE per document (executor-side writes — the
-    *     driver never holds contents), bounded to doc_id < 500 so the
-    *     file count is constant at any SF (the unbounded row-shaped
-    *     form is [[wc]]);
-    *  2. read them through the DSv2 [[graft.sources.WholeFileSource]]
-    *     (one record per file, files packed into byte-balanced map
-    *     tasks, column pruning);
-    *  3. run wc through the closure ABI with the combiner path;
-    *  4. write through the DSv2 [[graft.sources.KvTextSink]] — real
-    *     `mr-out-<r>` files, temp-file + atomic-rename commit — one
-    *     per OUTPUT partition: runAssociative reduces in
-    *     `spark.sql.shuffle.partitions` tasks, then hash-places the
-    *     merged pairs by key into nReduce = 5 partitions
-    *     (worker.go:113-117 ihash%R parity);
-    *  5. read the committed bytes back and split "key value" lines.
-    *
-    * The returned rows therefore certify the sink's on-disk byte
-    * format, not just the in-memory result; oracle = the wc SQL on the
-    * same slice.
-    */
   /** Scratch root visible to BOTH the driver and every executor.
     * `spark.graft.scratchDir` (a shared filesystem path — NFS, a
     * fuse-mounted object store, …) makes the staging cluster-safe; when
@@ -139,6 +116,31 @@ object Parity {
         java.nio.file.Files.createTempDirectory(prefix).toString
     }
 
+  /** The reference's FULL pipeline under the driver's hash gate — F1
+    * scan → F2..F8 map/shuffle/reduce → F9 sink, byte-for-byte
+    * (reference: main/test-mr.sh:59-60 checks `sort mr-out-* | grep .`
+    * against the sequential run; worker.go:92-97 writes "key value"
+    * lines):
+    *
+    *  1. stage one input FILE per document (executor-side writes — the
+    *     driver never holds contents), bounded to doc_id < 500 so the
+    *     file count is constant at any SF (the unbounded row-shaped
+    *     form is [[wc]]);
+    *  2. read them through the DSv2 [[graft.sources.WholeFileSource]]
+    *     (one record per file, files packed into byte-balanced map
+    *     tasks, column pruning);
+    *  3. run wc through the closure ABI with the combiner, in
+    *     nReduce = 5 reduce tasks behind one hash exchange
+    *     (worker.go:113-117 ihash%R parity);
+    *  4. write through the DSv2 [[graft.sources.KvTextSink]] — real
+    *     `mr-out-<r>` files, temp-file + atomic-rename commit — one
+    *     per reduce task, so 5 files;
+    *  5. read the committed bytes back and split "key value" lines.
+    *
+    * The returned rows therefore certify the sink's on-disk byte
+    * format, not just the in-memory result; oracle = the wc SQL on the
+    * same slice.
+    */
   def mrPipeline(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val stage = scratchDir(spark, "graft_mr_in")
@@ -157,11 +159,8 @@ object Parity {
     val records = spark.read.format("graft.sources.WholeFileSource").load(stage)
       .select(col("path").as("key"), col("content").as("value"))
       .as[KV]
-    val counted = MapReduceJob.runAssociative(
-      records,
-      mapf = (_, contents) => LetterTokens(contents).map(w => KV(w, "1")),
-      merge = (a, b) => (a.toLong + b.toLong).toString,
-      nReduce = 5)
+    val counted = MapReduceJob.run(records, wcMap, reducef = wcSum, nReduce = 5,
+      combine = Some(wcSum))
     counted.toDF()
       .write.format("graft.sources.KvTextSink").mode("append").save(outDir)
     // the sink write above is an action, so the staged inputs are fully

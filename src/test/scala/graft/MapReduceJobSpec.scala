@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 import graft.core.{KV, MapReduceJob}
 
 /** Parity tests for the MapReduce closure ABI, mirroring the
@@ -27,6 +28,9 @@ class MapReduceJobSpec extends SparkSuite {
     (_, text) => "[^\\p{L}]+".r.split(text).toSeq.filter(_.nonEmpty).map(w => KV(w, "1"))
   private val wcReduce: (String, Seq[String]) => String =
     (_, vs) => vs.size.toString
+  /** wc's count as a sum: the combiner, and a reducer of combined counts. */
+  private val wcSum: (String, Seq[String]) => String =
+    (_, vs) => vs.map(_.toLong).sum.toString
 
   /** Naive single-threaded model = mrsequential.go's role. */
   private def naiveWc(ds: Seq[KV]): Map[String, String] =
@@ -40,11 +44,10 @@ class MapReduceJobSpec extends SparkSuite {
     assert(got === naiveWc(docs))
   }
 
-  test("runAssociative (combiner path) equals run (final-only path)") {
+  test("run with combine (combiner path) equals run without (final-only path)") {
     val a = MapReduceJob.run(spark.createDataset(docs), wcMap, wcReduce)
       .collect().map(kv => kv.key -> kv.value).toSet
-    val b = MapReduceJob.runAssociative(spark.createDataset(docs), wcMap,
-      (x, y) => (x.toLong + y.toLong).toString)
+    val b = MapReduceJob.run(spark.createDataset(docs), wcMap, wcSum, combine = Some(wcSum))
       .collect().map(kv => kv.key -> kv.value).toSet
     assert(a === b)
   }
@@ -63,50 +66,61 @@ class MapReduceJobSpec extends SparkSuite {
 
   test("run is one nReduce-way hash exchange: partition r holds the keys with pmod(hash(key), nReduce) = r") {
     val nReduce = 3
-    val out = MapReduceJob.run(spark.createDataset(docs), wcMap, wcReduce, nReduce)
-    assert(out.collect().map(kv => kv.key -> kv.value).toMap === naiveWc(docs))
-    // the executed (final adaptive) plan: the grouping reuses the exchange
-    val plan = out.queryExecution.executedPlan
-    val exchanges = MapReduceJobSpec.Plans.collect(plan) { case e: Exchange => e }
-    assert(exchanges.size === 1, s"expected exactly one exchange:\n$plan")
-    exchanges.head.outputPartitioning match {
-      case HashPartitioning(Seq(k: Attribute), n) =>
-        assert(k.name === "key" && n === nReduce, plan)
-      case other => fail(s"expected hashpartitioning(key, $nReduce), got $other:\n$plan")
+    for ((reducef, combine) <- Seq(wcReduce -> None, wcSum -> Some(wcSum))) {
+      val out = MapReduceJob.run(spark.createDataset(docs), wcMap, reducef, nReduce,
+        combine = combine)
+      assert(out.collect().map(kv => kv.key -> kv.value).toMap === naiveWc(docs))
+      // the executed (final adaptive) plan: the grouping reuses the exchange
+      val plan = out.queryExecution.executedPlan
+      val exchanges = MapReduceJobSpec.Plans.collect(plan) { case e: Exchange => e }
+      assert(exchanges.size === 1, s"expected exactly one exchange:\n$plan")
+      exchanges.head.outputPartitioning match {
+        case HashPartitioning(Seq(k: Attribute), n) =>
+          assert(k.name === "key" && n === nReduce, plan)
+        case other => fail(s"expected hashpartitioning(key, $nReduce), got $other:\n$plan")
+      }
+      assert(out.rdd.getNumPartitions === nReduce)
+      val placed = out.toDF()
+        .select(spark_partition_id().as("pid"), pmod(hash(col("key")), lit(nReduce)).as("want"))
+        .collect()
+      assert(placed.length === naiveWc(docs).size)
+      assert(placed.forall(r => r.getInt(0) == r.getInt(1)), placed.mkString(", "))
     }
-    assert(out.rdd.getNumPartitions === nReduce)
-    val placed = out.toDF()
-      .select(spark_partition_id().as("pid"), pmod(hash(col("key")), lit(nReduce)).as("want"))
-      .collect()
-    assert(placed.length === naiveWc(docs).size)
-    assert(placed.forall(r => r.getInt(0) == r.getInt(1)), placed.mkString(", "))
   }
 
-  test("runAssociative reduces in shuffle-partition tasks, then hash-places its output into nReduce partitions") {
-    val nReduce = 3
-    val reduceTasks = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    assert(reduceTasks != nReduce)
-    val out = MapReduceJob.runAssociative(spark.createDataset(docs), wcMap,
-      (x, y) => (x.toLong + y.toLong).toString, nReduce)
-    assert(out.collect().map(kv => kv.key -> kv.value).toMap === naiveWc(docs))
-    // two exchanges: the combiner's reduce, then the placement by key
-    val plan = out.queryExecution.executedPlan
-    val parts = MapReduceJobSpec.Plans.collect(plan) { case e: Exchange => e.outputPartitioning }
-    assert(parts.size === 2, s"expected exactly two exchanges:\n$plan")
-    assert(parts.exists {
-      case HashPartitioning(Seq(k: Attribute), n) => k.name == "key" && n == nReduce
-      case _ => false
-    }, plan)
-    assert(parts.exists {
-      case HashPartitioning(_, n) => n == reduceTasks
-      case _ => false
-    }, plan)
-    assert(out.rdd.getNumPartitions === nReduce)
-    val placed = out.toDF()
-      .select(spark_partition_id().as("pid"), pmod(hash(col("key")), lit(nReduce)).as("want"))
-      .collect()
-    assert(placed.length === naiveWc(docs).size)
-    assert(placed.forall(r => r.getInt(0) == r.getInt(1)), placed.mkString(", "))
+  test("with combine, a hot key's reduce sees at most one value per map task") {
+    val mapTasks = 4
+    val occurrences = 500
+    val corpus = (0 until mapTasks).map(i => KV(s"d$i", ("hot " * occurrences) + "cold rare"))
+    val records = spark.createDataset(spark.sparkContext.parallelize(corpus, mapTasks))
+    val hotValues = spark.sparkContext.longAccumulator("hot values")
+    val sumCountingHot = MapReduceJobSpec.sumCounting("hot", hotValues)
+    def hotValuesSeen(combine: Option[(String, Seq[String]) => String]): Long = {
+      hotValues.reset()
+      val got = MapReduceJob.run(records, wcMap, sumCountingHot, nReduce = 3, combine = combine)
+        .collect().map(kv => kv.key -> kv.value).toMap
+      assert(got === naiveWc(corpus))
+      hotValues.value
+    }
+    assert(hotValuesSeen(None) === mapTasks * occurrences)
+    assert(hotValuesSeen(Some(wcSum)) <= mapTasks)
+  }
+
+  test("a map task holding more keys than the combiner's cap flushes and still reduces every key") {
+    // one map task: "hot", then more distinct letter-only keys than the
+    // cap, then "hot" again, so the flush ships "hot" twice
+    val cap = MapReduceJob.CombineKeys
+    val key = (i: Int) =>
+      "k" + Integer.toString(i, 26).map(d => if (d.isDigit) (d - '0' + 'q').toChar else d)
+    val doc = KV("d0", ("hot" +: (0 to cap).map(key) :+ "hot").mkString(" "))
+    val hotValues = spark.sparkContext.longAccumulator("hot values")
+    val sumCountingHot = MapReduceJobSpec.sumCounting("hot", hotValues)
+    val got = MapReduceJob.run(spark.createDataset(Seq(doc)), wcMap, sumCountingHot,
+      combine = Some(wcSum))
+      .collect().map(kv => kv.key -> kv.value).toMap
+    assert(got.size === cap + 2)
+    assert(got === naiveWc(Seq(doc)))
+    assert(hotValues.value === 2)
   }
 
   test("runPlugin(\"indexer\") into KvTextSink commits nReduce mr-out files of the reference's lines") {
@@ -181,10 +195,10 @@ class MapReduceJobSpec extends SparkSuite {
       speculation = true)
       .collect().map(kv => kv.key -> kv.value).toMap
     assert(got === naiveWc(docs))
-    val gotAssoc = MapReduceJob.runAssociative(spark.createDataset(docs), wcMap,
-      (x, y) => (x.toLong + y.toLong).toString, speculation = true)
+    val gotCombined = MapReduceJob.run(spark.createDataset(docs), wcMap, wcSum,
+      speculation = true, combine = Some(wcSum))
       .collect().map(kv => kv.key -> kv.value).toMap
-    assert(gotAssoc === naiveWc(docs))
+    assert(gotCombined === naiveWc(docs))
   }
 
   test("KvTextSink files hold run output hash-placed by key (worker.go:113-117 parity)") {
@@ -299,6 +313,13 @@ class MapReduceJobSpec extends SparkSuite {
 object MapReduceJobSpec {
   /** Plan traversal that descends into adaptive query stages. */
   object Plans extends AdaptiveSparkPlanHelper
+
+  /** wc's sum reducer that also adds to `seen` how many values reach `key`. */
+  def sumCounting(key: String, seen: LongAccumulator): (String, Seq[String]) => String =
+    (k, vs) => {
+      if (k == key) seen.add(vs.size.toLong)
+      vs.map(_.toLong).sum.toString
+    }
 
   /** Each committed mr-out file's lines, by file name. */
   def mrOut(dir: String): Map[String, Seq[String]] =

@@ -56,15 +56,14 @@ class PropertySpec extends SparkSuite {
     })
   }
 
-  test("runAssociative (combiner) ≡ run (final-only) on random corpora") {
+  test("run with combine ≡ run without on random corpora") {
     check(Prop.forAll(genCorpus) { corpus =>
       val ds = corpus.toDF("key", "value").as[KV]
       val mapf = (_: String, text: String) => tokens(text).map(w => KV(w, "1"))
-      val a = MapReduceJob.runAssociative(ds, mapf,
-        merge = (x, y) => (x.toLong + y.toLong).toString)
+      val sum = (_: String, vs: Seq[String]) => vs.map(_.toLong).sum.toString
+      val a = MapReduceJob.run(ds, mapf, reducef = sum, combine = Some(sum))
         .collect().map(kv => kv.key -> kv.value).toMap
-      val b = MapReduceJob.run(ds, mapf,
-        reducef = (_, vs) => vs.map(_.toLong).sum.toString)
+      val b = MapReduceJob.run(ds, mapf, reducef = sum)
         .collect().map(kv => kv.key -> kv.value).toMap
       a == b
     })
