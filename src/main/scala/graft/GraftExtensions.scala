@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.{DotProduct, MinHashBuckets, WordShingles, ZValue}
+import graft.functions.{DotProduct, HyperplaneSigs, MinHashBuckets, WordShingles, ZValue}
+import graft.queries.Similarity.{AnnSeedBase, DedupBits, DedupSeedBase, DedupTables,
+  NumTables, PlanesPerTable}
 
 /** Library entry point for `spark.sql.extensions`: installs graft's
   * native Catalyst expressions into every session built with
@@ -12,12 +14,16 @@ import graft.functions.{DotProduct, MinHashBuckets, WordShingles, ZValue}
   * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   *
-  * so SQL users get `vec_dot`, `word_shingles`, `minhash_buckets`
-  * without calling the per-object `register(spark)` helpers (those
-  * remain for programmatic/Dataset use — both paths build the same
-  * expressions). This is the idiomatic packaging for a Spark-native
-  * library: injection happens at session build, works on a plain
-  * cluster deployment, and needs no code on the user side.
+  * so SQL users get `vec_dot`, `word_shingles`, `minhash_buckets`,
+  * the two hyperplane-signature families and the Morton interleaves.
+  * Each name builds the same expression, with the same parameters, as
+  * the typed Column builder in the expression's companion object
+  * (`WordShingles.shinglesCol`, `HyperplaneSigs.annCol`, …), which is
+  * how graft's own queries reach it: building a query frame writes
+  * nothing to the session's function registry. This is the idiomatic
+  * packaging for a Spark-native library: injection happens at session
+  * build, works on a plain cluster deployment, and needs no code on
+  * the user side.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -39,22 +45,21 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((
       new FunctionIdentifier("word_shingles"),
       new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-      exprs => WordShingles(exprs.head, 3)))
+      exprs => WordShingles(exprs.head, WordShingles.N)))
     ext.injectFunction((
       new FunctionIdentifier("minhash_buckets"),
       new ExpressionInfo(classOf[MinHashBuckets].getName, "minhash_buckets"),
       exprs => MinHashBuckets(exprs.head,
         graft.queries.Dedup.NumHashes, graft.queries.Dedup.Bands)))
-    // the two hyperplane-LSH families (params mirror queries/Similarity:
-    // ANN = 4 tables × 8 bits from seed 0; dedup = 6 × 12 from seed 1000)
+    // the two hyperplane-LSH families, with queries/Similarity's parameters
     ext.injectFunction((
       new FunctionIdentifier("hyperplane_sigs_ann"),
-      new ExpressionInfo(classOf[graft.functions.HyperplaneSigs].getName, "hyperplane_sigs_ann"),
-      exprs => graft.functions.HyperplaneSigs(exprs.head, 0, 4, 8)))
+      new ExpressionInfo(classOf[HyperplaneSigs].getName, "hyperplane_sigs_ann"),
+      exprs => HyperplaneSigs(exprs.head, AnnSeedBase, NumTables, PlanesPerTable)))
     ext.injectFunction((
       new FunctionIdentifier("hyperplane_sigs_dedup"),
-      new ExpressionInfo(classOf[graft.functions.HyperplaneSigs].getName, "hyperplane_sigs_dedup"),
-      exprs => graft.functions.HyperplaneSigs(exprs.head, 1000, 6, 12)))
+      new ExpressionInfo(classOf[HyperplaneSigs].getName, "hyperplane_sigs_dedup"),
+      exprs => HyperplaneSigs(exprs.head, DedupSeedBase, DedupTables, DedupBits)))
     ext.injectFunction((
       new FunctionIdentifier("z_value"),
       new ExpressionInfo(classOf[ZValue].getName, "z_value"),

@@ -2,7 +2,7 @@ package graft.core
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 /** The reference engine's sole data type: a string key-value pair
@@ -18,6 +18,10 @@ final case class KV(key: String, value: String)
   * atomic output commit (master.go:111-127, 171-223; worker.go:141-157) —
   * is supplied by Spark's DAG scheduler, shuffle, task retry, speculation
   * and the DSv2 commit protocol; none of it is re-implemented here.
+  * Backup tasks (F11) are `spark.speculation`, a scheduler conf fixed
+  * when the context starts, so a job has no speculation option of its
+  * own; the commit coordinator accepts one attempt's output, like the
+  * reference's atomic rename.
   * File input and output are [[graft.sources.WholeFileSource]] (key =
   * path, value = contents) and [[graft.sources.KvTextSink]] (mr-out-r).
   *
@@ -66,10 +70,8 @@ object MapReduceJob {
       mapf: (String, String) => IterableOnce[KV],
       reducef: (String, Seq[String]) => String,
       nReduce: Int = 10,
-      speculation: Boolean = false,
       combine: Option[(String, Seq[String]) => String] = None): Dataset[KV] = {
     val spark = records.sparkSession
-    if (speculation) requireSpeculation(spark)
     import spark.implicits._
     val mapped = combine match {
       case None => records.flatMap(r => mapf(r.key, r.value))
@@ -109,25 +111,8 @@ object MapReduceJob {
   def runPlugin(
       records: Dataset[KV],
       pluginName: String,
-      nReduce: Int = 10,
-      speculation: Boolean = false): Dataset[KV] = {
+      nReduce: Int = 10): Dataset[KV] = {
     val p = MapReducePlugin.load(pluginName)
-    run(records, p.mapf, p.reducef, nReduce, speculation)
+    run(records, p.mapf, p.reducef, nReduce)
   }
-
-  /** F11 backup-task parity (reference: master.go:111-127 re-queues
-    * in-progress tasks after a 10 s timeout): Spark's speculative
-    * execution re-launches straggler task attempts; the commit
-    * coordinator accepts exactly one attempt's output, like the
-    * reference's atomic rename. `spark.speculation` is a SCHEDULER
-    * conf, read once at context start and ignored in local mode, so
-    * there is no true per-job toggle — the façade knob instead
-    * asserts the caller's context was built with it on (Bench/Verify
-    * and the test harness set it; local mode accepts-and-ignores it).
-    */
-  private def requireSpeculation(spark: SparkSession): Unit =
-    require(
-      spark.sparkContext.getConf.getBoolean("spark.speculation", defaultValue = false),
-      "speculation=true needs a context built with spark.speculation=true " +
-        "(scheduler conf, fixed at context start — Spark has no per-job toggle)")
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -51,11 +51,10 @@ object HilbertValue {
 
   def hilbert16(x: Long, y: Long): Long = xy2d(Bits, x, y)
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hilbert_value",
-      exprs => HilbertIndex(exprs(0), exprs(1)),
-      "built-in")
+  /** `hilbert_value(x, y)`. */
+  def hilbertCol(x: Column, y: Column): Column =
+    GraftColumnBridge.column(
+      HilbertIndex(GraftColumnBridge.expression(x), GraftColumnBridge.expression(y)))
 }
 
 case class HilbertIndex(left: Expression, right: Expression)

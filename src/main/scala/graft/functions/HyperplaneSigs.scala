@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -91,16 +91,19 @@ case class HyperplaneSigs(
   override def prettyName: String = "hyperplane_sigs"
 }
 
+/** The two plane families, independent of each other, with
+  * [[graft.queries.Similarity]]'s parameters.
+  */
 object HyperplaneSigs {
-  /** Registers `<name>(vec)` for use via expr() (the Spark 4 route to
-    * a Column — same convention as MinHashBuckets.register). Distinct
-    * names allow distinct parameterizations in one session (the ANN
-    * family and the dedup family use independent plane sets).
-    */
-  def register(spark: SparkSession, name: String, seedBase: Int,
-      tables: Int, bits: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => HyperplaneSigs(exprs.head, seedBase, tables, bits),
-      "built-in")
+  import graft.queries.Similarity._
+
+  /** `hyperplane_sigs_ann(v)`: the ANN family. */
+  def annCol(v: Column): Column =
+    GraftColumnBridge.column(HyperplaneSigs(GraftColumnBridge.expression(v),
+      AnnSeedBase, NumTables, PlanesPerTable))
+
+  /** `hyperplane_sigs_dedup(v)`: the embedding-dedup family. */
+  def dedupCol(v: Column): Column =
+    GraftColumnBridge.column(HyperplaneSigs(GraftColumnBridge.expression(v),
+      DedupSeedBase, DedupTables, DedupBits))
 }

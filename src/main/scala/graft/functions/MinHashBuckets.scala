@@ -2,11 +2,12 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import graft.queries.Dedup.{Bands, NumHashes}
 
 /** Native Catalyst expression computing MinHash band buckets for a
   * shingle set in one compiled pass: array<string> → array<long> of
@@ -95,15 +96,20 @@ object MinHashBuckets {
   private val digest: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 
-  /** Registers `minhash_buckets(arr)` for use via expr()/SQL (Spark 4
-    * removed the public Column-from-Expression constructor; the
-    * function registry is the supported route).
+  /** `minhash_buckets(sh)`: the `Dedup.Bands` band buckets of a
+    * shingle set's `Dedup.NumHashes`-row signature.
     */
-  def register(spark: SparkSession,
-      numHashes: Int = graft.queries.Dedup.NumHashes,
-      bands: Int = graft.queries.Dedup.Bands): Unit =
+  def bucketsCol(sh: Column): Column =
+    GraftColumnBridge.column(MinHashBuckets(GraftColumnBridge.expression(sh), NumHashes, Bands))
+
+  /** Registers `minhash_buckets` as a session temp function. Queries
+    * build the expression with [[bucketsCol]] and SQL sessions get the
+    * name from [[graft.GraftExtensions]]; the one caller left is the
+    * mrbench dedup_keep layer trace (mrbench/…/Workloads.scala).
+    */
+  def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "minhash_buckets",
-      exprs => MinHashBuckets(exprs.head, numHashes, bands),
+      exprs => MinHashBuckets(exprs.head, NumHashes, Bands),
       "built-in")
 }

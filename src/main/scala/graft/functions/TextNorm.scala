@@ -2,7 +2,7 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -62,10 +62,4 @@ object NfcNormalize {
   def nfcCol(c: Column): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
       NfcNormalize(org.apache.spark.sql.GraftColumnBridge.expression(c)))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize",
-      exprs => NfcNormalize(exprs.head),
-      "built-in")
 }

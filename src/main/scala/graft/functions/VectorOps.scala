@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -90,15 +90,8 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot",
-      exprs => DotProduct(exprs.head, exprs(1)),
-      "built-in")
-
-  /** Column-API form — the one definition every query module uses
-    * (requires [[register]] on the session, which all callers invoke).
-    */
-  def dotCol(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.call_function("vec_dot", a, b)
+  /** `vec_dot(a, b)` — the one definition every query module uses. */
+  def dotCol(a: Column, b: Column): Column =
+    GraftColumnBridge.column(
+      DotProduct(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
 }

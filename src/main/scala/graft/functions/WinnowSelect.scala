@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -67,9 +67,8 @@ case class WinnowSelect(child: Expression, w: Int)
 }
 
 object WinnowSelect {
-  def register(spark: SparkSession, w: Int = 4): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_select",
-      exprs => WinnowSelect(exprs.head, w),
-      "built-in")
+  /** `winnow_select(hs)` over [[graft.queries.Winnow]]'s window. */
+  def selectCol(hs: Column): Column =
+    GraftColumnBridge.column(
+      WinnowSelect(GraftColumnBridge.expression(hs), graft.queries.Winnow.W))
 }

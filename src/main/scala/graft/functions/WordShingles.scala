@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -55,9 +55,10 @@ case class WordShingles(child: Expression, n: Int)
 }
 
 object WordShingles {
-  def register(spark: SparkSession, n: Int = 3): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles",
-      exprs => WordShingles(exprs.head, n),
-      "built-in")
+  /** Shingle width: word 3-grams. */
+  val N = 3
+
+  /** `word_shingles(text)`: the distinct word 3-grams of `text`. */
+  def shinglesCol(text: Column): Column =
+    GraftColumnBridge.column(WordShingles(GraftColumnBridge.expression(text), N))
 }

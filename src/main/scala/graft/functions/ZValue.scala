@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -124,14 +124,13 @@ object ZValue {
   def interleave3(x: Long, y: Long, z: Long): Long =
     spread3(x) | (spread3(y) << 1) | (spread3(z) << 2)
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "z_value",
-      exprs => ZValue(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "z3_value",
-      exprs => ZValue3(exprs.head, exprs(1), exprs(2)),
-      "built-in")
-  }
+  /** `z_value(x, y)`. */
+  def zCol(x: Column, y: Column): Column =
+    GraftColumnBridge.column(
+      ZValue(GraftColumnBridge.expression(x), GraftColumnBridge.expression(y)))
+
+  /** `z3_value(x, y, z)`. */
+  def z3Col(x: Column, y: Column, z: Column): Column =
+    GraftColumnBridge.column(ZValue3(GraftColumnBridge.expression(x),
+      GraftColumnBridge.expression(y), GraftColumnBridge.expression(z)))
 }

@@ -103,7 +103,6 @@ object Classifier {
     * composed pipeline's model gate reuses (Pipeline.modelKeptIds).
     */
   private[queries] def featurizeOn(docs: DataFrame): DataFrame = {
-    graft.functions.DotProduct.register(docs.sparkSession)
     // The label ingredients travel WITH the token stream: each token
     // carries a stopword flag, and the cell agg recovers n = Σc (every
     // token lands in exactly one dim) and nsw = Σcsw per doc — so the

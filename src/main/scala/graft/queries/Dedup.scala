@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.core.Checkpoints.StableOps
+import graft.functions.{MinHashBuckets, WordShingles}
 
 /** Deduplication operators for large-scale training-data pipelines
   * ([EXT], no reference citation by definition — SURVEY.md §0): exact
@@ -23,13 +24,17 @@ object Dedup {
   def tokensCol(text: Column): Column =
     filter(split(text, Parity.TokenRe), w => length(w) > 0)
 
+  /** `word_shingles(text)`: the native [[WordShingles]] expression over
+    * the `text` column.
+    */
+  private[graft] val textShingles: Column = WordShingles.shinglesCol(col("text"))
+
   /** (doc_id, sh): one compiled pass per document via the native
     * [[graft.functions.WordShingles]] expression.
     */
   def shingleDocs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.WordShingles.register(s)
     Tables.documents(s, d)
-      .select(col("doc_id"), expr("word_shingles(text)").as("sh"))
+      .select(col("doc_id"), textShingles.as("sh"))
   }
 
   /** (doc_id, sh) for the documents of `documents` with at least one
@@ -45,9 +50,8 @@ object Dedup {
     * above it.
     */
   def nonEmptyShingles(documents: DataFrame): DataFrame = {
-    graft.functions.WordShingles.register(documents.sparkSession)
     documents
-      .select(col("doc_id"), explode_outer(array(expr("word_shingles(text)"))).as("sh"))
+      .select(col("doc_id"), explode_outer(array(textShingles)).as("sh"))
       .filter(size(col("sh")) > 0)
   }
 
@@ -104,20 +108,14 @@ object Dedup {
     * the raw double so both engines compare the same IEEE value.
     */
   def ngramScored(documents: DataFrame): DataFrame =
-    ngramScoredFull(documents)
-      .select(col("doc_a"), col("doc_b"),
-        (col("common").cast("double") / (col("na") + col("nb") - col("common"))).as("jac"))
+    jaccardOf(ngramScoredFull(documents))
 
   /** [[ngramScored]] before the Jaccard projection: co-shingled pairs
     * as (doc_a, doc_b, na, nb, common) — the shared frame Jaccard AND
     * containment ([[dedupContainment]]) derive from.
     */
-  def ngramScoredFull(documents: DataFrame): DataFrame = {
-    val s = documents.sparkSession
-    graft.functions.WordShingles.register(s)
-    ngramScoredFullFromShingles(
-      documents.select(col("doc_id"), expr("word_shingles(text)").as("sh")))
-  }
+  def ngramScoredFull(documents: DataFrame): DataFrame =
+    ngramScoredFullFromShingles(documents.select(col("doc_id"), textShingles.as("sh")))
 
   /** [[ngramScored]] over a precomputed `(doc_id, sh)` shingle frame —
     * the composed pipeline materializes the corpus shingles ONCE and
@@ -126,9 +124,7 @@ object Dedup {
     * way), instead of running two word_shingles passes.
     */
   def ngramScoredFromShingles(shingled: DataFrame): DataFrame =
-    ngramScoredFullFromShingles(shingled)
-      .select(col("doc_a"), col("doc_b"),
-        (col("common").cast("double") / (col("na") + col("nb") - col("common"))).as("jac"))
+    jaccardOf(ngramScoredFullFromShingles(shingled))
 
   /** [[ngramScoredFull]]'s body over a precomputed `(doc_id, sh)`
     * frame (see [[ngramScoredFromShingles]]).
@@ -201,7 +197,7 @@ object Dedup {
     ngramScoredFull(Tables.documents(s, d))
       .select(col("doc_a"), col("doc_b"),
         (col("common").cast("double") / least(col("na"), col("nb"))).as("cont"),
-        (col("common").cast("double") / (col("na") + col("nb") - col("common"))).as("jac"))
+        jaccard.as("jac"))
       .filter(col("cont") >= 0.8)
       .select(col("doc_a"), col("doc_b"),
         round(col("cont"), 4).as("cont"), round(col("jac"), 4).as("jac"))
@@ -492,7 +488,6 @@ object Dedup {
     * DedupSpec against [[dedupNgram]] ground truth.
     */
   def dedupMinhash(s: SparkSession, d: String): DataFrame = {
-    graft.functions.WordShingles.register(s)
     minhashPairs(Tables.documents(s, d))
   }
 
@@ -533,11 +528,10 @@ object Dedup {
     * the corpus, so the corpus-wide shingle arrays never shuffle.
     */
   def minhashScored(documents: DataFrame, minJac: Double): DataFrame = {
-    graft.functions.WordShingles.register(documents.sparkSession)
     val docs = documents.select(col("doc_id"), col("text"))
     val cand = minhashCandidates(
-      docs.select(col("doc_id"), expr("word_shingles(text)").as("sh")), minJac)
-    jaccardOf(verifyOverlap(cand, docs, expr("word_shingles(text)")))
+      docs.select(col("doc_id"), textShingles.as("sh")), minJac)
+    jaccardOf(verifyOverlap(cand, docs, textShingles))
   }
 
   /** [[minhashScored]] over a precomputed `(doc_id, sh)` shingle frame
@@ -554,7 +548,6 @@ object Dedup {
     * when `minJac` > 0.
     */
   private def minhashCandidates(shingled: DataFrame, minJac: Double): DataFrame = {
-    graft.functions.MinHashBuckets.register(shingled.sparkSession, NumHashes, Bands)
     val cand = minhashCandidateSizes(shingled)
     (if (minJac > 0.0) cand.filter(col("nmin").cast("double") >= lit(minJac) * col("nmax"))
      else cand).select("doc_a", "doc_b")
@@ -593,8 +586,9 @@ object Dedup {
         size(col("sets")(0)).as("na"), size(col("sets")(1)).as("nb"))
   }
 
-  /** Exact Jaccard over [[verifyOverlap]]'s counts — the one IEEE
-    * expression the DuckDB oracle reproduces.
+  /** Exact Jaccard over `(common, na, nb)` counts — [[verifyOverlap]]'s
+    * and [[ngramScoredFull]]'s — the one IEEE expression the DuckDB
+    * oracle reproduces.
     */
   private val jaccard: Column =
     col("common").cast("double") / (col("na") + col("nb") - col("common"))
@@ -623,7 +617,7 @@ object Dedup {
     // buckets) yields one null placeholder row, dropped by a filter that
     // sits on the generator's output, so nothing is pushed into the scan.
     val bands = docs
-      .select(col("doc_id"), size(col("sh")).as("n"), expr("minhash_buckets(sh)").as("bks"))
+      .select(col("doc_id"), size(col("sh")).as("n"), MinHashBuckets.bucketsCol(col("sh")).as("bks"))
       .select(col("doc_id"), col("n"), posexplode_outer(col("bks")))
       .toDF("doc_id", "n", "band", "bucket")
       .filter(col("bucket").isNotNull)
@@ -673,7 +667,6 @@ object Dedup {
     * at 2 dp, so the hash gate applies end to end.
     */
   def dedupEval(s: SparkSession, d: String): DataFrame = {
-    graft.functions.MinHashBuckets.register(s, NumHashes, Bands)
     val docs = Tables.documents(s, d)
     val tau = 0.6
     val truth = ngramScored(docs).filter(col("jac") >= tau)
@@ -1039,11 +1032,10 @@ object Dedup {
     * bucket, scored. (doc_id = batch side, dup_of = corpus side.)
     */
   def minhashCrossScored(batch: DataFrame, corpus: DataFrame): DataFrame = {
-    graft.functions.MinHashBuckets.register(batch.sparkSession, NumHashes, Bands)
     def prep(df: DataFrame, idAs: String): DataFrame =
       nonEmptyShingles(df).select(col("doc_id").as(idAs), col("sh"))
     def bandsOf(df: DataFrame, idc: String): DataFrame = df
-      .select(col(idc), expr("minhash_buckets(sh)").as("bks"))
+      .select(col(idc), MinHashBuckets.bucketsCol(col("sh")).as("bks"))
       .select(col(idc), posexplode_outer(col("bks")))
       .toDF(idc, "band", "bucket")
     val b = prep(batch, "doc_id")
@@ -1056,8 +1048,7 @@ object Dedup {
       .select(col("doc_id"), col("dup_of"),
         size(array_intersect(col("sa"), col("sb"))).as("common"),
         size(col("sa")).as("na"), size(col("sb")).as("nb"))
-      .select(col("doc_id"), col("dup_of"),
-        (col("common").cast("double") / (col("na") + col("nb") - col("common"))).as("jac"))
+      .select(col("doc_id"), col("dup_of"), jaccard.as("jac"))
   }
 
   /** 63-bit SimHash per document: per word, an md5-derived hash
@@ -1136,9 +1127,8 @@ object Dedup {
     * bucket-bounded, then a Bands-row rollup.
     */
   def dedupBucketStats(s: SparkSession, d: String): DataFrame = {
-    graft.functions.MinHashBuckets.register(s, NumHashes, Bands)
     val bkt = nonEmptyShingles(Tables.documents(s, d))
-      .select(col("doc_id"), posexplode_outer(expr("minhash_buckets(sh)")))
+      .select(col("doc_id"), posexplode_outer(MinHashBuckets.bucketsCol(col("sh"))))
       .toDF("doc_id", "band", "bucket")
     bkt.groupBy("band", "bucket").agg(count(lit(1)).as("k"))
       .groupBy(col("band").cast("long").as("band"))
@@ -1234,9 +1224,8 @@ object Dedup {
     * output is the |sources|² matrix.
     */
   def sourceOverlapShingles(s: SparkSession, d: String): DataFrame = {
-    graft.functions.WordShingles.register(s)
     val sh = Tables.documents(s, d)
-      .select(col("source"), explode_outer(expr("word_shingles(text)")).as("g"))
+      .select(col("source"), explode_outer(textShingles).as("g"))
       .filter(col("g").isNotNull)
       .select(col("source"), md5(col("g")).as("sd"))
       .distinct()
@@ -1283,7 +1272,6 @@ object Dedup {
 
   /** Core of [[dedupMinhashBbit]] over any (doc_id, text) frame. */
   def dedupMinhashBbitOn(documents: DataFrame): DataFrame = {
-    graft.functions.MinHashBuckets.register(documents.sparkSession, NumHashes, Bands)
     val docs = nonEmptyShingles(documents)
     // the bucket fold minus the band finish: the raw 48 minima of `sh`,
     // then the low bit of each, MSB-first → bit j weighs 2^(47-j)

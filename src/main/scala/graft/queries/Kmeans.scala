@@ -41,7 +41,6 @@ object Kmeans {
     graft.functions.DotProduct.dotCol(a, b)
 
   private def vecs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
     Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
   }
@@ -68,7 +67,6 @@ object Kmeans {
     * and standard practice).
     */
   def kmeansAssignOn(embeddings: DataFrame, k: Int = K, iters: Int = Iters): DataFrame = {
-    graft.functions.DotProduct.register(embeddings.sparkSession)
     val all = embeddings
       .select(col("vec_id"), col("v"))
       .persist() // feeds every round's assignment + the final output

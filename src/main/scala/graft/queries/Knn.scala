@@ -46,7 +46,6 @@ object Knn {
     * Similarity.vecs keeping the label column.
     */
   private def vecs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
     val v = col("embedding").cast("array<double>")
     Tables.embeddings(s, d)
       .select(col("vec_id"), col("label").cast("long").as("label"), v.as("v"))

@@ -141,7 +141,6 @@ object Pipeline {
   private[graft] def curateStagesOn(s: SparkSession, docs: DataFrame,
       edgeProducer: DataFrame => DataFrame,
       keptIdsOf: DataFrame => DataFrame): Stages = {
-    graft.functions.WordShingles.register(s)
     val corpus = docs.filter(col("doc_id") >= BenchCap)
 
     // stage 1 — per-lang p25 gate over the configured scorer
@@ -156,7 +155,7 @@ object Pipeline {
     // `sh` CTE between pair generation and `contam` exactly the same
     // way, so the sharing is the spec, not a shortcut)
     val sh1 = s1
-      .select(col("doc_id"), expr("word_shingles(text)").as("sh")).stable
+      .select(col("doc_id"), Dedup.textShingles.as("sh")).stable
 
     // stage 2 — near-dup keep (dedup_keep semantics over s1)
     val edges = edgeProducer(sh1)
@@ -170,7 +169,7 @@ object Pipeline {
     // stage 3 — benchmark decontamination (decontaminate semantics):
     // drop survivors sharing ANY shingle with the held-out eval docs
     val bench = docs.filter(col("doc_id") < BenchCap)
-      .select(explode_outer(expr("word_shingles(text)")).as("shingle"))
+      .select(explode_outer(Dedup.textShingles).as("shingle"))
       .filter(col("shingle").isNotNull).distinct()
     // explode_OUTER here too: the null row of a shingle-less doc never
     // matches the join, and a plain explode would push a re-shingling

@@ -121,8 +121,6 @@ object Pq {
     * neighbor_id rows).
     */
   def annPqOn(emb: DataFrame, exact5: DataFrame): DataFrame = {
-    val s = emb.sparkSession
-    graft.functions.DotProduct.register(s)
     // unit vectors: ADC inner product ≡ cosine ranking
     val unit = emb
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
@@ -212,8 +210,6 @@ object Pq {
     * tool feeds replicated corpora).
     */
   private[graft] def ivfPqScoredOn(emb: DataFrame): (DataFrame, DataFrame) = {
-    val s = emb.sparkSession
-    graft.functions.DotProduct.register(s)
     val raw = emb
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     val cents = Similarity.trainCentroids(raw)
@@ -284,8 +280,6 @@ object Pq {
   /** Core of [[annIvfPqResidual]] over any (vec_id, v) frame with a
     * caller-supplied exact top-k (spec tests feed planted corpora). */
   def annIvfPqResidualOn(emb: DataFrame, exact5: DataFrame): DataFrame = {
-    val s = emb.sparkSession
-    graft.functions.DotProduct.register(s)
     val raw = emb
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     val cents = Similarity.trainCentroids(raw)
@@ -407,7 +401,6 @@ object Pq {
     * in both engines (full hash gate).
     */
   def annNprobeCurve(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
     val sess = s
     import sess.implicits._
     val raw = Tables.embeddings(s, d)

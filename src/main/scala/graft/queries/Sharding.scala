@@ -93,12 +93,11 @@ object Sharding {
     * semantics, and it doubles as the file-skipping index.
     */
   def zorderBucket(s: SparkSession, d: String): DataFrame = {
-    graft.functions.ZValue.register(s)
     Tables.orders(s, d)
       .select(col("o_custkey").as("x"),
         datediff(col("o_orderdate").cast("date"),
           lit("1970-01-01").cast("date")).cast("long").as("y"))
-      .select(shiftright(call_function("z_value", col("x"), col("y")), ZShift)
+      .select(shiftright(graft.functions.ZValue.zCol(col("x"), col("y")), ZShift)
         .as("bucket"), col("x"), col("y"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n"),
@@ -117,13 +116,12 @@ object Sharding {
   val Z3Shift = 33
 
   def zorder3Bucket(s: SparkSession, d: String): DataFrame = {
-    graft.functions.ZValue.register(s)
     Tables.orders(s, d)
       .select(col("o_custkey").as("x"),
         datediff(col("o_orderdate").cast("date"),
           lit("1970-01-01").cast("date")).cast("long").as("y"),
         floor(col("o_totalprice") / lit(1000.0)).cast("long").as("w"))
-      .select(shiftright(call_function("z3_value", col("x"), col("y"), col("w")),
+      .select(shiftright(graft.functions.ZValue.z3Col(col("x"), col("y"), col("w")),
         Z3Shift).as("bucket"), col("x"), col("y"), col("w"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n"),
@@ -150,12 +148,11 @@ object Sharding {
     * hash-gated exactly.
     */
   def hilbertBucket(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HilbertValue.register(s)
     Tables.orders(s, d)
       .select(col("o_custkey").as("x"),
         datediff(col("o_orderdate").cast("date"),
           lit("1970-01-01").cast("date")).cast("long").as("y"))
-      .select(shiftright(call_function("hilbert_value", col("x"), col("y")), HShift)
+      .select(shiftright(graft.functions.HilbertValue.hilbertCol(col("x"), col("y")), HShift)
         .as("bucket"), col("x"), col("y"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n"),
@@ -186,13 +183,12 @@ object Sharding {
 
   def zorderEval(s: SparkSession, d: String): DataFrame = {
     import graft.core.Checkpoints.StableOps
-    graft.functions.ZValue.register(s)
     // checkpointed once: two independent global sorts consume it
     val b = Tables.orders(s, d)
       .select(col("o_orderkey").as("k"), col("o_custkey").as("x"),
         datediff(col("o_orderdate").cast("date"),
           lit("1970-01-01").cast("date")).cast("long").as("y"))
-      .withColumn("z", call_function("z_value", col("x"), col("y")))
+      .withColumn("z", graft.functions.ZValue.zCol(col("x"), col("y")))
       .stable
     val nF = b.agg(count(lit(1)).as("n_total"))
     def stats(layout: String, sort: Column*): DataFrame =

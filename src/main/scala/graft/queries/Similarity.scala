@@ -30,7 +30,6 @@ object Similarity {
 
   /** vec_id, v (double[]), nrm. */
   private def vecs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
     val v = col("embedding").cast("array<double>")
     Tables.embeddings(s, d)
       .select(col("vec_id"), v.as("v"))
@@ -124,7 +123,6 @@ object Similarity {
     * the float vectors are only read by the recall audit.
     */
   def annQuantized(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
     val all = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val rails = Embeddings.quantRailsOf(all)
@@ -256,20 +254,12 @@ object Similarity {
 
   // 4 LSH tables × 8 random hyperplanes (deterministic pseudo-random
   // components; fixed at plan build). 8 bits/table → 256 buckets/table.
-  // PUBLIC: GraftExtensions and the oracle SQL derive from these —
-  // one definition so a retune cannot leave the session-extension
-  // functions or the DuckDB mirrors on stale planes
+  // PUBLIC: HyperplaneSigs.annCol, GraftExtensions and the oracle SQL
+  // derive from these — one definition so a retune cannot leave the
+  // session-extension functions or the DuckDB mirrors on stale planes
   val AnnSeedBase = 0
   val NumTables = 4
   val PlanesPerTable = 8
-
-  /** Registers both hyperplane signature families (≡ GraftExtensions). */
-  def registerSigFunctions(s: SparkSession): Unit = {
-    graft.functions.HyperplaneSigs.register(
-      s, "hyperplane_sigs_ann", AnnSeedBase, NumTables, PlanesPerTable)
-    graft.functions.HyperplaneSigs.register(
-      s, "hyperplane_sigs_dedup", DedupSeedBase, DedupTables, DedupBits)
-  }
 
   /** Approximate top-5 via multi-table hyperplane LSH: queries and
     * corpus hash into (table, signature) buckets; only same-bucket
@@ -277,10 +267,9 @@ object Similarity {
     * SimilaritySpec; not SQL-oracle-able (plan-time hyperplanes).
     */
   def annLsh(s: SparkSession, d: String): DataFrame = {
-    registerSigFunctions(s)
     val all = vecs(s, d)
     val buckets = all.select(col("vec_id"), col("v"), col("nrm"),
-      posexplode(call_function("hyperplane_sigs_ann", col("v"))))
+      posexplode(graft.functions.HyperplaneSigs.annCol(col("v"))))
       .toDF("vec_id", "v", "nrm", "table_id", "sig")
     val q = buckets.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"),
@@ -313,10 +302,9 @@ object Similarity {
     * one unnest of the 9 masks.
     */
   def annLshMultiprobe(s: SparkSession, d: String): DataFrame = {
-    registerSigFunctions(s)
     val all = vecs(s, d)
     val buckets = all.select(col("vec_id"), col("v"), col("nrm"),
-      posexplode(call_function("hyperplane_sigs_ann", col("v"))))
+      posexplode(graft.functions.HyperplaneSigs.annCol(col("v"))))
       .toDF("vec_id", "v", "nrm", "table_id", "sig")
     val masks = 0 +: (0 until PlanesPerTable).map(1 << _)
     val probes = buckets.filter(col("vec_id") < 8)
@@ -521,8 +509,6 @@ object Similarity {
     * feed planted near-dup corpora here). Top-50 verified pairs.
     */
   def embeddingLshPairs(embeddings: DataFrame): DataFrame = {
-    graft.functions.DotProduct.register(embeddings.sparkSession)
-    registerSigFunctions(embeddings.sparkSession)
     val all = embeddings
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
@@ -532,7 +518,7 @@ object Similarity {
     // array is never null/empty).
     val buckets = all
       .select(col("vec_id"),
-        posexplode_outer(call_function("hyperplane_sigs_dedup", col("v"))))
+        posexplode_outer(graft.functions.HyperplaneSigs.dedupCol(col("v"))))
       .toDF("vec_id", "table_id", "sig")
     val cand = buckets
       .groupBy("table_id", "sig")
@@ -614,7 +600,6 @@ object Similarity {
     */
   def incrementalEmbeddingNew(batch: DataFrame, corpus: DataFrame,
       tau: Double, lshCandidates: Boolean): DataFrame = {
-    graft.functions.DotProduct.register(batch.sparkSession)
     def prep(df: DataFrame, idc: String, vc: String, nc: String): DataFrame = df
       .select(col("vec_id").as(idc), col("embedding").cast("array<double>").as(vc))
       .withColumn(nc, sqrt(dot(col(vc), col(vc))))
@@ -624,10 +609,9 @@ object Similarity {
     val pairs =
       if (!lshCandidates) b.join(c, col("vec_id").isNotNull)
       else {
-        registerSigFunctions(batch.sparkSession)
         def bandsOf(df: DataFrame, idc: String, vc: String): DataFrame = df
           .select(col(idc),
-            posexplode_outer(call_function("hyperplane_sigs_dedup", col(vc))))
+            posexplode_outer(graft.functions.HyperplaneSigs.dedupCol(col(vc))))
           .toDF(idc, "table_id", "sig")
         bandsOf(b, "vec_id", "vb").join(bandsOf(c, "cid", "vc"), Seq("table_id", "sig"))
           .select("vec_id", "cid").distinct()
@@ -675,7 +659,6 @@ object Similarity {
     * corpus size (one cheap count job — at 100 TB pass it explicitly).
     */
   def semDedupOn(embeddings: DataFrame, tau: Double, nCells: Int = 0): DataFrame = {
-    graft.functions.DotProduct.register(embeddings.sparkSession)
     val all = embeddings
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))

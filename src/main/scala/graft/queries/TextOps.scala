@@ -733,7 +733,6 @@ object TextOps {
     * normalization, making the oracle exact.
     */
   def textNormalize(s: SparkSession, d: String): DataFrame = {
-    graft.functions.NfcNormalize.register(s)
     Tables.documents(s, d)
       .select(col("doc_id"),
         lower(graft.functions.NfcNormalize.nfcCol(col("text"))).as("norm_text"),

@@ -29,7 +29,7 @@ import graft.core.Tables
 object Winnow {
 
   private val K = 3  // k-gram size (shared with the dedup_ngram family)
-  private val W = 4  // winnowing window: guarantee t = W + K - 1 = 6 tokens
+  private[graft] val W = 4  // winnowing window: guarantee t = W + K - 1 = 6 tokens
   private val DfCap = 128   // hot-fingerprint guard (dedup_ngram's cap)
   private val MinCommon = 3 // pair emission floor
 
@@ -127,7 +127,6 @@ object Winnow {
     * identical oracle SQL).
     */
   def fingerprintWinnowNative(s: SparkSession, d: String): DataFrame = {
-    graft.functions.WinnowSelect.register(s, W)
     val w = toks(col("text"))
     Tables.documents(s, d)
       .select(col("doc_id"), w.as("w"))
@@ -138,7 +137,7 @@ object Winnow {
           element_at(col("w"), i), element_at(col("w"), i + 1),
           element_at(col("w"), i + 2))), 1, 12), 16, 10).cast("long")).as("hs"))
       .select(col("doc_id"), col("hs"),
-        explode(expr("winnow_select(hs)")).as("pos"))
+        explode(graft.functions.WinnowSelect.selectCol(col("hs"))).as("pos"))
       .select(col("doc_id"), col("pos"),
         element_at(col("hs"), col("pos").cast("int")).as("fp"))
   }

@@ -107,24 +107,21 @@ object StreamingOps {
     */
   def nearDupMatchesStream(docStream: DataFrame, corpus: DataFrame,
       tau: Double): DataFrame = {
-    val s = corpus.sparkSession
-    graft.functions.WordShingles.register(s)
-    graft.functions.MinHashBuckets.register(s)
     // shingle once per document on both sides: the emptiness filter sits
     // above a one-element explode_outer, so it cannot be pushed below the
     // projection as a second word_shingles (see Dedup.nonEmptyShingles)
     val corpusSh = graft.queries.Dedup.nonEmptyShingles(corpus)
       .withColumnRenamed("doc_id", "dup_of")
     val corpusBands = corpusSh
-      .select(col("dup_of"), posexplode_outer(expr("minhash_buckets(sh)")))
+      .select(col("dup_of"), posexplode_outer(graft.functions.MinHashBuckets.bucketsCol(col("sh"))))
       .toDF("dup_of", "band", "bucket")
     docStream
       .withWatermark("tsm", "10 minutes")
       .select(col("doc_id"), col("tsm"),
-        explode_outer(array(expr("word_shingles(text)"))).as("sh"))
+        explode_outer(array(graft.queries.Dedup.textShingles)).as("sh"))
       .filter(size(col("sh")) > 0)
       .select(col("doc_id"), col("tsm"), col("sh").as("sa"),
-        posexplode_outer(expr("minhash_buckets(sh)")))
+        posexplode_outer(graft.functions.MinHashBuckets.bucketsCol(col("sh"))))
       .toDF("doc_id", "tsm", "sa", "band", "bucket")
       .join(corpusBands, Seq("band", "bucket"))
       .join(corpusSh.select(col("dup_of"), col("sh").as("sb")), "dup_of")
@@ -189,9 +186,6 @@ object StreamingOps {
     */
   def embeddingMatchesStream(vecStream: DataFrame, corpus: DataFrame,
       tau: Double): DataFrame = {
-    val s = corpus.sparkSession
-    graft.functions.DotProduct.register(s)
-    graft.queries.Similarity.registerSigFunctions(s)
     def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       graft.functions.DotProduct.dotCol(a, b)
     val cvec = corpus
@@ -199,7 +193,7 @@ object StreamingOps {
       .withColumn("nb", sqrt(dot(col("vb"), col("vb"))))
       .filter(col("nb") > 0)
     val cBuckets = cvec
-      .select(col("dup_of"), posexplode_outer(call_function("hyperplane_sigs_dedup", col("vb"))))
+      .select(col("dup_of"), posexplode_outer(graft.functions.HyperplaneSigs.dedupCol(col("vb"))))
       .toDF("dup_of", "table_id", "sig")
     vecStream
       .withWatermark("tsm", "10 minutes")
@@ -207,7 +201,7 @@ object StreamingOps {
       .withColumn("na", sqrt(dot(col("va"), col("va"))))
       .filter(col("na") > 0)
       .select(col("vec_id"), col("tsm"), col("va"), col("na"),
-        posexplode_outer(call_function("hyperplane_sigs_dedup", col("va"))))
+        posexplode_outer(graft.functions.HyperplaneSigs.dedupCol(col("va"))))
       .toDF("vec_id", "tsm", "va", "na", "table_id", "sig")
       .join(cBuckets, Seq("table_id", "sig"))
       .join(cvec, "dup_of")

@@ -16,7 +16,6 @@ class DedupSpec extends SparkSuite {
     .toDF("doc_id", "text")
 
   test("WordShingles expression matches declarative shingle chain") {
-    graft.functions.WordShingles.register(spark)
     val native = corpus
       .select(col("doc_id"), expr("word_shingles(text)").as("sh"))
       .select(col("doc_id"), array_sort(col("sh")).as("sh"))
@@ -30,8 +29,6 @@ class DedupSpec extends SparkSuite {
   }
 
   test("MinHashBuckets expression matches declarative minhash formulation") {
-    graft.functions.WordShingles.register(spark)
-    graft.functions.MinHashBuckets.register(spark)
     val sh = corpus.filter(col("doc_id") < 3)
       .select(col("doc_id"), expr("word_shingles(text)").as("sh"))
     val buckets = sh.select(col("doc_id"), expr("minhash_buckets(sh)").as("b"))
@@ -269,7 +266,6 @@ class DedupSpec extends SparkSuite {
       .collect().map(_.getLong(0)).toSet
     // ground truth: exact Jaccard over ALL cross pairs (cross join is
     // fine at sf0.001), near-dup iff jac >= 0.6
-    graft.functions.WordShingles.register(spark)
     val bs = batch.select(col("doc_id"), expr("word_shingles(text)").as("sa"))
       .filter(size(col("sa")) > 0)
     val cs = corp.select(col("doc_id").as("cid"), expr("word_shingles(text)").as("sb"))
@@ -288,7 +284,6 @@ class DedupSpec extends SparkSuite {
   }
 
   test("similarityJoin = exhaustive cross-Jaccard at tau (exact, planted + sf0.001)") {
-    graft.functions.WordShingles.register(spark)
     def groundTruth(docs: org.apache.spark.sql.DataFrame, tau: Double): Set[(Long, Long)] = {
       val sh = docs.select(col("doc_id"), expr("word_shingles(text)").as("sh"))
         .filter(size(col("sh")) > 0)
@@ -431,7 +426,6 @@ class DedupSpec extends SparkSuite {
   }
 
   test("dedup_bucket_stats invariants: every band hashes every doc once") {
-    graft.functions.WordShingles.register(spark)
     val nDocs = graft.core.Tables.documents(spark, sfDir)
       .filter(org.apache.spark.sql.functions
         .expr("size(word_shingles(text)) > 0"))
@@ -530,8 +524,6 @@ class DedupSpec extends SparkSuite {
     */
   private def joinBothSidesScored(docs: org.apache.spark.sql.DataFrame,
       minJac: Double): org.apache.spark.sql.DataFrame = {
-    graft.functions.WordShingles.register(spark)
-    graft.functions.MinHashBuckets.register(spark)
     val sh = docs.select(col("doc_id"), expr("word_shingles(text)").as("sh"))
       .filter(size(col("sh")) > 0)
     val cand = Dedup.minhashCandidateSizes(sh)
@@ -580,8 +572,6 @@ class DedupSpec extends SparkSuite {
     val longIds = withText.select("doc_id").as[Long].collect().toSet
     assert(longIds.size == groups * 3 + 60)
     // empty shingle sets get no band buckets at all
-    graft.functions.WordShingles.register(spark)
-    graft.functions.MinHashBuckets.register(spark)
     val shAll = docs.select(col("doc_id"), expr("word_shingles(text)").as("sh"))
     val emptyBuckets = shAll.filter(size(col("sh")) === 0)
       .select(size(expr("minhash_buckets(sh)"))).as[Int].collect()
@@ -607,7 +597,6 @@ class DedupSpec extends SparkSuite {
   }
 
   test("candidate-only verify ≡ the join-both-sides formulation (sf0.001 + planted)") {
-    graft.functions.WordShingles.register(spark)
     val sf = graft.core.Tables.documents(spark, sfDir)
     Seq(sf -> "sf0.001", plantedCorpus(groups = 10, singles = 40, short = 20) -> "planted")
       .foreach { case (docs, name) =>
@@ -631,7 +620,6 @@ class DedupSpec extends SparkSuite {
 
   /** `word_shingles` of every row, as Scala sets keyed by doc id. */
   private def shingleSets(docs: org.apache.spark.sql.DataFrame): Map[Long, Set[String]] = {
-    graft.functions.WordShingles.register(spark)
     docs.select(col("doc_id"), expr("word_shingles(text)")).collect()
       .map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
   }
@@ -702,7 +690,6 @@ class DedupSpec extends SparkSuite {
   test("minhashScoredFromShingles, the pipelines' verify, fails on a repeated doc_id") {
     val a = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"
     val b = "one two three four five six seven eight nine ten eleven twelve thirteen"
-    graft.functions.WordShingles.register(spark)
     val shingled = Seq((1L, a), (1L, b), (2L, a), (3L, b)).toDF("doc_id", "text")
       .select(col("doc_id"), expr("word_shingles(text)").as("sh"))
     Seq(0.0, 0.6).foreach { minJac =>

@@ -66,14 +66,13 @@ class HilbertSpec extends SparkSuite {
 
   test("hilbert_value expression under codegen ≡ kernel; null propagates; masks high bits") {
     import spark.implicits._
-    HilbertValue.register(spark)
     val pts = Seq((3L, 5L), (65535L, 0L), (12345L, 54321L), (0L, 0L))
     val got = pts.toDF("x", "y")
-      .select(call_function("hilbert_value", col("x"), col("y")))
+      .select(HilbertValue.hilbertCol(col("x"), col("y")))
       .collect().map(_.getLong(0)).toSeq
     assert(got === pts.map { case (x, y) => HilbertValue.hilbert16(x, y) })
     val withNull = Seq((Some(3L), None: Option[Long])).toDF("x", "y")
-      .select(call_function("hilbert_value", col("x"), col("y"))).collect()
+      .select(HilbertValue.hilbertCol(col("x"), col("y"))).collect()
     assert(withNull(0).isNullAt(0))
     assert(HilbertValue.hilbert16(65536L + 7L, 9L) === HilbertValue.hilbert16(7L, 9L))
   }

@@ -187,16 +187,15 @@ class MapReduceJobSpec extends SparkSuite {
     assert(got === clean)
   }
 
-  test("speculation knob (F11 backup tasks, master.go:111-127) runs green") {
-    // The suite context is built with spark.speculation=true (the only
-    // scope Spark offers — scheduler conf, fixed at context start); the
-    // façade knob asserts that and the job result is unchanged.
-    val got = MapReduceJob.run(spark.createDataset(docs), wcMap, wcReduce,
-      speculation = true)
+  test("run under the suite's spark.speculation=true context (F11 backup tasks, master.go:111-127) runs green") {
+    // spark.speculation is a scheduler conf, fixed at context start —
+    // the only scope Spark offers; the job result is unchanged under it.
+    assert(spark.sparkContext.getConf.getBoolean("spark.speculation", defaultValue = false))
+    val got = MapReduceJob.run(spark.createDataset(docs), wcMap, wcReduce)
       .collect().map(kv => kv.key -> kv.value).toMap
     assert(got === naiveWc(docs))
     val gotCombined = MapReduceJob.run(spark.createDataset(docs), wcMap, wcSum,
-      speculation = true, combine = Some(wcSum))
+      combine = Some(wcSum))
       .collect().map(kv => kv.key -> kv.value).toMap
     assert(gotCombined === naiveWc(docs))
   }

@@ -133,7 +133,20 @@ class PlanLintSpec extends SparkSuite {
     // Neyman allocation: two 1-row scalar frames (Σw, shortfall)
     "sample_neyman")
 
+  /** The session's function registry: each name with the class of the
+    * expression it builds.
+    */
+  private def functionRegistry(): Map[String, String] = {
+    val r = spark.sessionState.functionRegistry
+    r.listFunction().map(f => f.unquotedString ->
+      r.lookupFunction(f).map(i => String.valueOf(i.getClassName)).getOrElse("")).toMap
+  }
+
+  /** The registry before [[frames]] builds every registered query. */
+  private lazy val registryBefore: Map[String, String] = functionRegistry()
+
   private lazy val frames: Map[String, Either[String, org.apache.spark.sql.DataFrame]] = {
+    registryBefore
     val s = spark
     SparkEntry.queries.map { case (name, fn) =>
       name -> (try Right(fn(s, sfDir))
@@ -150,6 +163,15 @@ class PlanLintSpec extends SparkSuite {
   test("every registered query plans without error") {
     val failed = plans.collect { case (n, p) if p.startsWith("PLAN_BUILD_FAILED") => n }
     assert(failed.isEmpty, s"plan build failed for: $failed")
+  }
+
+  test("building every registered query writes nothing to the session's function registry") {
+    frames
+    val after = functionRegistry()
+    val changed = (registryBefore.keySet ++ after.keySet).toSeq.sorted
+      .filter(n => registryBefore.get(n) != after.get(n))
+      .map(n => s"$n: ${registryBefore.get(n)} -> ${after.get(n)}")
+    assert(changed.isEmpty, s"the walk rewrote registry entries:\n${changed.mkString("\n")}")
   }
 
   test("no physical plan exceeds the bloat threshold (r14 verdict #10)") {

@@ -264,7 +264,6 @@ class SimilaritySpec extends SparkSuite {
   test("decontaminateEmbedding flags planted eval-near vectors and nothing else") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.DotProduct.register(spark)
     // eval vector e0 = e1-axis; corpus: id 10 is a near-copy (cos ~0.995),
     // id 11 moderately close (cos ~0.707), id 12 orthogonal
     val rows: Seq[(Long, Seq[Double])] = Seq(

@@ -625,8 +625,6 @@ class StreamingSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), new Timestamp(1000L), r.getSeq[Double](1))).toSeq
     val tau = 0.95
     // batch expectation: same bucket-join + verify, computed directly
-    graft.queries.Similarity.registerSigFunctions(spark)
-    graft.functions.DotProduct.register(spark)
     def prep(df: org.apache.spark.sql.DataFrame, idc: String) = df
       .select(col("vec_id").as(idc), col("embedding").cast("array<double>").as(s"v_$idc"))
       .withColumn(s"n_$idc", sqrt(graft.functions.DotProduct.dotCol(col(s"v_$idc"), col(s"v_$idc"))))

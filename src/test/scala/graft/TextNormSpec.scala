@@ -19,15 +19,14 @@ class TextNormSpec extends SparkSuite {
   private val composed = "Caf\u00e9"    // precomposed e-acute
 
   test("NFC composes decomposed sequences; NFC-invariant text unchanged") {
-    NfcNormalize.register(spark)
     val df = Seq(decomposed, composed, "plain ascii", "ﬁligature").toDF("text")
-    val got = df.select(expr("nfc_normalize(text)")).as[String].collect()
+    val got = df.select(NfcNormalize.nfcCol(col("text"))).as[String].collect()
     assert(got(0) === composed)
     assert(got(1) === composed)
     assert(got(2) === "plain ascii")
     assert(got(3) === "ﬁligature") // NFC (unlike NFKC) keeps compatibility chars
     val n = Seq[Option[String]](None).toDF("text")
-      .select(expr("nfc_normalize(text)")).collect()
+      .select(NfcNormalize.nfcCol(col("text"))).collect()
     assert(n(0).isNullAt(0))
   }
 
@@ -39,7 +38,7 @@ class TextNormSpec extends SparkSuite {
     // the DataFrame run above exercised the generated-code path; check
     // they agree on the same value
     val viaDf = Seq(decomposed).toDF("text")
-      .select(expr("nfc_normalize(text)")).as[String].head()
+      .select(NfcNormalize.nfcCol(col("text"))).as[String].head()
     assert(viaDf === e.eval(null).toString)
   }
 

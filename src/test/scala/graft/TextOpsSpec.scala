@@ -18,7 +18,6 @@ class TextOpsSpec extends SparkSuite {
       (2L, "alpha   beta...gamma"), // same tokens, junk separators
       (3L, "gamma beta alpha")) // reordered
       .toDF("doc_id", "text")
-    graft.functions.WordShingles.register(spark)
     val ws = Dedup.tokensCol(col("text"))
     val tokVal = (w: org.apache.spark.sql.Column) =>
       ascii(w) * 31 + ascii(substring(w, -1, 1)) + length(w)

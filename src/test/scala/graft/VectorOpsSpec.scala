@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.functions.DotProduct
-import graft.queries.Similarity
 
 /** Native codegen DotProduct vs the declarative zip_with/aggregate
   * twin: bit-identical results (same sequential summation order), and
@@ -12,7 +10,6 @@ import graft.queries.Similarity
 class VectorOpsSpec extends SparkSuite {
 
   test("vec_dot bit-identical to the lambda formulation over real embeddings") {
-    DotProduct.register(spark)
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .limit(200)
@@ -25,7 +22,6 @@ class VectorOpsSpec extends SparkSuite {
   }
 
   test("vec_dot null semantics match the lambda twin on malformed vectors") {
-    DotProduct.register(spark)
     // NULL input, length mismatch, and a null element all yield NULL —
     // exactly what aggregate(zip_with(...)) produces (zip_with pads the
     // shorter side with nulls; null * x = null; null + x = null).
@@ -50,7 +46,6 @@ class VectorOpsSpec extends SparkSuite {
   }
 
   test("vec_dot runs inside WholeStageCodegen (not fallback)") {
-    DotProduct.register(spark)
     val e = Tables.embeddings(spark, sfDir)
       .select(col("embedding").cast("array<double>").as("v"))
       .select(call_function("vec_dot", col("v"), col("v")).as("d"))
@@ -63,8 +58,6 @@ class VectorOpsSpec extends SparkSuite {
   }
 
   test("hyperplane_sigs bit-identical to the declarative when-chain twins (both families)") {
-    Similarity.registerSigFunctions(spark)
-    DotProduct.register(spark)
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .limit(200)

@@ -36,7 +36,6 @@ class ZorderSpec extends SparkSuite {
 
   test("z_value expression under codegen ≡ reference; null propagates") {
     import spark.implicits._
-    ZValue.register(spark)
     val df = Seq((3L, 5L), (1048575L, 0L), (7L, 1L << 20)).toDF("x", "y")
     val got = df.select(call_function("z_value", col("x"), col("y")))
       .collect().map(_.getLong(0)).toSeq

@@ -9,8 +9,6 @@ object ProbePrune {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.1")
-    graft.functions.WordShingles.register(spark)
-    graft.functions.MinHashBuckets.register(spark)
     val d = docs.select(col("doc_id"), expr("word_shingles(text)").as("sh")).filter(size(col("sh")) > 0)
     val bands = d.select(col("doc_id"), size(col("sh")).as("n"), posexplode_outer(expr("minhash_buckets(sh)")))
       .toDF("doc_id", "n", "band", "bucket")

@@ -19,7 +19,6 @@ object ProfileSim {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.WordShingles.register(spark)
     def time[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
       println(f"[prof] $label ${(System.nanoTime() - t0) / 1e9}%.3f s"); r

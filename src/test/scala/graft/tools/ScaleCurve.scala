@@ -52,8 +52,6 @@ object ScaleCurve {
       val docs = documents
         .select(col("doc_id"), expr("word_shingles(text)").as("sh"))
         .filter(size(col("sh")) > 0)
-      graft.functions.WordShingles.register(spark)
-      graft.functions.MinHashBuckets.register(spark, Dedup.NumHashes, Dedup.Bands)
       val nDocs = docs.count()
       val cand = Dedup.minhashCandidateSizes(docs)
       val nCand = cand.count()
