@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import graft.core.Tables
 import graft.core.Checkpoints.StableOps
 import graft.functions.{MinHashBuckets, WordShingles}
@@ -9,8 +10,13 @@ import graft.functions.{MinHashBuckets, WordShingles}
 /** Deduplication operators for large-scale training-data pipelines
   * ([EXT], no reference citation by definition — SURVEY.md §0): exact
   * (hash-groupBy), n-gram Jaccard (shingle join), MinHash+LSH banding,
-  * SimHash. All are pure DataFrame plans (codegen'd array lambdas — no
-  * Scala UDFs in the hot path).
+  * SimHash. All are DataFrame plans over native expressions and
+  * codegen'd array lambdas, with no Scala UDFs, except one typed scan:
+  * [[minhashCandidateSizes]] groups LSH buckets by sorting each
+  * partition on the bucket key and pairing the documents of each run
+  * of equal keys (`mapPartitions`). Nearly every bucket holds one
+  * document, and that scan passes it with one comparison where a
+  * collect_list aggregate would build and serialize a buffer for it.
   *
   * Scale design: exact dedup and MinHash are the 100 TB paths — both
   * are linear in corpus size (hash-shuffle on digest / band bucket).
@@ -140,10 +146,10 @@ object Dedup {
       .select(col("doc_id"), size(col("sh")).as("nsh"), explode_outer(col("sh")).as("shingle"))
       .filter(col("shingle").isNotNull)
     // Group docs per shingle and expand in-bucket pairs with array
-    // lambdas (the minhashScored trick): the corpus is shingled and
-    // shuffled exactly ONCE (vs the self-join's two exploded-corpus
-    // shuffles plus two pair-stream shuffles for the sizes joins), and
-    // 1-doc shingles are dropped before producing any pair rows.
+    // lambdas: the corpus is shingled and shuffled exactly ONCE (vs the
+    // self-join's two exploded-corpus shuffles plus two pair-stream
+    // shuffles for the sizes joins), and 1-doc shingles are dropped
+    // before producing any pair rows.
     // Shingle sets are per-doc distinct, so count(*) per pair =
     // |common shingles| exactly as the self-join computed it. na/nb are
     // functionally dependent on doc_a/doc_b, so grouping by all four
@@ -599,17 +605,18 @@ object Dedup {
 
   /** Distinct in-bucket candidate pairs `(doc_a, doc_b, nmin, nmax)`
     * from the LSH band buckets — the pre-verification pair stream every
-    * minhash consumer refines. Input: `(doc_id, sh)`; documents with an
-    * empty shingle set get no bucket and never pair. Public as the
+    * minhash consumer refines. Input: `(doc_id, sh)` with an integral
+    * `doc_id`; documents with an empty shingle set get no bucket and
+    * never pair. A doc_id that repeats in the input pairs with itself,
+    * so the verify's repeated-id guard sees it. Public as the
     * scale-curve diagnostic surface (the candidate count is the number
     * that must scale linearly with the corpus for the 100 TB claim to
     * hold — tools/ScaleCurve records it across a 10× step).
     */
   def minhashCandidateSizes(docs: DataFrame): DataFrame = {
-    // Candidate pairs WITHOUT a self-join on the signature subtree:
-    // group doc_ids per (band, bucket) and expand in-bucket pairs with
-    // array lambdas — the shingle+signature chain is evaluated exactly
-    // once per document, and only buckets with >1 doc produce work.
+    val idType = docs.schema("doc_id").dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"minhash candidates need an integral doc_id, not $idType")
     // posexplode_OUTER: a plain posexplode makes InferFiltersFromGenerate
     // push `isnotnull(bks) AND size(bks)>0` through the projection into
     // the scan, re-evaluating the whole shingle+signature chain per row.
@@ -617,32 +624,85 @@ object Dedup {
     // buckets) yields one null placeholder row, dropped by a filter that
     // sits on the generator's output, so nothing is pushed into the scan.
     val bands = docs
-      .select(col("doc_id"), size(col("sh")).as("n"), MinHashBuckets.bucketsCol(col("sh")).as("bks"))
+      .select(col("doc_id").cast("long").as("doc_id"), size(col("sh")).as("n"),
+        MinHashBuckets.bucketsCol(col("sh")).as("bks"))
       .select(col("doc_id"), col("n"), posexplode_outer(col("bks")))
       .toDF("doc_id", "n", "band", "bucket")
       .filter(col("bucket").isNotNull)
-    // Two-stage expansion (posexplode bucket, explode tail slice), same
-    // as ngramScored: per-row memory stays O(k) for a k-doc bucket
-    // instead of the O(k^2) array a single flatten-explode builds. Hot
-    // buckets here = exact-duplicate mega-groups: k identical docs share
+    // The MapReduce grouping (partition by key, sort, scan adjacent
+    // keys): one exchange on (band, bucket), then a sort of each
+    // partition on one packed long key (band < 16, bucket < 2^31), which
+    // sorts on its prefix alone (radix sort). Each run of equal keys is
+    // one bucket; the scan buffers that run's (doc_id, n) and no other,
+    // so the ~all single-document buckets cost one comparison each,
+    // where a collect_list aggregate would build a buffer per bucket.
+    // Hot buckets are exact-duplicate groups: k identical docs share
     // all 16 bands, so they still expand to 16·k(k−1)/2 pair rows before
     // the distinct — and Cluster.dedupKeepMinhash runs no exact-dedup
     // pass first. ROADMAP item 5 tracks collapsing exact copies before
-    // banding; the two-stage expansion only bounds per-row memory.
+    // banding; the scan only bounds memory to one run's ids.
+    val key = shiftleft(col("band").cast("long"), 31).bitwiseOR(col("bucket"))
+    val long = Encoders.scalaLong
+    val int = Encoders.scalaInt
     bands
-      .groupBy("band", "bucket")
-      .agg(collect_list(struct(col("doc_id"), col("n"))).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .select(col("ids"), posexplode(col("ids")).as(Seq("i", "a")))
-      .select(explode(transform(slice(col("ids"), col("i") + 2, size(col("ids"))),
-        b => struct(
-          least(col("a.doc_id"), b.getField("doc_id")).as("doc_a"),
-          greatest(col("a.doc_id"), b.getField("doc_id")).as("doc_b"),
-          least(col("a.n"), b.getField("n")).as("nmin"),
-          greatest(col("a.n"), b.getField("n")).as("nmax")))).as("p"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"),
-        col("p.nmin").as("nmin"), col("p.nmax").as("nmax"))
+      .repartition(col("band"), col("bucket"))
+      .sortWithinPartitions(key)
+      .select(key, col("doc_id"), col("n"))
+      .as(Encoders.tuple(long, long, int))
+      .mapPartitions(rows => new RunPairs(rows))(Encoders.tuple(long, long, int, int))
+      .select(col("_1").cast(idType).as("doc_a"), col("_2").cast(idType).as("doc_b"),
+        col("_3").as("nmin"), col("_4").as("nmax"))
       .distinct()
+  }
+
+  /** The in-bucket pairs of one partition of `(key, doc_id, n)` rows
+    * sorted by key: for each run of equal keys, every pair i < j of
+    * the run as (least id, greatest id, least n, greatest n). Only the
+    * current run is buffered, and its pairs are produced on demand.
+    */
+  private final class RunPairs(rows: Iterator[(Long, Long, Int)])
+      extends Iterator[(Long, Long, Int, Int)] {
+    private var head = if (rows.hasNext) rows.next() else null
+    private var ids = new Array[Long](16)
+    private var ns = new Array[Int](16)
+    private var k = 0 // rows in the current run
+    private var i = 0 // next pair: (i, j), i < j < k
+    private var j = 1
+
+    /** Loads the next run of at least two rows; false when none is left. */
+    private def nextRun(): Boolean = {
+      k = 0
+      while (k < 2 && head != null) {
+        k = 0
+        val key = head._1
+        while (head != null && head._1 == key) {
+          if (k == ids.length) {
+            ids = java.util.Arrays.copyOf(ids, 2 * k)
+            ns = java.util.Arrays.copyOf(ns, 2 * k)
+          }
+          ids(k) = head._2
+          ns(k) = head._3
+          k += 1
+          head = if (rows.hasNext) rows.next() else null
+        }
+      }
+      i = 0
+      j = 1
+      k >= 2
+    }
+
+    override def hasNext: Boolean = j < k || nextRun()
+
+    override def next(): (Long, Long, Int, Int) = {
+      if (!hasNext) throw new NoSuchElementException("no more bucket pairs")
+      val a = ids(i)
+      val b = ids(j)
+      val na = ns(i)
+      val nb = ns(j)
+      j += 1
+      if (j == k) { i += 1; j = i + 1 }
+      (math.min(a, b), math.max(a, b), math.min(na, nb), math.max(na, nb))
+    }
   }
 
   /** LSH QUALITY AUDIT ([EXT] — "measure, don't guess"): one row
@@ -1084,12 +1144,13 @@ object Dedup {
         shiftright(col("simhash"), c * 16).bitwiseAND(lit(0xFFFFL))): _*)))
       .toDF("doc_id", "simhash", "chunk", "ckey")
     // Candidate pairs via group-by-(chunk,ckey) + two-stage O(k)
-    // expansion — the same transform ngramScored/minhashScored got in
-    // rounds 4-5. The exploded chunk stream shuffles exactly ONCE (the
-    // old self-join shuffled it twice and materialized O(k²) join
-    // output per hot bucket); the simhash rides along in the bucket
-    // structs, so the verdict needs no join back to the docs at all —
-    // the whole operator is one shuffle plus the final top-50 sort.
+    // expansion, as in ngramScored (minhashCandidateSizes groups its
+    // buckets by a sorted run scan instead). The exploded chunk stream
+    // shuffles exactly ONCE (the old self-join shuffled it twice and
+    // materialized O(k²) join output per hot bucket); the simhash rides
+    // along in the bucket structs, so the verdict needs no join back to
+    // the docs at all — the whole operator is one shuffle plus the final
+    // top-50 sort.
     val cand = chunks
       .groupBy("chunk", "ckey")
       .agg(collect_list(struct(col("doc_id"), col("simhash"))).as("ids"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{ModelCache, Tables}
+import graft.core.Tables
 import graft.core.Checkpoints.StableOps
 
 /** Tokenizer-training operators ([EXT]): the distributed half of BPE
